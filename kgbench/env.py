@@ -13,6 +13,13 @@ import time
 from typing import Optional
 
 SLOTS_MAX = 4
+# one sample of the process tree takes a few milliseconds; sampling often
+# catches short peaks (an Arrow batch in a worker) on every run
+RSS_INTERVAL_S = 0.1
+# the driver heap's cap, committed as the heap grows (not up front), so heap
+# growth up to the cap shows in peak_rss_mb; the program's own default (8g)
+# lets G1 grow the heap to 2-3 GB on some runs and not on others, which makes
+# the peak a matter of GC timing rather than of the work
 DRIVER_MEMORY = "1g"
 
 
@@ -43,11 +50,7 @@ def start_spark(work: str, ui: bool):
     tmp = os.path.join(work, "tmp")
     conf = {
         "spark.local.dir": os.path.join(work, "spark-local"),
-        # the heap is committed and touched up front, so the JVM's share of
-        # the process tree's RSS does not depend on when it grew
-        "spark.driver.extraJavaOptions": (
-            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch"
-        ),
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.ui.showConsoleProgress": "false",
         "spark.ui.enabled": "true" if ui else "false",
@@ -121,6 +124,11 @@ def _tree_rss_kb(root_pid: int) -> int:
                 grew = True
     total = 0
     for pid in keep:
+        # The JVM starts helpers (chmod, rm) with vfork: until the child
+        # execs, it shares the JVM's address space, and counting its PSS
+        # would count the whole JVM a second time.
+        if pid != root_pid and _is_java(pid) and _is_java(parent[pid]):
+            continue
         try:
             total += _pss_kb(pid)
         except OSError:  # the process ended meanwhile
@@ -128,14 +136,18 @@ def _tree_rss_kb(root_pid: int) -> int:
     return total
 
 
+def _is_java(pid: int) -> bool:
+    try:
+        return os.path.basename(os.readlink(f"/proc/{pid}/exe")) == "java"
+    except OSError:
+        return False
+
+
 class RssSampler:
     """Background thread sampling the process tree's resident memory; the
-    peak is the maximum seen between :meth:`start` and :meth:`stop`. One
-    sample reads the JVM's page-table summary (tens of milliseconds), so
-    sampling stays sparse to keep it off the measured work."""
+    peak is the maximum seen between :meth:`start` and :meth:`stop`."""
 
-    def __init__(self, interval: float = 1.0):
-        self.interval = interval
+    def __init__(self):
         self.peak_kb = 0
         self._stop = threading.Event()
         self._thread: Optional[threading.Thread] = None
@@ -144,7 +156,7 @@ class RssSampler:
         pid = os.getpid()
         while not self._stop.is_set():
             self.peak_kb = max(self.peak_kb, _tree_rss_kb(pid))
-            self._stop.wait(self.interval)
+            self._stop.wait(RSS_INTERVAL_S)
 
     def start(self) -> None:
         self.peak_kb = _tree_rss_kb(os.getpid())

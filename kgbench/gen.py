@@ -36,6 +36,9 @@ COMMENT_WORDS = (
     "early when the batch is empty or the key was seen before"
 ).split()
 
+GIANT_LINES = 600  # length of code_repos' giant-file tail
+LINK_LINES = 6  # lines per link_repos file
+
 _SYLLABLES = (
     "ab ac ad al am an ar as at ba be bo ca ce co da de di do el em en er "
     "fa fe fi ga ge go ha he hi ka ke ki la le li lo ma me mi mo na ne ni "
@@ -91,14 +94,14 @@ def _file(rng, n_lines, vars_, funcs, objs) -> str:
     return "\n".join(lines[:n_lines]) + "\n"
 
 
-def _line_counts(rng, n_files: int, mean_lines: int, giant_frac: float, giant_lines: int) -> List[int]:
+def _line_counts(rng, n_files: int, mean_lines: int, giant_frac: float) -> List[int]:
     """Lines per file: exactly ``round(n_files * giant_frac)`` giant files at
     seeded places, the rest Gaussian around ``mean_lines`` and then nudged
     to a total of ``mean_lines`` each, so the table's size, and with it the
     work a run does, is the same for every seed."""
     giants = set(rng.sample(range(n_files), round(n_files * giant_frac)))
     body = [i for i in range(n_files) if i not in giants]
-    counts = [giant_lines] * n_files
+    counts = [GIANT_LINES] * n_files
     for i in body:
         counts[i] = max(4, int(rng.gauss(mean_lines, mean_lines / 3)))
     excess = sum(counts[i] for i in body) - mean_lines * len(body)
@@ -117,14 +120,13 @@ def code_repos(
     n_repos: int = 40,
     mean_lines: int = 30,
     giant_frac: float = 0.01,
-    giant_lines: int = 600,
 ) -> List[Row]:
     """Zipf-sized repos of Python-like files over a small vocabulary; a
-    ``giant_frac`` tail of files is ``giant_lines`` long."""
+    ``giant_frac`` tail of files is ``GIANT_LINES`` long."""
     rng = random.Random(f"code/{seed}")
     repos = [f"org{i % 7}/repo{i:03d}" for i in range(n_repos)]
     weights = _zipf_weights(n_repos, 1.1)
-    counts = _line_counts(rng, n_files, mean_lines, giant_frac, giant_lines)
+    counts = _line_counts(rng, n_files, mean_lines, giant_frac)
     rows = []
     for i, n_lines in enumerate(counts):
         repo = rng.choices(repos, weights)[0]
@@ -164,7 +166,7 @@ def link_vocabulary(seed: int, n_stems: int) -> List[str]:
     return vocab
 
 
-def link_repos(seed: int, n_files: int, n_stems: int, lines: int = 6) -> List[Row]:
+def link_repos(seed: int, n_files: int, n_stems: int) -> List[Row]:
     """Short files whose calls and assignments draw identifiers from a large
     near-duplicate vocabulary."""
     rng = random.Random(f"link/{seed}")
@@ -173,7 +175,7 @@ def link_repos(seed: int, n_files: int, n_stems: int, lines: int = 6) -> List[Ro
     rows = []
     for i in range(n_files):
         body = [f"def {rng.choice(funcs)}_{i}({rng.choice(vocab)}):"]
-        while len(body) < lines:
+        while len(body) < LINK_LINES:
             v, a, b = rng.choice(vocab), rng.choice(vocab), rng.choice(vocab)
             if rng.random() < 0.7:
                 body.append(f"    {v} = {rng.choice(funcs)}({a}, {b})")

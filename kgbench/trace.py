@@ -77,9 +77,8 @@ class Tracer:
     def named(self, name: str) -> List[dict]:
         return [s for s in self.spans if s["name"] == name]
 
-    def total(self, name: str, self_only: bool = False) -> float:
-        f = self.self_time if self_only else self.wall
-        return sum(f(s) for s in self.named(name))
+    def total(self, name: str) -> float:
+        return sum(self.wall(s) for s in self.named(name))
 
     def subtree_groups(self, rec: dict) -> List[str]:
         ids = {rec["id"]}
