@@ -362,10 +362,13 @@ class TermIndex:
             n_doc_buckets = max(8, min(65536, n_rows // 5000 or 8))
         # gen = write generation (Lucene's sequence number): lets a delete
         # tombstone doc versions written BEFORE it without hiding a later
-        # re-add of the same doc_id (see delete_documents/live_sentences)
+        # re-add of the same doc_id (see delete_documents/live_sentences).
+        # A fresh index starts at 0; compact() passes rows already stamped
+        # with the generation they are rewritten at
+        gen = F.col("gen") if "gen" in sentences.columns else F.lit(0)
         with_bucket = sentences.withColumn(
             "doc_bucket", _bucket(F.col("doc_id"), n_doc_buckets)
-        ).withColumn("gen", F.lit(0).cast("long"))
+        ).withColumn("gen", gen.cast("long"))
         # repartition on the bucket first: partitionBy alone writes one file
         # per (task × bucket) — tasks × n_doc_buckets kilobyte files
         (
@@ -599,7 +602,11 @@ class TermIndex:
         tomb = self._tombstones()
         if tomb is None and "positions" in self.postings.columns:
             return
-        live = self.live_sentences()
+        # the rebuilt rows are stamped with the current generation, which is
+        # at or above every tombstone cutoff: tombstones a crash leaves
+        # behind (they are removed only after the swaps) cannot hide them
+        gen = int(self.meta.get("next_gen", 1))
+        live = self.live_sentences().withColumn("gen", F.lit(gen).cast("long"))
         tmp = tempfile.mkdtemp(dir=os.path.dirname(self.path) or ".")
         rebuilt = TermIndex.build(
             live.drop("doc_bucket"),
@@ -608,6 +615,10 @@ class TermIndex:
             n_doc_buckets=self.n_doc_buckets,
             indexed_columns=self.indexed_columns,
         )
+        # advance the generation on disk before the first swap, so a delete
+        # issued after a crash in the swaps still hides the rebuilt rows
+        self.meta["next_gen"] = gen + 1
+        self._write_meta()
         for sub in ("sentences", "postings", "stats"):
             old = os.path.join(self.path, sub)
             new = os.path.join(rebuilt.path, sub)

@@ -1,98 +1,25 @@
-"""Connected components via iterative DataFrame algorithms.
+"""Connected components via an iterative DataFrame algorithm.
 
 Canonicalization stage: link-edges from LSH blocking partition surfaces into
 equivalence classes; each class takes min(node_id) as its canonical id.
 
-Two implementations:
+:func:`connected_components_star` — alternating large-star/small-star
+(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+converges in O(log n) rounds regardless of diameter, so a path-shaped
+component of length 10^6 still finishes. Each round is two self-aggregating
+shuffles on node id; exiting at ``max_iterations`` without convergence
+raises (silent non-convergence would split one entity class into several
+canonical ids).
 
-* :func:`connected_components` — symmetric min-label propagation
-  (``label(v) ← min(label(v), min over neighbors(label(u)))`` to fixpoint).
-  One hash-join + one aggregation per round, O(diameter) rounds. Right for
-  the shapes this stage actually sees (mention-surface dedup: components are
-  tiny, diameter rarely >3). Exiting at ``max_iterations`` with labels still
-  changing now RAISES by default (silent non-convergence would split one
-  entity class into several canonical ids).
-* :func:`connected_components_star` — alternating large-star/small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14):
-  converges in O(log n) rounds regardless of diameter, so a path-shaped
-  component of length 10^6 still finishes. The scale path for adversarial
-  graph shapes; each round is two self-aggregating shuffles on node id.
-
-Both truncate lineage per round via localCheckpoint so the plan doesn't grow
-unboundedly; at 10^12-file scale the same loops run with checkpointing to
+Lineage is truncated per round via localCheckpoint so the plan doesn't grow
+unboundedly; at 10^12-file scale the same loop runs with checkpointing to
 durable storage instead.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 20,
-    on_nonconvergence: str = "raise",
-) -> DataFrame:
-    """Returns (id, component) where component = min id in the class.
-
-    ``on_nonconvergence``: behavior when labels are still changing after
-    ``max_iterations`` — ``"raise"`` (default; wrong labels must not silently
-    flow into canonicalization), ``"warn"``, or ``"ignore"``. Propagation
-    needs O(diameter) rounds; for high-diameter graphs use
-    :func:`connected_components_star` instead.
-    """
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .distinct()
-    )
-    sym = sym.localCheckpoint(eager=True)
-    labels = vertices.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
-    labels = labels.localCheckpoint(eager=True)
-    changed = 0
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_comp = F.least(
-            F.col("component"), F.coalesce("nbr_component", F.col("component"))
-        )
-        new_labels = labels.join(
-            neighbor_min, labels["id"] == neighbor_min["src"], "left"
-        ).select(
-            "id",
-            new_comp.alias("component"),
-            # convergence flag computed inside the same row pass: the count
-            # below both materializes the (lazy) checkpoint and answers
-            # "did anything change" — ONE Spark job per round, not a
-            # checkpoint job plus a join-the-old-labels job
-            (new_comp != F.col("component")).alias("_changed"),
-        )
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    if changed != 0:
-        msg = (
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations (component diameter exceeds the budget); labels are "
-            f"INCOMPLETE — raise max_iterations or use connected_components_star"
-        )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        if on_nonconvergence == "warn":
-            warnings.warn(msg, RuntimeWarning)
-    return labels
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -148,9 +75,9 @@ def connected_components_star(
     converged = False
     for _ in range(max_iterations):
         e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        diff = (
-            e2.exceptAll(e).limit(1).count() + e.exceptAll(e2).limit(1).count()
-        )
+        # one action per round: both directions of the set difference in a
+        # single job instead of two counts
+        diff = e2.exceptAll(e).union(e.exceptAll(e2)).limit(1).count()
         e = e2
         if diff == 0:
             converged = True

@@ -22,7 +22,7 @@ surfaces (e.g. empty strings) is capped via ``max_bucket_size``.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, List, Sequence, Tuple
+from typing import Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -33,7 +33,6 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -193,32 +192,24 @@ def batch_signatures(texts, n_hashes: int, k: int, a, b) -> List[List[int]]:
 
 
 def add_minhash(
-    df: DataFrame,
-    text_col: str,
-    n_hashes: int = 16,
-    k: int = 3,
-    seed: int = 42,
-    out_col: str = "minhash",
-    project_out: "Sequence[str] | None" = None,
+    df: DataFrame, id_col: str, text_col: str, n_hashes: int, k: int, seed: int
 ) -> DataFrame:
-    """``project_out`` — optional subset of input columns to carry through
-    the Python stage alongside the signature. Column pruning cannot see
-    through mapInPandas, so callers that only need (id, signature) should
-    not pay Arrow serialization to ship the text column back out."""
+    """(id, minhash) per row of ``df``. Only the id crosses back out of the
+    Python stage: column pruning cannot see through mapInPandas, so
+    shipping the text column back would be pure Arrow serialization."""
     from ..pipeline.extract import _fan_out
 
     df = _fan_out(df)  # signature stage is CPU-bound; small inputs often
     # arrive as one split and would otherwise run single-task
     a, b = _hash_params(n_hashes, seed)
-    keep = list(df.columns) if project_out is None else list(project_out)
     out_schema = StructType(
-        [df.schema[c] for c in keep] + [StructField(out_col, ArrayType(LongType()))]
+        [df.schema[id_col], StructField("minhash", ArrayType(LongType()))]
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = pdf[keep].copy()
-            out[out_col] = batch_signatures(list(pdf[text_col]), n_hashes, k, a, b)
+            out = pdf[[id_col]].copy()
+            out["minhash"] = batch_signatures(list(pdf[text_col]), n_hashes, k, a, b)
             yield out
 
     return df.mapInPandas(fn, out_schema)
@@ -262,10 +253,7 @@ def lsh_candidate_pairs(
         )
     assert n_hashes % bands == 0
     rows_per_band = n_hashes // bands
-    sig = add_minhash(
-        df.select(id_col, text_col), text_col, n_hashes, k, seed,
-        project_out=(id_col,),
-    )
+    sig = add_minhash(df.select(id_col, text_col), id_col, text_col, n_hashes, k, seed)
     banded = sig.select(
         F.col(id_col).alias("_id"),
         F.posexplode(

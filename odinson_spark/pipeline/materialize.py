@@ -58,7 +58,7 @@ def build_graph(
     )
     links = score_pairs(pairs, surfaces, "node_id", "surface", threshold=link_threshold)
     # large-star/small-star: O(log n) rounds regardless of link-chain
-    # diameter (label propagation's fixed budget overflows on long chains)
+    # diameter
     comp = connected_components_star(
         surfaces.select("node_id"), links, id_col="node_id"
     ).withColumnRenamed("component", "canonical_id")

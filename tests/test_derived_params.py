@@ -10,49 +10,9 @@ shape."""
 
 import logging
 
-import pytest
 from pyspark.sql import functions as F
 
-from odinson_spark.ops import similarity as sim
 from odinson_spark.pipeline.linking import derive_banding, lsh_candidate_pairs
-
-
-def _synthetic_embeddings(spark, n, dim=8):
-    return spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(dim)),
-            lambda i: (F.pmod(F.xxhash64(F.col("id"), i), F.lit(2000)) - 1000).cast(
-                "float"
-            )
-            / 1000.0,
-        ).alias("embedding"),
-    )
-
-
-def test_lsh_ann_runs_at_1e6_with_derived_planes(spark, caplog):
-    corpus = _synthetic_embeddings(spark, 1_000_000)
-    queries = corpus.filter(F.col("vec_id") < 16)
-    with caplog.at_level(logging.INFO, logger="odinson_spark.ops.similarity"):
-        res = sim.lsh_ann_topk(corpus, k=5, dim=8, queries=queries)
-        n = res.count()
-    assert n == 16 * 5
-    # 10^6 vectors / 1024 target occupancy → 10 planes (2^10 buckets)
-    assert sim.derive_n_planes(1_000_000) == 10
-    assert "derived n_planes=10" in caplog.text
-
-
-def test_ivf_derives_nlist_and_routes_to_vectorized_assignment(spark, caplog):
-    corpus = _synthetic_embeddings(spark, 200_000)
-    queries = corpus.filter(F.col("vec_id") < 16)
-    with caplog.at_level(logging.INFO, logger="odinson_spark.ops.similarity"):
-        res = sim.ivf_ann_topk(corpus, k=5, dim=8, queries=queries, nprobe=3)
-        n = res.count()
-    assert n == 16 * 5
-    # 200k / 1024 → 196 cells; 196×8 > _CATALYST_CELL_BUDGET → the auto
-    # impl must pick the Arrow path (interpreted Catalyst would take minutes)
-    assert "derived nlist=196" in caplog.text
-    assert 196 * 8 > sim._CATALYST_CELL_BUDGET
 
 
 def test_banding_derivation_fires_in_linking(spark, caplog):

@@ -213,6 +213,57 @@ class TestIncremental:
         # and the appended doc survived the upgrade
         assert inc.candidate_keys(pf.PFTerm("norm", "quokka")).count() == 1
 
+    @pytest.mark.parametrize("crash", ["after_sentences_swap", "before_tombstone_purge"])
+    def test_compact_crash_keeps_live_docs(self, spark, inc, monkeypatch, crash):
+        """compact() interrupted after it swapped the sentence table, or
+        before it removed the tombstones: on reopen, updated and re-added
+        docs stay visible, deleted docs stay hidden, and a later delete
+        still hides the rebuilt rows."""
+        import shutil
+
+        def docs(*rows):
+            return tokenize_documents(
+                spark.createDataFrame(
+                    [(d, t, "en") for d, t in rows],
+                    "doc_id long, text string, lang string",
+                )
+            )
+
+        inc.delete_documents([1])
+        inc.update_documents(docs((2, "updated fast body")))
+        inc.delete_documents([3])
+        inc.add_documents(docs((3, "readded fast body")))
+        expected = self._hits(inc)
+        visible = {str(d) for d, *_ in expected}
+        assert "1" not in visible and {"2", "3"} <= visible
+
+        real_move, real_rmtree = shutil.move, shutil.rmtree
+
+        def move(src, dst, *a, **kw):
+            if crash == "after_sentences_swap" and src == os.path.join(inc.path, "postings"):
+                raise OSError("injected crash")
+            return real_move(src, dst, *a, **kw)
+
+        def rmtree(path, *a, **kw):
+            if crash == "before_tombstone_purge" and path == os.path.join(inc.path, "tombstones"):
+                raise OSError("injected crash")
+            return real_rmtree(path, *a, **kw)
+
+        monkeypatch.setattr(shutil, "move", move)
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+        with pytest.raises(OSError, match="injected crash"):
+            inc.compact()
+        monkeypatch.undo()
+
+        reopened = TermIndex.read(spark, inc.path)
+        assert self._hits(reopened) == expected
+        reopened.delete_documents([2])
+        assert "2" not in {str(d) for d, *_ in self._hits(reopened)}
+        after_delete = self._hits(reopened)
+        reopened.compact()
+        assert reopened._tombstones() is None
+        assert self._hits(reopened) == after_delete
+
     def test_update_replaces(self, spark, inc):
         new = spark.createDataFrame(
             [(0, "replaced fast body", "en")],

@@ -1,4 +1,4 @@
-"""Local replica of the driver's correctness gate: run each queries() entry
+"""Correctness gate: run each ``__spark_entry__.queries()`` entry
 on Spark and its oracle_sql() on DuckDB over the same parquet, compare
 row count, column names, and an order-insensitive value hash.
 
@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = ["documents"]  # the only table the queries() entries read
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -41,11 +41,6 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    # the trained-centroid oracles train from the same parquet the Spark
-    # queries read — point the generator at THIS sf_dir (the driver's own
-    # gate runs at the default sf0.01)
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-
     import __spark_entry__ as entrymod
     from odinson_spark.session import get_spark
 
@@ -57,7 +52,7 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql(sf_dir)
+    oracles = entrymod.oracle_sql()
     results = []
     for name, fn in qs.items():
         if only and name not in only:
