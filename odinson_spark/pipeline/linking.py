@@ -17,11 +17,16 @@ pipeline's north rule. Design:
 Scale notes: the groupBy key is (band_idx, band_hash) — high cardinality, no
 hot keys by construction (hash-distributed); bucket blowup from degenerate
 surfaces (e.g. empty strings) is capped via ``max_bucket_size``.
+
+:func:`canonicalize_local` runs the same three steps plus union-find in one
+process, from the same helpers; ``build_graph`` picks it for surface tables
+that fit on the driver.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
 from typing import Iterator, List, Tuple
 
 import numpy as np
@@ -39,6 +44,11 @@ from pyspark.sql.types import (
 
 MERSENNE_P = (1 << 61) - 1
 _HASH_BITS_HEX = 15  # 60 bits from md5 hex
+# defaults shared by the distributed chain and canonicalize_local, whose
+# outputs must agree
+SHINGLE_K = 3
+MINHASH_SEED = 42
+MAX_BUCKET_SIZE = 1000
 
 import logging
 
@@ -221,9 +231,9 @@ def lsh_candidate_pairs(
     text_col: str,
     n_hashes: int | None = None,
     bands: int | None = None,
-    k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 1000,
+    k: int = SHINGLE_K,
+    seed: int = MINHASH_SEED,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
     threshold: float = 0.7,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -291,7 +301,7 @@ def score_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
+    k: int = SHINGLE_K,
     threshold: float = 0.7,
 ) -> DataFrame:
     """Exact shingle-Jaccard on candidate pairs; keeps pairs ≥ threshold.
@@ -312,16 +322,64 @@ def score_pairs(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            scores = []
-            for ta, tb in zip(pdf["text_a"], pdf["text_b"]):
-                sa = set(shingles((ta or "").lower(), k))
-                sb = set(shingles((tb or "").lower(), k))
-                inter = len(sa & sb)
-                union = len(sa | sb) or 1
-                scores.append(inter / union)
             out = pdf[["id_a", "id_b"]].copy()
-            out["score"] = scores
+            out["score"] = [
+                shingle_jaccard(shingle_set(ta, k), shingle_set(tb, k))
+                for ta, tb in zip(pdf["text_a"], pdf["text_b"])
+            ]
             yield out
 
     scored = joined.mapInPandas(fn, out_schema)
     return scored.filter(F.col("score") >= threshold)
+
+
+def shingle_set(text, k: int) -> set:
+    return set(shingles((text or "").lower(), k))
+
+
+def shingle_jaccard(sa: set, sb: set) -> float:
+    return len(sa & sb) / (len(sa | sb) or 1)
+
+
+def canonicalize_local(
+    ids: List[int], texts: List[str], threshold: float = 0.7
+) -> pd.DataFrame:
+    """Driver twin of :func:`lsh_candidate_pairs` → :func:`score_pairs` →
+    ``connected_components_star`` for a surface table small enough to hold
+    in one process: (id, component) with component = min id of the class.
+
+    Same banding derivation, signatures, bucket cap and exact Jaccard as
+    the distributed chain, so it returns the same map. Buckets are keyed by
+    the band slice itself rather than its xxhash64, which only differs on a
+    64-bit hash collision. ``ids`` must be distinct."""
+    n_hashes, bands = derive_banding(len(ids), threshold)
+    rows_per_band = n_hashes // bands
+    a, b = _hash_params(n_hashes, MINHASH_SEED)
+    buckets: dict = {}
+    for i, sig in zip(ids, batch_signatures(texts, n_hashes, SHINGLE_K, a, b)):
+        for band in range(bands):
+            key = (band, tuple(sig[band * rows_per_band : (band + 1) * rows_per_band]))
+            buckets.setdefault(key, []).append(i)
+    pairs = set()
+    for members in buckets.values():
+        if 1 < len(members) <= MAX_BUCKET_SIZE:
+            pairs.update(itertools.combinations(sorted(members), 2))
+    sets = dict(zip(ids, (shingle_set(t, SHINGLE_K) for t in texts)))
+    # union-find that always keeps the smaller root, so every root is its
+    # class's min id: the label connected_components_star converges to
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in pairs:
+        if shingle_jaccard(sets[x], sets[y]) >= threshold:
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                parent[max(rx, ry)] = min(rx, ry)
+    return pd.DataFrame(
+        {"id": ids, "component": [find(i) for i in ids]}, dtype="int64"
+    )
