@@ -3,15 +3,15 @@
 ``queries()`` exposes one entry per implemented operator family from
 SURVEY.md §2 (surface patterns, quantifiers, assertions, captures, graph
 traversals, events/triples, cascade+state, metadata filters) plus the KG
-canonicalization, search, highlighting, streaming and materialized-index
-paths. ``oracle_sql()`` gives the exact DuckDB equivalent for every query —
+canonicalization, search, highlighting and materialized-index paths.
+``oracle_sql()`` gives the exact DuckDB equivalent for every query —
 including the full KG canonicalization (MinHash-LSH blocking from the same
 hashes, recursive-CTE connected components) — so all entries are
 hash-checked by ``tools/check_correctness.py``, none rows-only.
 
 Extraction queries run over the synthetic ``documents`` table through the
-real pipeline (tokenize → prefilter → match → emit), using the whitespace
-tokenizer whose every derived layer is reproducible in SQL
+staged pipeline every caller shares (tokenize → prefilter → match → emit),
+using the whitespace tokenizer whose every derived layer is reproducible in SQL
 (odinson_spark/tokenizer/code_tokenizer.py::annotate_text).
 """
 
@@ -28,10 +28,10 @@ from odinson_spark.pipeline.extract import (
     apply_prefilter,
     extract_mentions_df,
     tokenize_documents,
+    tokenize_repos,
     triples_from_mentions,
 )
 from odinson_spark.pipeline.linking import MERSENNE_P, _hash_params, lsh_candidate_pairs
-from odinson_spark.pipeline.oneshot import extract_one_shot
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,33 +47,27 @@ def _sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenize_documents(_t(spark, sf_dir, "documents"))
 
 
-def _run_pattern(
-    spark, sf_dir, pattern: str, use_state: bool = False, project=None
-) -> DataFrame:
-    """Extraction queries run through the fused one-shot path (annotate+match
-    in one narrow stage); results are identical to the staged
-    tokenize→prefilter→match path (asserted by
-    tests/test_plans.py::test_fused_equals_staged), just with one Arrow
-    round-trip instead of two. ``project`` limits which mention columns the
-    Python stage emits (span queries read 4-5 of the 12 — the rest would
-    only burn Arrow bytes)."""
+def _extract(sentences: DataFrame, extractors, use_state: bool = False) -> DataFrame:
+    """Prefilter and match sentence rows: the one extraction route."""
+    return extract_mentions_df(
+        apply_prefilter(sentences, extractors), extractors, use_state=use_state
+    )
+
+
+def _run_pattern(spark, sf_dir, pattern: str, use_state: bool = False) -> DataFrame:
+    """Compile a bare pattern (or a full ``rules:`` grammar) and extract its
+    mentions from the ``documents`` table."""
     grammar_rules = pattern if pattern.lstrip().startswith("rules:") else None
     if grammar_rules is None:
         grammar = f"rules:\n  - name: q\n    type: basic\n    pattern: |\n      {pattern}\n"
     else:
         grammar = pattern
     extractors, _ = RuleReader().compile_rules(grammar)
-    return extract_one_shot(
-        _t(spark, sf_dir, "documents"), extractors, use_state=use_state,
-        project=project,
-    )
+    return _extract(_sentences(spark, sf_dir), extractors, use_state)
 
 
 def _mention_spans(spark, sf_dir, pattern: str, rule: str | None = None, use_state=False) -> DataFrame:
-    m = _run_pattern(
-        spark, sf_dir, pattern, use_state,
-        project=("doc_id", "start", "end", "text", "found_by"),
-    )
+    m = _run_pattern(spark, sf_dir, pattern, use_state)
     if rule:
         m = m.filter(F.col("found_by") == rule)
     return (
@@ -121,7 +115,7 @@ rules:
 
 def entry(spark: SparkSession) -> DataFrame:
     extractors, _ = RuleReader().compile_rules(EVENT_GRAMMAR)
-    mentions = extract_one_shot(_t(spark, DEFAULT_SF_DIR, "documents"), extractors)
+    mentions = _extract(_sentences(spark, DEFAULT_SF_DIR), extractors)
     return triples_from_mentions(mentions).orderBy("doc_id", "subj_start")
 
 
@@ -185,10 +179,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["pat_lookbehind"] = lambda s, d: _mention_spans(s, d, "(?<= scan) []")
 
     def pat_capture(s, d):
-        m = _run_pattern(
-            s, d, "(?<left> join) small",
-            project=("doc_id", "start", "end", "captures"),
-        )
+        m = _run_pattern(s, d, "(?<left> join) small")
         cap = F.element_at("captures", 1)
         return m.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -214,8 +205,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # token 2 (the CALL) has outgoing edges next→3, arg→4, arg→6, and
     # incoming assign←0, so the traversal must select among multiple
     # out-edges by label. The oracle predicts the answer from the
-    # construction (positions are fixed by the lexer).
-    def _code_docs(s, d):
+    # construction (positions are fixed by the lexer). Each document becomes
+    # one repos row whose `repo` is its doc_id, so the sentence doc_id
+    # `repo/path@commit` starts with it (_code_doc_id reads it back).
+    def _code_sentences(s, d):
         docs = _t(s, d, "documents")
         toks = F.split(F.col("text"), " ")
 
@@ -230,20 +223,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             clean(1), F.lit("="), clean(2), F.lit("("), clean(3), F.lit(","),
             clean(4), F.lit(")"),
         )
-        return docs.filter(F.size(toks) >= 4).select(
-            "doc_id", content.alias("text")
+        repos = docs.filter(F.size(toks) >= 4).select(
+            F.col("doc_id").cast("string").alias("repo"),
+            F.lit("q.py").alias("path"),
+            F.lit("0").alias("commit"),
+            F.lit("python").alias("lang"),
+            content.alias("content"),
         )
+        return tokenize_repos(repos)
+
+    def _code_doc_id():
+        return F.split("doc_id", "/")[0].cast("long").alias("doc_id")
 
     def _code_pattern(s, d, pattern):
         grammar = f"rules:\n  - name: q\n    type: basic\n    pattern: |\n      {pattern}\n"
         extractors, _ = RuleReader().compile_rules(grammar)
-        m = extract_one_shot(
-            _code_docs(s, d), extractors, mode="code",
-            project=("doc_id", "start", "end", "text"),
-        )
+        m = _extract(_code_sentences(s, d), extractors)
         return (
             m.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
+                _code_doc_id(),
                 F.col("start").alias("mstart"),
                 F.col("end").alias("mend"),
                 F.col("text").alias("mtext"),
@@ -304,14 +302,11 @@ rules:
 
     def event_arg_filter(s, d):
         extractors, _ = RuleReader().compile_rules(FILTER_GRAMMAR)
-        m = extract_one_shot(
-            _code_docs(s, d), extractors, mode="code", use_state=True,
-            project=("doc_id", "found_by", "captures"),
-        )
+        m = _extract(_code_sentences(s, d), extractors, use_state=True)
         cap = F.explode("captures")
         return (
             m.filter(F.col("found_by") == "call-obj")
-            .select(F.col("doc_id").cast("long").alias("doc_id"), cap.alias("c"))
+            .select(_code_doc_id(), cap.alias("c"))
             .select(
                 "doc_id",
                 F.col("c.start").alias("mstart"),
@@ -326,7 +321,7 @@ rules:
     # --- events / triples ---------------------------------------------------
     def event_triple(s, d):
         extractors, _ = RuleReader().compile_rules(EVENT_GRAMMAR)
-        mentions = extract_one_shot(_t(s, d, "documents"), extractors)
+        mentions = _extract(_sentences(s, d), extractors)
         triples = triples_from_mentions(mentions)
         return triples.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -349,7 +344,7 @@ rules:
         Output: (surface, canonical) where canonical = min surface of the
         equivalence class."""
         extractors, _ = RuleReader().compile_rules(EVENT_GRAMMAR)
-        mentions = extract_one_shot(_t(s, d, "documents"), extractors)
+        mentions = _extract(_sentences(s, d), extractors)
         triples = triples_from_mentions(mentions)
         surfaces = (
             triples.select(F.col("subj_text").alias("surface"))
@@ -457,13 +452,12 @@ rules:
     # --- match highlighting (display layer) -----------------------------------
     def highlight_spans(s, d):
         from odinson_spark.pipeline.highlight import highlight_mentions
-        from odinson_spark.pipeline.extract import extract_mentions_df
 
-        sents = tokenize_documents(_t(s, d, "documents"))
+        sents = _sentences(s, d)
         extractors, _ = RuleReader().compile_rules(
             "rules:\n  - name: q\n    type: basic\n    pattern: |\n      fast table\n"
         )
-        m = extract_mentions_df(apply_prefilter(sents, extractors), extractors)
+        m = _extract(sents, extractors)
         h = highlight_mentions(m, sents)
         return h.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -481,9 +475,7 @@ rules:
         extractors, _ = RuleReader().compile_rules(
             "rules:\n  - name: q\n    type: basic\n    pattern: |\n      spark\n"
         )
-        m = extract_one_shot(
-            docs, extractors, project=("doc_id", "start", "end", "text")
-        )
+        m = _extract(tokenize_documents(docs), extractors)
         return m.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("start").alias("mstart"),
@@ -492,48 +484,6 @@ rules:
         ).orderBy("doc_id", "mstart")
 
     q["metadata_filter"] = metadata_filter
-
-    def stream_extract_eq(s, d):
-        """Structured-Streaming parity: the SAME tokenize→prefilter→match
-        stages run over a file-source stream (availableNow) and must emit
-        exactly the batch-path mentions — the oracle is pat_term's SQL.
-        The parquet is exposed through a symlink dir because the file
-        source requires a directory, and the memory-sink name is unique per
-        call so the gate is re-runnable in one session."""
-        import os
-        import tempfile
-        import uuid
-
-        from odinson_spark.streaming.stream import stream_extract
-
-        tmp = tempfile.mkdtemp(prefix="se_eq_")
-        os.symlink(f"{d}/documents.parquet", f"{tmp}/documents.parquet")
-        schema = s.read.parquet(f"{d}/documents.parquet").schema
-        extractors, _ = RuleReader().compile_rules(
-            "rules:\n  - name: q\n    type: basic\n    pattern: |\n      fast\n"
-        )
-        m = stream_extract(s, tmp, extractors, schema)
-        name = f"se_eq_{uuid.uuid4().hex[:12]}"
-        sq = (
-            m.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        sq.awaitTermination(300)
-        return (
-            s.table(name)
-            .select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("start").alias("mstart"),
-                F.col("end").alias("mend"),
-                F.col("text").alias("mtext"),
-            )
-            .orderBy("doc_id", "mstart", "mend")
-        )
-
-    q["stream_extract_eq"] = stream_extract_eq
 
     def _idx_spans(s, d, pattern: str, **eng_kwargs):
         """Materialized-index query path (odinson_spark/index.py — the
@@ -1040,8 +990,4 @@ FROM toks WHERE tok = 'spark'
 ORDER BY doc_id, mstart
 """
     )
-
-    # streaming path ≡ batch path: same stages, so the oracle is exactly
-    # pat_term's SQL
-    o["stream_extract_eq"] = o["pat_term"]
     return o

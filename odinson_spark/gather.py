@@ -45,10 +45,6 @@ def get_tokens_for_span(batch, sent_idx: int, field_name: str, start: int, end: 
     return list(toks[start:end])
 
 
-def get_string_for_span(batch, sent_idx: int, field_name: str, start: int, end: int) -> str:
-    return " ".join(get_tokens_for_span(batch, sent_idx, field_name, start, end))
-
-
 @dataclass
 class LazyMention:
     """A mention view whose token fields populate on demand.

@@ -81,11 +81,6 @@ def _bucket(col, n: int):
     return F.pmod(F.crc32(col.cast("string")), F.lit(n)).cast("int")
 
 
-def doc_bucket_of(doc_id: str, n: int) -> int:
-    """Driver-side twin of ``_bucket`` for cursor/diagnostic use."""
-    return zlib.crc32(str(doc_id).encode()) % n
-
-
 def _shift_by(off: int):
     """One-arg transform callback factory (a two-arg lambda would have its
     second parameter bound to the element index by F.transform)."""

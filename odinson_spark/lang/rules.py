@@ -48,12 +48,6 @@ class Priority:
     def min_epoch(self) -> int:
         return min(int(x) for x in re.findall(r"\d+", self.spec))
 
-    def max_epoch(self) -> Optional[int]:
-        s = self.spec.strip()
-        if s.endswith("+"):
-            return None
-        return max(int(x) for x in re.findall(r"\d+", self.spec))
-
 
 # ---------------------------------------------------------------------------
 # variable substitution: ${var} in any rule field (utils/VariableSubstitutor)

@@ -15,7 +15,7 @@ and cached as boolean arrays, so the traversal inner loop is integer-only.
 from __future__ import annotations
 
 import re
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence
 
 import numpy as np
 
@@ -70,21 +70,6 @@ class Digraph:
                 else list(self.out_slices)
             )
         return self._out_l, self._out_sl
-
-    @staticmethod
-    def from_edges(n: int, edges: Sequence[Tuple[int, int, int]], roots=()) -> "Digraph":
-        """Build CSR from (src, dst, label_id) triples. An edge src→dst is
-        *outgoing* at src and *incoming* at dst."""
-        if not edges:
-            return Digraph.from_arrays(
-                n,
-                np.zeros(0, np.int32),
-                np.zeros(0, np.int32),
-                np.zeros(0, np.int32),
-                roots,
-            )
-        arr = np.asarray(edges, dtype=np.int32)
-        return Digraph.from_arrays(n, arr[:, 0], arr[:, 1], arr[:, 2], roots)
 
     @staticmethod
     def from_arrays(n: int, src, dst, lab, roots=()) -> "Digraph":

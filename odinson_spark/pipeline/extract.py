@@ -72,22 +72,13 @@ def _sentences_rows(doc_id, sha, lang, sentences, extra_token_fields=()) -> Iter
         }
 
 
-def _fan_out(df: DataFrame, force: Optional[bool] = None) -> DataFrame:
+def _fan_out(df: DataFrame) -> DataFrame:
     """Small inputs often arrive as one parquet split; the Python annotate/
     match stages scale with partition count, so widen to the session's
-    parallelism. On a real corpus (thousands of splits) this is a no-op.
-
-    ``force``: explicit override — True always repartitions, False never
-    (skips the partition-count probe entirely)."""
-    if df.isStreaming:
-        return df  # micro-batch sizing is the trigger's job
-    if force is False:
-        return df
+    parallelism. On a real corpus (thousands of splits) this is a no-op."""
     # one wave of core-count tasks measured fastest on local[*]; finer tasks
     # add per-task Arrow/scheduling overhead without helping balance here
     target = df.sparkSession.sparkContext.defaultParallelism
-    if force is True:
-        return df.repartition(target)
     try:
         # physical partition count straight off the query execution — avoids
         # building the Python RDD wrapper (and its deserializer) per call
@@ -366,19 +357,9 @@ def batch_from_pandas(
 _MENTION_COLS = [f.name for f in MENTIONS_SCHEMA.fields]
 
 
-def _mention_frame(
-    mentions, idx_by_key, raws, shas, EventMatch, cols=None
-) -> pd.DataFrame:
+def _mention_frame(mentions, idx_by_key, raws, shas, EventMatch) -> pd.DataFrame:
     """Mentions → pandas frame, built column-wise (dict-of-lists): one
-    DataFrame construction per batch instead of one dict per mention row.
-
-    ``cols`` — optional subset of mention columns to build; the capture
-    structs and span-text joins are skipped entirely when unrequested, and
-    only the requested columns cross the Arrow boundary."""
-    out_cols = _MENTION_COLS if cols is None else [c for c in _MENTION_COLS if c in set(cols)]
-    want = set(out_cols)
-    need_caps = "captures" in want
-    need_text = "text" in want
+    DataFrame construction per batch instead of one dict per mention row."""
     c_doc, c_sent, c_sha, c_label, c_found, c_start, c_end, c_text = (
         [], [], [], [], [], [], [], [],
     )
@@ -387,21 +368,18 @@ def _mention_frame(
         i = idx_by_key[(m.doc_id, m.sent_id)]
         toks = raws[i]
         is_event = isinstance(m.match, EventMatch)
-        if need_caps:
-            c_caps.append(
-                [
-                    {
-                        "name": c.name,
-                        "label": c.label,
-                        "start": c.match.start,
-                        "end": c.match.end,
-                        "text": " ".join(toks[c.match.start : c.match.end]),
-                    }
-                    for c in (
-                        m.match.captures if is_event else m.match.named_captures()
-                    )
-                ]
-            )
+        c_caps.append(
+            [
+                {
+                    "name": c.name,
+                    "label": c.label,
+                    "start": c.match.start,
+                    "end": c.match.end,
+                    "text": " ".join(toks[c.match.start : c.match.end]),
+                }
+                for c in (m.match.captures if is_event else m.match.named_captures())
+            ]
+        )
         c_doc.append(m.doc_id)
         c_sent.append(m.sent_id)
         c_sha.append(shas[i])
@@ -409,30 +387,31 @@ def _mention_frame(
         c_found.append(m.found_by)
         c_start.append(m.start)
         c_end.append(m.end)
-        if need_text:
-            c_text.append(" ".join(toks[m.start : m.end]))
+        c_text.append(" ".join(toks[m.start : m.end]))
         c_isev.append(is_event)
         c_tstart.append(m.match.trigger.start if is_event else None)
         c_tend.append(m.match.trigger.end if is_event else None)
     if not c_doc:
         # empty dict-of-lists would infer float64 columns, which Arrow can't
         # cast to list<struct>; the empty-constructor keeps object dtype
-        return pd.DataFrame(columns=out_cols)
-    data = {
-        "doc_id": c_doc,
-        "sent_id": c_sent,
-        "content_sha": c_sha,
-        "label": c_label,
-        "found_by": c_found,
-        "start": c_start,
-        "end": c_end,
-        "text": c_text,
-        "is_event": c_isev,
-        "trigger_start": c_tstart,
-        "trigger_end": c_tend,
-        "captures": c_caps,
-    }
-    return pd.DataFrame({k: data[k] for k in out_cols}, columns=out_cols)
+        return pd.DataFrame(columns=_MENTION_COLS)
+    return pd.DataFrame(
+        {
+            "doc_id": c_doc,
+            "sent_id": c_sent,
+            "content_sha": c_sha,
+            "label": c_label,
+            "found_by": c_found,
+            "start": c_start,
+            "end": c_end,
+            "text": c_text,
+            "is_event": c_isev,
+            "trigger_start": c_tstart,
+            "trigger_end": c_tend,
+            "captures": c_caps,
+        },
+        columns=_MENTION_COLS,
+    )
 
 
 def required_columns(
@@ -459,7 +438,6 @@ def extract_mentions_df(
     use_state: bool = False,
     allow_trigger_overlaps: bool = False,
     disable_match_selector: bool = False,
-    prune_columns: bool = True,
     extra_token_fields: Sequence[str] = (),
 ) -> DataFrame:
     """Run the grammar; one matcher pass per Arrow batch, no shuffle.
@@ -476,13 +454,10 @@ def extract_mentions_df(
     need_graph = _uses_graph(programs)
     need_inout = bool(_fields_used(programs) & {"incoming", "outgoing"})
     extra_token_fields = tuple(extra_token_fields)
-    if prune_columns:
-        cols = [
-            c
-            for c in required_columns(extractors, extra_token_fields)
-            if c in sentences.columns
-        ]
-        sentences = sentences.select(*cols)
+    cols = [
+        c for c in required_columns(extractors, extra_token_fields) if c in sentences.columns
+    ]
+    sentences = sentences.select(*cols)
     spark = sentences.sparkSession
     bc = spark.sparkContext.broadcast(list(extractors))
 

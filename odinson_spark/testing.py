@@ -36,8 +36,8 @@ def sentence_batch_from_docs(
     ``pre_normalized=True``: trust the input to be already sanitized +
     NFKC'd with a precomputed ``norm`` layer (true for this engine's own
     annotators, code_tokenizer.annotate_text/annotate_code) — skips the
-    redundant re-normalization the fused one-shot path would otherwise pay
-    per token.
+    redundant per-token re-normalization when a Spark-free run matches
+    annotator output directly.
 
     Keys beyond the built-ins and the reserved ``edges``/``roots``/
     ``mentions`` become extra token layers verbatim — arbitrary configured

@@ -2,13 +2,13 @@
 the executed plan, not just intended."""
 
 from odinson_spark.lang.rules import RuleReader
+from odinson_spark.match.extractor import BatchExtractor
 from odinson_spark.pipeline.extract import (
     apply_prefilter,
     extract_mentions_df,
     required_columns,
     tokenize_documents,
 )
-from odinson_spark.pipeline.oneshot import extract_one_shot, text_prefilter_column
 from odinson_spark.plans.prefilter import (
     PFAnd,
     PFEdge,
@@ -19,6 +19,8 @@ from odinson_spark.plans.prefilter import (
     to_sql,
     to_spark_column,
 )
+from odinson_spark.testing import sentence_batch_from_docs
+from odinson_spark.tokenizer.code_tokenizer import annotate_text
 
 
 def _grammar(pattern):
@@ -79,10 +81,10 @@ def test_column_pruning_for_matcher():
     assert not any(c.startswith("deps_") for c in cols)
 
 
-def test_text_prefilter_column_sql():
+def test_text_prefilter_column_sql(spark):
     (e,) = _grammar("fast table")
     pf = prefilter_of(e.program)
-    col = text_prefilter_column(pf)
+    col = to_spark_column(pf)
     s = str(col._jc)
     assert "fast" in s and "table" in s
 
@@ -98,6 +100,21 @@ def test_fused_equals_staged(spark):
     staged = extract_mentions_df(
         apply_prefilter(tokenize_documents(docs), extractors), extractors
     )
-    fused = extract_one_shot(docs, extractors)
+    # Spark-free reference: the same annotator and matcher on the driver
+    sents, doc_ids, sent_ids = [], [], []
+    for r in docs.collect():
+        for sent in annotate_text(r.text):
+            sents.append(sent)
+            doc_ids.append(str(r.doc_id))
+            sent_ids.append(sent["sent_id"])
+    ref = BatchExtractor(extractors).extract_no_state(
+        sentence_batch_from_docs(sents), doc_ids, sent_ids
+    )
     key = lambda r: (r.doc_id, r.sent_id, r.start, r.end, r.found_by)
-    assert sorted(map(key, staged.collect())) == sorted(map(key, fused.collect()))
+    assert sorted(map(key, staged.collect())) == sorted(map(key, ref))
+
+
+def test_every_gate_query_has_an_oracle():
+    import __spark_entry__ as em
+
+    assert set(em.queries()) == set(em.oracle_sql())

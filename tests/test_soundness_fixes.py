@@ -9,7 +9,6 @@ from odinson_spark.lang.metadata import compile_metadata_query
 from odinson_spark.lang.rules import RuleReader
 from odinson_spark.pipeline.components import connected_components_star
 from odinson_spark.pipeline.extract import apply_prefilter, extract_mentions_df, tokenize_documents
-from odinson_spark.pipeline.oneshot import extract_one_shot
 from odinson_spark.pipeline.skew import salted_repartition
 
 
@@ -19,7 +18,7 @@ def _grammar(pattern):
     return extractors
 
 
-# --- text prefilter must never drop a matchable non-ASCII doc ---------------
+# --- the prefilter must never drop a matchable non-ASCII doc ----------------
 
 
 def test_text_prefilter_unicode_soundness(spark):
@@ -35,15 +34,14 @@ def test_text_prefilter_unicode_soundness(spark):
         "doc_id long, text string, lang string",
     )
     extractors = _grammar("[norm=cafe]")
-    with_pf = extract_one_shot(docs, extractors, apply_text_prefilter=True)
-    without_pf = extract_one_shot(docs, extractors, apply_text_prefilter=False)
+    sents = tokenize_documents(docs)
+    with_pf = extract_mentions_df(apply_prefilter(sents, extractors), extractors)
+    without_pf = extract_mentions_df(sents, extractors)
     key = lambda r: (r.doc_id, r.start, r.end)
     got = sorted(map(key, with_pf.collect()))
     want = sorted(map(key, without_pf.collect()))
     assert got == want
     assert {r[0] for r in got} == {"1", "2", "4"}
-    # and the prefilter still prunes: pure-ASCII non-matching doc 3 is cut
-    # before the matcher (prefilter necessary-condition holds)
 
 
 def test_text_prefilter_still_prunes_ascii(spark):
@@ -52,12 +50,8 @@ def test_text_prefilter_still_prunes_ascii(spark):
         "doc_id long, text string, lang string",
     )
     extractors = _grammar("fast")
-    from odinson_spark.pipeline.oneshot import text_prefilter_column
-    from odinson_spark.plans.prefilter import pf_or, prefilter_of
-
-    pf = pf_or([prefilter_of(e.program) for e in extractors])
-    kept = docs.filter(text_prefilter_column(pf)).select("doc_id").collect()
-    assert [r.doc_id for r in kept] == [1]
+    kept = apply_prefilter(tokenize_documents(docs), extractors).select("doc_id").collect()
+    assert [r.doc_id for r in kept] == ["1"]
 
 
 # --- [incoming=]/[outgoing=] prefilter renders against *_flat ----------------

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from odinson_spark.lang.rules import RuleReader
-from odinson_spark.pipeline.oneshot import extract_one_shot
+from odinson_spark.pipeline.extract import apply_prefilter, extract_mentions_df, tokenize_documents
 from odinson_spark.sources.document_json import VERBOSITY_COLUMNS, write_mentions_json
 from odinson_spark.sources.table_io import TableIO
 
@@ -90,7 +90,8 @@ rules:
       (?<left> alpha) join
 """
     extractors, _ = RuleReader().compile_rules(grammar)
-    return extract_one_shot(docs, extractors)
+    sents = tokenize_documents(docs)
+    return extract_mentions_df(apply_prefilter(sents, extractors), extractors)
 
 
 @pytest.mark.parametrize("verbosity", ["minimal", "display", "all"])

@@ -2,6 +2,8 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet, compare
 row count, column names, and an order-insensitive value hash.
 
+A query without an oracle fails. Exits non-zero unless every query is OK.
+
 Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
 """
 
@@ -64,7 +66,7 @@ def main():
             results.append((name, "SPARK_ERROR", str(e).split("\n")[0][:160]))
             continue
         if name not in oracles:
-            results.append((name, "ROWS_ONLY", f"rows={len(sdf)}"))
+            results.append((name, "NO_ORACLE", f"rows={len(sdf)}"))
             continue
         try:
             odf = con.execute(oracles[name]).df()
@@ -87,9 +89,11 @@ def main():
     ok = 0
     for name, status, detail in results:
         print(f"{name:24s} {status:12s} {detail}")
-        ok += status in ("OK", "ROWS_ONLY")
+        ok += status == "OK"
     print(f"\n{ok}/{len(results)} passing")
     spark.stop()
+    if ok != len(results):
+        sys.exit(1)
 
 
 if __name__ == "__main__":
