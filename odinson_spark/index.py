@@ -15,11 +15,19 @@ This module materializes that access path with Spark primitives:
   ``partitionBy(doc_bucket)`` (deterministic ``crc32(doc_id) % N``), so a
   candidate-key join prunes whole directories via dynamic partition pruning
   instead of scanning the corpus.
-* **postings/** — one row per distinct (sentence, token-layer field, term),
-  written ``partitionBy(tbucket)`` (``crc32(term) % M``) and sorted by
-  (field, term) within files: a term lookup touches exactly one partition
-  directory, and parquet min/max stats on the sorted ``term`` column skip
-  all but the matching row groups — the Spark rendering of a postings seek.
+* **postings/** — one row per distinct (sentence, token-layer field, term)
+  with the term's token positions (null only for the sentence-level
+  ``*_flat`` label sets), written ``partitionBy(tbucket)``
+  (``crc32(term) % M``) and sorted by (field, term) within files: a term
+  lookup touches exactly one partition directory, and parquet min/max stats
+  on the sorted ``term`` column skip all but the matching row groups — the
+  Spark rendering of a postings seek.
+* **stats/** — per-(field, term) document frequency, bucketed like the
+  postings: the term dictionary and the cost model's input.
+
+``odinson_index_meta.json`` pins each table's schema. ``TermIndex.read``
+opens only the format ``TermIndex.build`` writes and raises
+``OdinsonException`` for any other directory.
 
 Query execution composes the existing prefilter algebra
 (plans/prefilter.py): each required literal term becomes a pruned postings
@@ -54,6 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .errors import OdinsonException
 from .plans import prefilter as pf
 from .pipeline.extract import apply_prefilter
 from .search import SearchEngine
@@ -75,6 +84,15 @@ DEFAULT_INDEXED_COLUMNS = (
 )
 
 _META_FILE = "odinson_index_meta.json"
+_TABLES = ("sentences", "postings", "stats")
+_META_KEYS = (
+    "n_term_buckets",
+    "n_doc_buckets",
+    "indexed_columns",
+    "schemas",
+    "next_gen",
+    "n_sentences",
+)
 
 
 def _bucket(col, n: int):
@@ -284,6 +302,29 @@ def _postings_of_sql(src: DataFrame, cols: Sequence[str], n_term_buckets: int) -
     )
 
 
+def _check_format(path: str, meta: dict) -> None:
+    """Raise unless ``meta`` describes the format :meth:`TermIndex.build`
+    writes: every meta key, a pinned schema per table, and positional
+    postings (the phrase filter and the synonym position union rely on
+    them)."""
+    from pyspark.sql.types import StructType
+
+    missing = [k for k in _META_KEYS if k not in meta]
+    if not missing:
+        missing = [f"schemas.{t}" for t in _TABLES if t not in meta["schemas"]]
+    if missing:
+        problem = "meta lacks " + ", ".join(missing)
+    else:
+        postings = StructType.fromJson(json.loads(meta["schemas"]["postings"]))
+        if "positions" in postings.fieldNames():
+            return
+        problem = "postings carry no positions"
+    raise OdinsonException(
+        f"{path} is not a TermIndex in the current format ({problem}); "
+        "rebuild it with TermIndex.build"
+    )
+
+
 class TermIndex:
     """A written (sentences, postings) pair plus its meta."""
 
@@ -294,26 +335,21 @@ class TermIndex:
         self.n_term_buckets = int(meta["n_term_buckets"])
         self.n_doc_buckets = int(meta["n_doc_buckets"])
         self.indexed_columns = tuple(meta["indexed_columns"])
-        self.n_sentences = meta.get("n_sentences")
+        self.n_sentences = meta["n_sentences"]
         self.sentences = self._read_table("sentences")
         self.postings = self._read_table("postings")
-        self.stats = (
-            self._read_table("stats")
-            if os.path.isdir(os.path.join(path, "stats"))
-            else None
-        )
+        self.stats = self._read_table("stats")
         # per-query-lifetime memo of multi-term expansions: the engine asks
         # for the estimate and then the keys of the same leaf
         self._mt_cache: dict = {}
         self._df_cache: dict = {}
 
     def _read_table(self, sub: str) -> DataFrame:
-        """Open one of the index tables. Schemas are pinned in the meta file
-        (written at build time), so a table that is currently EMPTY — an
-        index compacted down to zero documents, or built from an empty
-        corpus — still opens (parquet schema inference has no footer to
-        read there). Indexes written before schema pinning fall back to
-        inference."""
+        """Open one of the index tables with the schema pinned in the meta
+        file at build time, so a table that is currently EMPTY — an index
+        compacted down to zero documents, or built from an empty corpus —
+        still opens (parquet schema inference has no footer to read
+        there)."""
         from pyspark.sql.types import StructType
 
         p = os.path.join(self.path, sub)
@@ -325,12 +361,8 @@ class TermIndex:
             import shutil
 
             shutil.move(bak, p)
-        sch = (self.meta.get("schemas") or {}).get(sub)
-        if sch:
-            return self.spark.read.schema(
-                StructType.fromJson(json.loads(sch))
-            ).parquet(p)
-        return self.spark.read.parquet(p)
+        sch = StructType.fromJson(json.loads(self.meta["schemas"][sub]))
+        return self.spark.read.schema(sch).parquet(p)
 
     # -- build --------------------------------------------------------------
 
@@ -440,8 +472,13 @@ class TermIndex:
 
     @staticmethod
     def read(spark: SparkSession, path: str) -> "TermIndex":
+        """Open an index written by :meth:`build`. A directory in any other
+        format (no pinned schema for a table, or postings without
+        positions) raises :class:`OdinsonException` instead of opening with
+        partial pruning."""
         with open(os.path.join(path, _META_FILE)) as f:
             meta = json.load(f)
+        _check_format(path, meta)
         return TermIndex(spark, path, meta)
 
     # -- incremental maintenance --------------------------------------------
@@ -492,7 +529,7 @@ class TermIndex:
         """Append newly annotated sentences (same schema as ``build``'s
         input). New files land inside the existing doc_bucket / tbucket
         partition directories, so query-side pruning is unchanged."""
-        gen = int(self.meta.get("next_gen", 1))
+        gen = int(self.meta["next_gen"])
         cols = [c for c in self.indexed_columns if c in sentences.columns]
         # persist the batch: its lineage may include the (expensive)
         # annotation pipeline, and it feeds the sentence write, the postings
@@ -509,14 +546,7 @@ class TermIndex:
                 .partitionBy("doc_bucket")
                 .parquet(os.path.join(self.path, "sentences"))
             )
-            postings = _postings_of(with_bucket, cols, self.n_term_buckets)
-            if "positions" not in self.postings.columns:
-                # appending into an index built before positional postings:
-                # keep the table uniformly position-less (a mixed table would
-                # read null positions for old rows and degrade those rows to
-                # key intersection). compact() upgrades the whole index.
-                postings = postings.drop("positions")
-            postings = postings.persist()
+            postings = _postings_of(with_bucket, cols, self.n_term_buckets).persist()
             (
                 postings.repartition("tbucket")
                 .sortWithinPartitions("field", "term")
@@ -524,22 +554,19 @@ class TermIndex:
                 .partitionBy("tbucket")
                 .parquet(os.path.join(self.path, "postings"))
             )
-            if self.stats is not None:
-                # stats for just the new batch; readers sum df across files
-                inc_stats = (
-                    postings.groupBy("tbucket", "field", "term")
-                    .agg(F.count(F.lit(1)).alias("df"))
-                )
-                (
-                    inc_stats.repartition("tbucket")
-                    .sortWithinPartitions("field", "term")
-                    .write.mode("append")
-                    .partitionBy("tbucket")
-                    .parquet(os.path.join(self.path, "stats"))
-                )
-            self.meta["n_sentences"] = int(
-                self.meta.get("n_sentences", 0) or 0
-            ) + with_bucket.count()
+            # stats for just the new batch; readers sum df across files
+            inc_stats = (
+                postings.groupBy("tbucket", "field", "term")
+                .agg(F.count(F.lit(1)).alias("df"))
+            )
+            (
+                inc_stats.repartition("tbucket")
+                .sortWithinPartitions("field", "term")
+                .write.mode("append")
+                .partitionBy("tbucket")
+                .parquet(os.path.join(self.path, "stats"))
+            )
+            self.meta["n_sentences"] = int(self.meta["n_sentences"]) + with_bucket.count()
             self.meta["next_gen"] = gen + 1
             self._write_meta()
         finally:
@@ -552,7 +579,7 @@ class TermIndex:
         """Tombstone documents (reference deleteOdinsonDoc). O(ids) write;
         the data files are untouched until ``compact()``. Only versions
         written before this call are hidden (cutoff = current generation)."""
-        cutoff = int(self.meta.get("next_gen", 1))
+        cutoff = int(self.meta["next_gen"])
         df = self.spark.createDataFrame(
             [(str(d), cutoff) for d in doc_ids], "doc_id string, cutoff long"
         )
@@ -573,7 +600,7 @@ class TermIndex:
         The tombstones are written straight from the DataFrame — no driver
         collect, so a bulk re-annotation of 10^8 docs never ships ids
         through the driver."""
-        cutoff = int(self.meta.get("next_gen", 1))
+        cutoff = int(self.meta["next_gen"])
         target_type = dict(self.sentences.dtypes)["doc_id"]
         tomb = (
             sentences.select(F.col("doc_id").cast(target_type))
@@ -588,19 +615,17 @@ class TermIndex:
     def compact(self) -> None:
         """Purge tombstones by rewriting both tables (Lucene's segment
         merge). The only full rewrite in the lifecycle — run it when the
-        tombstone fraction warrants reclaiming the space/filter cost. Also
-        the UPGRADE path: an index built before positional postings gets
-        positions on compaction even with no tombstones pending."""
+        tombstone fraction warrants reclaiming the space/filter cost."""
         import shutil
         import tempfile
 
         tomb = self._tombstones()
-        if tomb is None and "positions" in self.postings.columns:
+        if tomb is None:
             return
         # the rebuilt rows are stamped with the current generation, which is
         # at or above every tombstone cutoff: tombstones a crash leaves
         # behind (they are removed only after the swaps) cannot hide them
-        gen = int(self.meta.get("next_gen", 1))
+        gen = int(self.meta["next_gen"])
         live = self.live_sentences().withColumn("gen", F.lit(gen).cast("long"))
         tmp = tempfile.mkdtemp(dir=os.path.dirname(self.path) or ".")
         rebuilt = TermIndex.build(
@@ -631,8 +656,8 @@ class TermIndex:
             shutil.rmtree(bak, ignore_errors=True)
         shutil.rmtree(os.path.join(self.path, self._TOMBSTONES), ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
-        self.meta["n_sentences"] = rebuilt.meta.get("n_sentences")
-        self.meta["schemas"] = rebuilt.meta.get("schemas")
+        self.meta["n_sentences"] = rebuilt.meta["n_sentences"]
+        self.meta["schemas"] = rebuilt.meta["schemas"]
         self._write_meta()
         self.refresh()
 
@@ -641,12 +666,8 @@ class TermIndex:
         (reference refresh(): searcher manager re-open)."""
         self.sentences = self._read_table("sentences")
         self.postings = self._read_table("postings")
-        self.stats = (
-            self._read_table("stats")
-            if os.path.isdir(os.path.join(self.path, "stats"))
-            else None
-        )
-        self.n_sentences = self.meta.get("n_sentences")
+        self.stats = self._read_table("stats")
+        self.n_sentences = self.meta["n_sentences"]
         # the term dictionary may have grown/shrunk: drop memoized expansions
         self._mt_cache = {}
         self._df_cache = {}
@@ -681,56 +702,55 @@ class TermIndex:
         cached = self._mt_cache.get(key, False)
         if cached is not False:
             return cached
-        out = None
-        if self.stats is not None:
-            from pyspark.sql.functions import pandas_udf
+        from pyspark.sql.functions import pandas_udf
 
-            cand = self.stats.filter(F.col("field").isin(list(fields)))
-            if kind == "fuzzy":
-                # |len(t) - len(q)| <= 2 is necessary for edit distance <= 2
-                n = len(value)
-                cand = cand.filter(F.length("term").between(n - 2, n + 2))
-                q = value
+        cand = self.stats.filter(F.col("field").isin(list(fields)))
+        if kind == "fuzzy":
+            # |len(t) - len(q)| <= 2 is necessary for edit distance <= 2
+            n = len(value)
+            cand = cand.filter(F.length("term").between(n - 2, n + 2))
+            q = value
 
-                @pandas_udf("boolean")
-                def _pred(terms: pd.Series) -> pd.Series:
-                    # absolute import: the closure is shipped by value to
-                    # workers, where a relative import has no package context
-                    from odinson_spark.match.context import _edit_distance_le2
+            @pandas_udf("boolean")
+            def _pred(terms: pd.Series) -> pd.Series:
+                # absolute import: the closure is shipped by value to
+                # workers, where a relative import has no package context
+                from odinson_spark.match.context import _edit_distance_le2
 
-                    return terms.map(
-                        lambda t: t is not None and _edit_distance_le2(q, t)
-                    )
-
-            elif kind == "regex":
-                prefix = _literal_prefix(value)
-                if prefix:
-                    cand = cand.filter(F.col("term").startswith(prefix))
-                pat = value
-
-                @pandas_udf("boolean")
-                def _pred(terms: pd.Series) -> pd.Series:
-                    import re
-
-                    rx = re.compile(pat)
-                    return terms.map(
-                        lambda t: t is not None and rx.fullmatch(t) is not None
-                    )
-
-            else:  # pragma: no cover - parser emits only the two kinds
-                raise ValueError(f"unknown multi-term kind {kind!r}")
-            matched = (
-                cand.filter(_pred(F.col("term")))
-                # append() writes per-batch stats rows: same term, many rows
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-            )
-            rows = matched.limit(max_expansions + 1).collect()
-            if len(rows) <= max_expansions:
-                out = (
-                    [r["term"] for r in rows],
-                    int(sum(int(r["df"]) for r in rows)),
+                return terms.map(
+                    lambda t: t is not None and _edit_distance_le2(q, t)
                 )
+
+        elif kind == "regex":
+            prefix = _literal_prefix(value)
+            if prefix:
+                cand = cand.filter(F.col("term").startswith(prefix))
+            pat = value
+
+            @pandas_udf("boolean")
+            def _pred(terms: pd.Series) -> pd.Series:
+                import re
+
+                rx = re.compile(pat)
+                return terms.map(
+                    lambda t: t is not None and rx.fullmatch(t) is not None
+                )
+
+        else:  # pragma: no cover - parser emits only the two kinds
+            raise ValueError(f"unknown multi-term kind {kind!r}")
+        matched = (
+            cand.filter(_pred(F.col("term")))
+            # append() writes per-batch stats rows: same term, many rows
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"))
+        )
+        rows = matched.limit(max_expansions + 1).collect()
+        out = None
+        if len(rows) <= max_expansions:
+            out = (
+                [r["term"] for r in rows],
+                int(sum(int(r["df"]) for r in rows)),
+            )
         self._mt_cache[key] = out
         return out
 
@@ -759,22 +779,11 @@ class TermIndex:
 
     def _positions_union(self, df: DataFrame) -> DataFrame:
         """Per-key union of position lists across posting rows (synonym
-        fields, or the matched terms of a multi-term expansion).
-
-        Null-preserving: rows from files written before positional postings
-        carry null positions ("unknown", not "none") — if ANY contributing
-        row is null, the union is incomplete evidence, so the key's
-        positions stay null and the phrase filter degrades to key
-        intersection (keeping the row) rather than pruning on a partial
-        list. ``count(positions) < count(*)`` detects the mixed case."""
+        fields, or the matched terms of a multi-term expansion). Positional
+        layers never post null positions (only ``*_flat`` label sets do, and
+        phrases never anchor on those)."""
         return df.groupBy(*self._KEYS).agg(
-            F.when(
-                F.count("positions") < F.count(F.lit(1)),
-                F.lit(None).cast("array<int>"),
-            )
-            .otherwise(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("positions"))))
-            )
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("positions"))))
             .alias("positions")
         )
 
@@ -819,15 +828,12 @@ class TermIndex:
             out = self.postings.filter(cond).select(*self._KEYS).dropDuplicates(self._KEYS)
         return out
 
-    def _term_df(self, fields: Sequence[str], term: str) -> Optional[int]:
+    def _term_df(self, fields: Sequence[str], term: str) -> int:
         """Document frequency of (fields, term) from the stats table — a
         pruned lookup (tbucket partition + sorted-term row-group skip) of a
         table with one row per distinct (field, term), i.e. Lucene's
-        TermStates.docFreq. None when stats are unavailable. Memoized per
-        reader generation: the estimate pass and the join-ordering pass ask
-        for the same terms."""
-        if self.stats is None:
-            return None
+        TermStates.docFreq. Memoized per reader generation: the estimate
+        pass and the join-ordering pass ask for the same terms."""
         key = (tuple(fields), term)
         cached = self._df_cache.get(key)
         if cached is not None:
@@ -849,7 +855,7 @@ class TermIndex:
     def estimated_candidates(self, tree, max_expansions: int = 1024) -> Optional[int]:
         """Upper-bound candidate-key count for the prefilter tree, from
         per-term document frequencies. None = unbounded (the tree has an
-        unconstrained arm or stats are absent). AND takes the tightest arm;
+        unconstrained arm). AND takes the tightest arm;
         OR sums. The engine uses this as Lucene uses docFreq: to decide
         whether the postings plan beats the scan plan."""
         t = type(tree)
@@ -871,9 +877,7 @@ class TermIndex:
             for _, field, value in tree.anchors:
                 fields = self._multi_term_fields(field)
                 if fields is not None:
-                    e = self._term_df(fields, value)
-                    if e is not None:
-                        ests.append(e)
+                    ests.append(self._term_df(fields, value))
             for _, node in tree.multi_anchors:
                 fields = self._multi_term_fields(node.field)
                 if fields is not None:
@@ -942,12 +946,6 @@ class TermIndex:
             # through the dictionary expansion first); the join chain runs
             # over candidate keys only, and the (interpreted-HOF) position
             # arithmetic touches arrays of a few ints on those rows alone.
-            if "positions" not in self.postings.columns:
-                # index built before positions existed: degrade to the
-                # sound key-intersection of the anchor leaves
-                nodes = [pf.PFTerm(f, v) for _, f, v in tree.anchors]
-                nodes += [m for _, m in tree.multi_anchors]
-                return self.candidate_keys(pf.pf_and(nodes), max_expansions)
             # (sort_key, offset, keyed-positions) per usable anchor; lead
             # with the sparsest (Lucene's conjunction order) so the inner
             # joins never carry more keys than its postings
@@ -956,9 +954,8 @@ class TermIndex:
                 fields = self._multi_term_fields(field)
                 if fields is None:
                     continue  # un-indexed layer: skip the anchor (sound)
-                d = self._term_df(fields, value)
                 lookups.append(
-                    ((d is None, d or 0), off, self._term_positions(fields, value))
+                    (self._term_df(fields, value), off, self._term_positions(fields, value))
                 )
             for off, node in tree.multi_anchors:
                 fields = self._multi_term_fields(node.field)
@@ -973,9 +970,7 @@ class TermIndex:
                 if not terms:
                     # the leaf matches NO stored term → nothing can match
                     return self.postings.select(*self._KEYS).limit(0)
-                lookups.append(
-                    ((False, dfsum), off, self._expanded_positions(fields, terms))
-                )
+                lookups.append((dfsum, off, self._expanded_positions(fields, terms)))
             if not lookups:
                 return None
             lookups.sort(key=lambda x: x[0])
@@ -995,13 +990,7 @@ class TermIndex:
                         .withColumn("_base", F.array_intersect("_base", pcol))
                         .drop(pcol)
                     )
-            # null _base = positions unknown for some anchor (rows from a
-            # pre-positions file in a mixed table): keep the key — it came
-            # through every anchor's term lookup, so this is exactly the
-            # sound key-intersection degrade, per row
-            return out.filter(
-                F.col("_base").isNull() | (F.size("_base") > 0)
-            ).select(*self._KEYS)
+            return out.filter(F.size("_base") > 0).select(*self._KEYS)
         if t is pf.PFEdge:
             if "outgoing_flat" not in self.indexed_columns:
                 return None
@@ -1089,15 +1078,14 @@ class IndexedSearchEngine(SearchEngine):
             )
         cand = self.index.candidate_keys(tree, self.max_expansions)
         if cand is None:
-            why = (
-                "term dictionary absent: this index has no stats table, so "
-                "multi-term leaves cannot be rewritten"
-                if self.index.stats is None
-                else "unbounded prefilter: the pattern has no indexable "
-                "necessary condition (pure wildcard, over-cap expansion, or "
-                "an OR with an unconstrained arm)"
+            return (
+                "scan",
+                est,
+                None,
+                "unbounded prefilter: the pattern has no indexable necessary "
+                "condition (pure wildcard, over-cap expansion, or an OR with "
+                "an unconstrained arm)",
             )
-            return ("scan", est, None, why)
         return (
             "index",
             est,

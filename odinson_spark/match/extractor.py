@@ -114,9 +114,7 @@ def _promote(m: Mention, using_state: bool) -> List[Mention]:
     return results
 
 
-def _filter_trigger_overlaps(mentions: List[Mention], allow: bool) -> List[Mention]:
-    if allow:
-        return mentions
+def _filter_trigger_overlaps(mentions: List[Mention]) -> List[Mention]:
     out = []
     for m in mentions:
         if isinstance(m.match, EventMatch):
@@ -155,7 +153,6 @@ class BatchExtractor:
         doc_ids: Sequence[str],
         sent_ids: Sequence[int],
         epoch: Optional[int],
-        disable_match_selector: bool,
     ) -> List[Mention]:
         active = [
             e for e in self.extractors if epoch is None or e.priority.matches(epoch)
@@ -164,7 +161,7 @@ class BatchExtractor:
         for i in range(batch.n_sentences):
             ctx = batch.context(i)
             for e in active:
-                for m in find_matches(e.program, ctx, disable_match_selector):
+                for m in find_matches(e.program, ctx):
                     mentions.append(_mention_from_match(m, doc_ids[i], sent_ids[i], e))
         return mentions
 
@@ -173,12 +170,10 @@ class BatchExtractor:
         batch: SentenceBatch,
         doc_ids: Sequence[str],
         sent_ids: Sequence[int],
-        allow_trigger_overlaps: bool = False,
-        disable_match_selector: bool = False,
     ) -> List[Mention]:
         """Single pass, priorities ignored (ExtractorEngine.scala:374-412)."""
-        found = self._run_epoch(batch, doc_ids, sent_ids, None, disable_match_selector)
-        filtered = _filter_trigger_overlaps(found, allow_trigger_overlaps)
+        found = self._run_epoch(batch, doc_ids, sent_ids, None)
+        filtered = _filter_trigger_overlaps(found)
         out: List[Mention] = []
         for m in filtered:
             out.extend(_promote(m, using_state=False))
@@ -189,8 +184,6 @@ class BatchExtractor:
         batch: SentenceBatch,
         doc_ids: Sequence[str],
         sent_ids: Sequence[int],
-        allow_trigger_overlaps: bool = False,
-        disable_match_selector: bool = False,
     ) -> List[Mention]:
         """Priority cascade with a mention state; runs to quiescence."""
         if batch._mentions is None:
@@ -201,8 +194,8 @@ class BatchExtractor:
         min_iterations = max((e.priority.min_epoch() for e in self.extractors), default=1)
         epoch = 1
         while epoch <= self.max_epochs:
-            found = self._run_epoch(batch, doc_ids, sent_ids, epoch, disable_match_selector)
-            filtered = _filter_trigger_overlaps(found, allow_trigger_overlaps)
+            found = self._run_epoch(batch, doc_ids, sent_ids, epoch)
+            filtered = _filter_trigger_overlaps(found)
             processed: List[Mention] = []
             for m in filtered:
                 processed.extend(_promote(m, using_state=True))

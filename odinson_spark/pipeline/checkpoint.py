@@ -36,22 +36,16 @@ class CheckpointedPipeline:
         self,
         name: str,
         fn: Callable[[], DataFrame],
-        partition_by: Optional[list] = None,
-        force: bool = False,
     ) -> DataFrame:
         """Compute-or-load. ``fn`` is only invoked when the stage output is
         missing; downstream stages always read the materialized output, so a
         crashed run resumes from the last completed stage."""
         path = self._path(name)
         t0 = time.time()
-        if not force and self.exists(name):
+        if self.exists(name):
             self.metrics.append({"stage": name, "skipped": True, "secs": 0.0})
             return self.spark.read.parquet(path)
-        df = fn()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        fn().write.mode("overwrite").parquet(path)
         self.metrics.append(
             {"stage": name, "skipped": False, "secs": round(time.time() - t0, 3)}
         )

@@ -436,8 +436,6 @@ def extract_mentions_df(
     sentences: DataFrame,
     extractors: Sequence[Extractor],
     use_state: bool = False,
-    allow_trigger_overlaps: bool = False,
-    disable_match_selector: bool = False,
     extra_token_fields: Sequence[str] = (),
 ) -> DataFrame:
     """Run the grammar; one matcher pass per Arrow batch, no shuffle.
@@ -474,13 +472,9 @@ def extract_mentions_df(
             if raws is None:
                 raws = batch.raw_layers.get("word")
             if use_state:
-                mentions = runner.extract_mentions(
-                    batch, doc_ids, sent_ids, allow_trigger_overlaps, disable_match_selector
-                )
+                mentions = runner.extract_mentions(batch, doc_ids, sent_ids)
             else:
-                mentions = runner.extract_no_state(
-                    batch, doc_ids, sent_ids, allow_trigger_overlaps, disable_match_selector
-                )
+                mentions = runner.extract_no_state(batch, doc_ids, sent_ids)
             shas = list(pdf["content_sha"]) if "content_sha" in pdf.columns else [None] * len(pdf)
             idx_by_key = {(doc_ids[i], sent_ids[i]): i for i in range(len(doc_ids))}
             from ..match.matches import EventMatch

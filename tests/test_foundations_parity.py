@@ -2,10 +2,8 @@
 
 * TestFields.scala:18-93 — implicit/explicit norm case folding, raw case
   sensitivity, arbitrary configured token fields end-to-end.
-* TestExtractorEngine.scala:19-114 — simple query, getTokensForSpan on
-  stored/non-stored fields, invalid-character replacement.
-* TestMention.scala:23-91 — lazy population levels, argument population,
-  copy semantics.
+* TestExtractorEngine.scala:19-114 — simple query, invalid-character
+  replacement.
 * TestExceptions.scala:8-20 — exception type hierarchy.
 * TestCustomTokenization.scala:9-21 — tokens with internal whitespace.
 """
@@ -15,11 +13,6 @@ import json
 import pytest
 
 from odinson_spark.errors import OdinsonException
-from odinson_spark.gather import (
-    VerboseLevels,
-    get_tokens_for_span,
-    lazy_mentions,
-)
 from odinson_spark.lang.compiler import PatternCompiler
 from odinson_spark.lang.parser import ParseError, QueryParser
 from odinson_spark.lang.rules import RuleReader
@@ -84,7 +77,8 @@ def fizz_batch():
 
 def test_index_arbitrary_fields(fizz_batch):
     # ee2.getTokensForSpan(0, "fizzbuzz", 2, 3) should contain only "fizz"
-    assert get_tokens_for_span(fizz_batch, 0, "fizzbuzz", 2, 3) == ["fizz"]
+    assert fizz_batch.has_field("fizzbuzz")
+    assert list(fizz_batch.raw_layers["fizzbuzz"][0][2:3]) == ["fizz"]
 
 
 def test_compile_pattern_with_arbitrary_field():
@@ -171,46 +165,6 @@ def test_simple_query_over_two_docs():
     assert len(hits) == 2  # totalHits == 2, one per document
 
 
-EVENT_RULES = """
-rules:
-  - name: testrule
-    type: event
-    label: Test
-    pattern: |
-      trigger = [lemma=eat]
-      subject: ^NP = >nsubj []
-      object: ^NP = >dobj []
-"""
-
-
-def test_get_tokens_for_span_existing_field(becky):
-    extractors, _ = RuleReader().compile_rules(EVENT_RULES)
-    mentions = BatchExtractor(extractors).extract_mentions(becky, ["becky"], [0])
-    lazy = [
-        m
-        for m in lazy_mentions(becky, mentions, stored_fields=("raw", "lemma"))
-        if m.label == "Test"
-    ]
-    assert len(lazy) == 1
-    m = lazy[0]
-    m.populate_fields(VerboseLevels.All)
-    assert m.text == "ate"
-    assert m.mention_fields["lemma"] == ["eat"]
-
-
-def test_get_tokens_for_span_missing_field_raises(becky):
-    extractors, _ = RuleReader().compile_rules(EVENT_RULES)
-    mentions = BatchExtractor(extractors).extract_mentions(becky, ["becky"], [0])
-    lazy = [
-        m
-        for m in lazy_mentions(becky, mentions, stored_fields=("raw", "lemma"))
-        if m.label == "Test"
-    ]
-    assert len(lazy) == 1
-    with pytest.raises(OdinsonException):
-        get_tokens_for_span(becky, lazy[0].sent_idx, "notAField", lazy[0].start, lazy[0].end)
-
-
 def test_invalid_characters_replaced_before_indexing(example_docs):
     """TestExtractorEngine.scala:96-114 — a whitespace-only token must not
     shift positions; the traversal lands on AKT1."""
@@ -219,76 +173,6 @@ def test_invalid_characters_replaced_before_indexing(example_docs):
     assert len(hits) == 1
     i, m = hits[0]
     assert " ".join(batch.raw_layers["raw"][i][m.start : m.end]) == "AKT1"
-
-
-# ---------------------------------------------------------------------------
-# TestMention.scala:23-91
-# ---------------------------------------------------------------------------
-
-BEARS_RULES = """
-rules:
-  - name: bears-rule
-    label: Bear
-    type: event
-    priority: 1
-    pattern: |
-      trigger = bears
-      bearType = >amod []
-"""
-
-
-def _bear_mentions(becky, stored_fields=("raw",)):
-    extractors, _ = RuleReader().compile_rules(BEARS_RULES)
-    mentions = BatchExtractor(extractors).extract_mentions(becky, ["becky"], [0])
-    return lazy_mentions(becky, mentions, stored_fields=stored_fields)
-
-
-def test_mention_not_populated_unless_asked(becky):
-    mentions = _bear_mentions(becky)
-    assert len(mentions) == 2  # the main mention and the untyped arg
-    event = [m for m in mentions if m.label is not None][0]
-    with pytest.raises(OdinsonException):
-        _ = event.text
-    event.populate_fields(VerboseLevels.All)
-    assert event.text == "bears"
-
-
-def test_mention_populated_to_level(becky):
-    mentions = _bear_mentions(becky, stored_fields=("raw", "lemma"))
-    assert len(mentions) == 2
-    event = [m for m in mentions if m.label is not None][0]
-    assert event.document_fields == {} and event.mention_fields == {}
-
-    event.populate_fields(VerboseLevels.Display)
-    assert event.has_fields_populated(VerboseLevels.Display)
-    assert set(event.document_fields) == {"raw"}
-    assert set(event.mention_fields) == {"raw"}
-
-    event.populate_fields(VerboseLevels.All)
-    assert event.has_fields_populated(VerboseLevels.All)
-    assert event.has_fields_populated(VerboseLevels.Display)
-    assert set(event.document_fields) == {"raw", "lemma"}
-    assert set(event.mention_fields) == {"raw", "lemma"}
-
-
-def test_mention_arguments_populated(becky):
-    mentions = _bear_mentions(becky, stored_fields=("raw", "lemma"))
-    event = [m for m in mentions if m.label is not None][0]
-    event.populate_fields(VerboseLevels.Display)
-    bear_type = event.arguments["bearType"][0]
-    assert bear_type.has_fields_populated(VerboseLevels.Display)
-    assert set(bear_type.document_fields) == {"raw"}
-    assert set(bear_type.mention_fields) == {"raw"}
-
-
-def test_mention_copy_preserves_population_level(becky):
-    mentions = _bear_mentions(becky, stored_fields=("raw", "lemma"))
-    event = [m for m in mentions if m.label is not None][0]
-    event.populate_fields(VerboseLevels.Display)
-    copy = event.copy(label="NewEvent")
-    assert copy != event
-    assert copy.has_fields_populated(VerboseLevels.Display)
-    assert not copy.has_fields_populated(VerboseLevels.All)
 
 
 # ---------------------------------------------------------------------------

@@ -14,11 +14,13 @@ Invariants under test:
 """
 
 import os
+import re
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from odinson_spark.errors import OdinsonException
 from odinson_spark.index import DEFAULT_INDEXED_COLUMNS, TermIndex
 from odinson_spark.pipeline.extract import tokenize_documents
 from odinson_spark.plans import prefilter as pf
@@ -180,38 +182,6 @@ class TestIncremental:
         assert inc.sentences.count() == live
         assert inc._tombstones() is None
         assert self._hits(inc) == after
-
-    def test_compact_upgrades_positionless_index(self, spark, inc, tmp_path):
-        """An index built before positional postings gains positions on
-        compact() even with no tombstones pending (the documented upgrade
-        path for the add_documents position-drop guard)."""
-        import shutil
-
-        tmp_pl = str(tmp_path / "pl")
-        inc.postings.drop("positions").write.parquet(tmp_pl)
-        shutil.rmtree(os.path.join(inc.path, "postings"))
-        shutil.move(tmp_pl, os.path.join(inc.path, "postings"))
-        # a real pre-positions index predates schema pinning too
-        inc.meta.pop("schemas", None)
-        inc._write_meta()
-        inc.refresh()
-        assert "positions" not in inc.postings.columns
-        # appends into the legacy index stay position-less (uniform table)
-        new = spark.createDataFrame(
-            [(3000, "quokka fast quokka", "en")],
-            "doc_id long, text string, lang string",
-        )
-        inc.add_documents(tokenize_documents(new))
-        assert "positions" not in inc.postings.columns
-        inc.compact()
-        assert "positions" in inc.postings.columns
-        # positional pruning live again: alpha/gamma never adjacent
-        keys = inc.candidate_keys(
-            pf.PFPhrase(((0, "norm", "alpha"), (1, "norm", "gamma")))
-        )
-        assert keys.count() == 0
-        # and the appended doc survived the upgrade
-        assert inc.candidate_keys(pf.PFTerm("norm", "quokka")).count() == 1
 
     @pytest.mark.parametrize("crash", ["after_sentences_swap", "before_tombstone_purge"])
     def test_compact_crash_keeps_live_docs(self, spark, inc, monkeypatch, crash):
@@ -426,18 +396,6 @@ class TestPhrasePruning:
             == 8
         )
 
-    def test_legacy_index_without_positions_degrades(self, index):
-        node = pf.PFPhrase(((0, "norm", "alpha"), (1, "norm", "gamma")))
-        legacy = index.postings.drop("positions")
-        orig = index.postings
-        try:
-            index.postings = legacy
-            keys = index.candidate_keys(node)
-            # soundness floor: the AND-of-terms superset, no positional prune
-            assert keys.count() == 40
-        finally:
-            index.postings = orig
-
     def test_multi_term_anchor_in_phrase(self, index):
         # "[norm=/be.*/] gamma": the regex token anchors POSITIONALLY
         # through the dictionary expansion (beta is the only be.* term);
@@ -474,27 +432,6 @@ class TestPhrasePruning:
                 multi_anchors=((1, pf.PFMultiTerm("norm", "regex", "qu.*")),),
             )
         ]
-
-    def test_null_positions_degrade_to_key_intersection(self, index):
-        """Rows whose positions are unknown (a pre-positions file inside a
-        mixed table) must KEEP their keys — the phrase filter degrades to
-        key intersection per row instead of dropping true matches."""
-        orig = index.postings
-        patched = orig.withColumn(
-            "positions",
-            F.when(F.col("term") == "alpha", F.lit(None).cast("array<int>"))
-            .otherwise(F.col("positions")),
-        )
-        try:
-            index.postings = patched
-            keys = index.candidate_keys(
-                pf.PFPhrase(((0, "norm", "alpha"), (1, "norm", "gamma")))
-            )
-            # with known positions this is 0 (never adjacent); with alpha's
-            # positions unknown it must fall back to co-occurrence (40)
-            assert keys.count() == 40
-        finally:
-            index.postings = orig
 
     def test_phrase_query_takes_candidate_join_route(self, index, scan_engine):
         eng = index.engine(max_candidate_frac=1.0)
@@ -561,33 +498,55 @@ def test_explain_reports_route_and_reason(index):
     assert info["estimated_candidates"] is None
 
 
-def test_explain_names_missing_dictionary(spark, corpus, tmp_path):
-    """On an index without a stats table a multi-term pattern routes to
-    scan, and explain() must name the REAL cause (dictionary absent), not
-    the generic unbounded-prefilter reason."""
+@pytest.mark.parametrize("case", ["no_schemas", "positionless_postings", "no_stats_schema"])
+def test_read_rejects_foreign_format(spark, index, tmp_path, case):
+    """read() opens only the format build() writes: a directory whose meta
+    pins no schemas, pins position-less postings, or has no stats table is
+    refused with an error naming it, not opened with partial pruning."""
+    import json
     import shutil
 
-    out = str(tmp_path / "nostats_index")
-    idx = TermIndex.build(
-        tokenize_documents(corpus), out, n_term_buckets=8, n_doc_buckets=4
+    path = str(tmp_path / "foreign_index")
+    shutil.copytree(index.path, path)
+    meta_path = os.path.join(path, "odinson_index_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    if case == "no_schemas":
+        del meta["schemas"]
+    elif case == "positionless_postings":
+        postings = json.loads(meta["schemas"]["postings"])
+        postings["fields"] = [c for c in postings["fields"] if c["name"] != "positions"]
+        meta["schemas"]["postings"] = json.dumps(postings)
+    else:
+        del meta["schemas"]["stats"]
+        shutil.rmtree(os.path.join(path, "stats"))
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(OdinsonException, match=re.escape(path)):
+        TermIndex.read(spark, path)
+
+
+def test_positional_postings_never_null(spark, index, tmp_path):
+    """Every postings row of a positional layer (any field not ending in
+    ``_flat``) carries positions, at build and after an append: the phrase
+    filter and the synonym position union rely on it."""
+    import shutil
+
+    def null_positions(idx):
+        positional = idx.postings.filter(~F.col("field").endswith("_flat"))
+        assert positional.count() > 0
+        return positional.filter(F.col("positions").isNull()).count()
+
+    assert null_positions(index) == 0
+    path = str(tmp_path / "appended_index")
+    shutil.copytree(index.path, path)
+    idx = TermIndex.read(spark, path)
+    new = spark.createDataFrame(
+        [(4000, "zebra fast zebra", "en")], "doc_id long, text string, lang string"
     )
-    shutil.rmtree(os.path.join(out, "stats"))
-    idx.refresh()
-    assert idx.stats is None
-    info = idx.engine().explain("[norm=/qu.*/]")
-    assert info["route"] == "scan" and "dictionary absent" in info["reason"]
-
-
-def test_shell_explain_command(spark, index):
-    import io
-
-    from odinson_spark.shell import OdinsonShell
-
-    out = io.StringIO()
-    sh = OdinsonShell(index.engine(max_candidate_frac=0.5), out=out)
-    sh.handle(":explain quick")
-    text = out.getvalue()
-    assert "route = index" in text and "estimated_candidates = 8" in text
+    idx.add_documents(tokenize_documents(new))
+    assert idx.candidate_keys(pf.PFTerm("norm", "zebra")).count() == 1
+    assert null_positions(idx) == 0
 
 
 def test_random_patterns_index_equals_scan(spark, index, scan_engine):

@@ -118,3 +118,20 @@ def test_every_gate_query_has_an_oracle():
     import __spark_entry__ as em
 
     assert set(em.queries()) == set(em.oracle_sql())
+
+
+def test_every_module_imports():
+    """Every module of the package imports without a Spark session, so an
+    import left dangling by a deletion fails here in seconds instead of
+    later inside a Python worker."""
+    import importlib
+    import pkgutil
+
+    import odinson_spark
+
+    names = [
+        m.name for m in pkgutil.walk_packages(odinson_spark.__path__, "odinson_spark.")
+    ]
+    assert "odinson_spark.index" in names
+    for name in names:
+        importlib.import_module(name)
