@@ -498,9 +498,7 @@ rules:
         from odinson_spark.pipeline.extract import tokenize_documents
 
         tmp = tempfile.mkdtemp(prefix="odx_")
-        idx = TermIndex.build(
-            tokenize_documents(_t(s, d, "documents")), tmp, n_term_buckets=16, n_doc_buckets=8
-        )
+        idx = TermIndex.build(tokenize_documents(_t(s, d, "documents")), tmp)
         return (
             idx.engine(**eng_kwargs)
             .mentions(pattern)
@@ -546,9 +544,7 @@ rules:
         base = docs.filter(F.col("doc_id").cast("long") % 10 != 3)
         added = docs.filter(F.col("doc_id").cast("long") % 10 == 3)
         tmp = tempfile.mkdtemp(prefix="odx_inc_")
-        idx = TermIndex.build(
-            tokenize_documents(base), tmp, n_term_buckets=16, n_doc_buckets=8
-        )
+        idx = TermIndex.build(tokenize_documents(base), tmp)
         idx.add_documents(tokenize_documents(added))
         victims = [
             r[0]

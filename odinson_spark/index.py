@@ -25,9 +25,14 @@ This module materializes that access path with Spark primitives:
 * **stats/** — per-(field, term) document frequency, bucketed like the
   postings: the term dictionary and the cost model's input.
 
-``odinson_index_meta.json`` pins each table's schema. ``TermIndex.read``
-opens only the format ``TermIndex.build`` writes and raises
-``OdinsonException`` for any other directory.
+The layout is derived from the input, never passed in: both bucket counts
+follow one rule from the row count ``build`` takes anyway
+(:func:`_n_buckets`), and the inverted columns are
+``DEFAULT_INDEXED_COLUMNS`` present in the input. ``odinson_index_meta.json``
+records the layout and pins each table's schema; ``compact()`` rebuilds with
+the recorded layout. ``TermIndex.read`` opens only the format
+``TermIndex.build`` writes and raises ``OdinsonException`` for any other
+directory.
 
 Query execution composes the existing prefilter algebra
 (plans/prefilter.py): each required literal term becomes a pruned postings
@@ -40,7 +45,7 @@ unchanged, so index-path results are identical to scan-path results
 
 Regex and fuzzy leaves are rewritten against the term dictionary (the stats
 table) before the postings lookup — Lucene's MultiTermQuery rewrite — with a
-``max_expansions`` cap past which the scan plan is used instead
+``MAX_EXPANSIONS`` cap past which the scan plan is used instead
 (``_expand_multi_term``). Truly unconstrained patterns (pure wildcards) fall
 back to the full scan explicitly.
 
@@ -85,18 +90,61 @@ DEFAULT_INDEXED_COLUMNS = (
 
 _META_FILE = "odinson_index_meta.json"
 _TABLES = ("sentences", "postings", "stats")
-_META_KEYS = (
-    "n_term_buckets",
-    "n_doc_buckets",
-    "indexed_columns",
-    "schemas",
-    "next_gen",
-    "n_sentences",
-)
+_LAYOUT_KEYS = ("n_term_buckets", "n_doc_buckets", "indexed_columns")
+_META_KEYS = (*_LAYOUT_KEYS, "schemas", "next_gen", "n_sentences")
+
+# Lucene caps multi-term rewrites (maxExpansions / maxClauseCount); past the
+# cap the scan plan is both sound and usually cheaper
+MAX_EXPANSIONS = 1024
 
 
 def _bucket(col, n: int):
     return F.pmod(F.crc32(col.cast("string")), F.lit(n)).cast("int")
+
+
+def _n_buckets(n_rows: int) -> int:
+    """Bucket count for both partitionings (doc_bucket, tbucket), from the
+    row count alone. Dynamic partition pruning is BUCKET-granular, and
+    uniformly-hashed candidate docs touch ~min(k, n_buckets) buckets — k
+    selective matches admit ~k/n_buckets of the corpus. Too few buckets
+    neuters pruning (measured: 20 candidates × 32 buckets admitted 62.5% of
+    a 5M-row corpus); too many makes kilobyte files at small scale (a fixed
+    64 term buckets turned ~1 MB of sentences into a 255-file index). ~5k
+    sentences per bucket keeps both ends sane from test corpora to 100 TB,
+    where the 65536 cap ≈ listing cost and row groups inside a bucket still
+    skip on the sorted term column."""
+    return max(8, min(65536, n_rows // 5000 or 8))
+
+
+def _write_partitioned(df: DataFrame, path: str, by: str, mode: str, sort=()) -> None:
+    """Write ``df`` partitionBy(``by``), one file per bucket per write:
+    partitionBy alone writes one file per (task × bucket). ``sort`` orders
+    rows within files so parquet min/max stats skip row groups."""
+    out = df.repartition(by)
+    if sort:
+        out = out.sortWithinPartitions(*sort)
+    out.write.mode(mode).partitionBy(by).parquet(path)
+
+
+def _stats_of(postings: DataFrame) -> DataFrame:
+    """Per-(field, term) document frequency — Lucene's cost model input
+    (TermStates.docFreq drives its query planning): the engine skips the
+    candidate join for terms whose postings are a large corpus fraction,
+    where a scan is the cheaper plan. Small table (distinct terms × fields),
+    same tbucket pruning as the postings. Appends add per-batch rows that
+    readers sum."""
+    return postings.groupBy("tbucket", "field", "term").agg(F.count(F.lit(1)).alias("df"))
+
+
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` to a temp file, then rename it over ``path``: a crash
+    mid-write leaves the previous file intact, never a truncated one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def _shift_by(off: int):
@@ -222,86 +270,6 @@ def _postings_of(with_bucket: DataFrame, cols: Sequence[str], n_term_buckets: in
     )
 
 
-def _postings_of_sql(src: DataFrame, cols: Sequence[str], n_term_buckets: int) -> DataFrame:
-    """Pure-JVM postings builder — identical rows to :func:`_postings_of`
-    (asserted in tests/test_index.py), no Python boundary.
-
-    One fused pass: every layer's tokens become (field, term, pos) structs
-    via ``transform`` (pos = array index for positional layers, null for
-    flat label sets), one ``explode`` flattens them, and a single
-    ``groupBy`` assembles ascending position lists with
-    ``sort_array(collect_list(pos))`` — aggregation, not an interpreted
-    per-row loop, so the build-side hot path stays in the JVM. A/B'd
-    against the mapInPandas route (BENCH.md 'postings builder A/B'); the
-    Python route is kept for the equality test."""
-    flat = {c for c in cols if c.endswith("_flat")}
-
-    # factories, not default-arg lambdas: pyspark counts a lambda's
-    # parameters (defaults included) to pick the unary/binary HOF form
-    # nullif with an impossible sentinel: same constant, but typed nullable
-    # (Spark 4's analyzer folds an else-less when(true, lit) back to a
-    # non-nullable literal) — keeps the output schema json byte-identical
-    # to the mapInPandas route's (meta pins it)
-    def _field_lit(name):
-        return F.nullif(F.lit(name), F.lit("\x00"))
-
-    def _flat_struct(name):
-        return lambda x: F.struct(
-            _field_lit(name).alias("field"),
-            x.alias("term"),
-            F.lit(None).cast("int").alias("pos"),
-        )
-
-    def _pos_struct(name):
-        return lambda x, i: F.struct(
-            _field_lit(name).alias("field"),
-            x.alias("term"),
-            i.cast("int").alias("pos"),
-        )
-
-    parts = []
-    for c in cols:
-        col = F.coalesce(F.col(c), F.array().cast(src.schema[c].dataType))
-        parts.append(F.transform(col, _flat_struct(c) if c in flat else _pos_struct(c)))
-    ex = src.select(
-        "doc_bucket", "doc_id", "sent_id", F.explode(F.concat(*parts)).alias("e")
-    ).filter(F.col("e.term").isNotNull())
-    grouped = (
-        ex.groupBy(
-            F.col("e.field").alias("field"),
-            F.col("e.term").alias("term"),
-            "doc_bucket",
-            "doc_id",
-            "sent_id",
-        )
-        .agg(
-            F.when(F.count("e.pos") > 0, F.sort_array(F.collect_list("e.pos")))
-            .otherwise(F.lit(None).cast("array<int>"))
-            .alias("positions")
-        )
-    )
-    # .to(): align nullability with the mapInPandas route's declared schema —
-    # meta pins postings.schema at build time, so the two routes must write
-    # byte-identical schema json
-    from pyspark.sql import types as T
-
-    target = T.StructType(
-        [
-            T.StructField("field", T.StringType()),
-            T.StructField("term", T.StringType()),
-            src.schema["doc_bucket"],
-            src.schema["doc_id"],
-            src.schema["sent_id"],
-            T.StructField("positions", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    return (
-        grouped.select("field", "term", "doc_bucket", "doc_id", "sent_id", "positions")
-        .to(target)
-        .withColumn("tbucket", _bucket(F.col("term"), n_term_buckets))
-    )
-
-
 def _check_format(path: str, meta: dict) -> None:
     """Raise unless ``meta`` describes the format :meth:`TermIndex.build`
     writes: every meta key, a pinned schema per table, and positional
@@ -339,8 +307,8 @@ class TermIndex:
         self.sentences = self._read_table("sentences")
         self.postings = self._read_table("postings")
         self.stats = self._read_table("stats")
-        # per-query-lifetime memo of multi-term expansions: the engine asks
-        # for the estimate and then the keys of the same leaf
+        # per-reader-generation memo of multi-term expansions and document
+        # frequencies: a query is planned more than once (explain, then run)
         self._mt_cache: dict = {}
         self._df_cache: dict = {}
 
@@ -367,26 +335,24 @@ class TermIndex:
     # -- build --------------------------------------------------------------
 
     @staticmethod
-    def build(
-        sentences: DataFrame,
-        path: str,
-        n_term_buckets: int = 64,
-        n_doc_buckets: Optional[int] = None,
-        indexed_columns: Sequence[str] = DEFAULT_INDEXED_COLUMNS,
-    ) -> "TermIndex":
-        cols = [c for c in indexed_columns if c in sentences.columns]
+    def build(sentences: DataFrame, path: str) -> "TermIndex":
+        """Write the index of ``sentences`` to ``path``. The layout is
+        derived from the input: both bucket counts from its row count, the
+        inverted columns from ``DEFAULT_INDEXED_COLUMNS`` present in it."""
         n_rows = sentences.count()
-        if n_doc_buckets is None:
-            # Derived, not fixed: dynamic partition pruning is BUCKET-
-            # granular, and uniformly-hashed candidate docs touch ~min(k,
-            # n_buckets) buckets — k selective matches admit ~k/n_buckets of
-            # the corpus. Too few buckets neuters pruning (measured: 20
-            # candidates × 32 buckets admitted 62.5% of a 5M-row corpus);
-            # too many makes kilobyte files at small scale. ~5k sentences
-            # per bucket keeps both ends sane from test corpora to 100 TB
-            # (where the 65536 cap ≈ listing cost, and row groups inside a
-            # bucket still skip on the sorted term column).
-            n_doc_buckets = max(8, min(65536, n_rows // 5000 or 8))
+        n_buckets = _n_buckets(n_rows)
+        layout = {
+            "n_term_buckets": n_buckets,
+            "n_doc_buckets": n_buckets,
+            "indexed_columns": [c for c in DEFAULT_INDEXED_COLUMNS if c in sentences.columns],
+        }
+        return TermIndex._write(sentences, path, layout, n_rows)
+
+    @staticmethod
+    def _write(sentences: DataFrame, path: str, layout: dict, n_rows: int) -> "TermIndex":
+        """Write the three tables and the meta of an index with the given
+        layout — the one write path of ``build`` and ``compact``."""
+        spark = sentences.sparkSession
         # gen = write generation (Lucene's sequence number): lets a delete
         # tombstone doc versions written BEFORE it without hiding a later
         # re-add of the same doc_id (see delete_documents/live_sentences).
@@ -394,67 +360,31 @@ class TermIndex:
         # with the generation they are rewritten at
         gen = F.col("gen") if "gen" in sentences.columns else F.lit(0)
         with_bucket = sentences.withColumn(
-            "doc_bucket", _bucket(F.col("doc_id"), n_doc_buckets)
+            "doc_bucket", _bucket(F.col("doc_id"), layout["n_doc_buckets"])
         ).withColumn("gen", gen.cast("long"))
-        # repartition on the bucket first: partitionBy alone writes one file
-        # per (task × bucket) — tasks × n_doc_buckets kilobyte files
-        (
-            with_bucket.repartition("doc_bucket")
-            .write.mode("overwrite")
-            .partitionBy("doc_bucket")
-            .parquet(os.path.join(path, "sentences"))
-        )
-
-        spark = sentences.sparkSession
+        _write_partitioned(with_bucket, os.path.join(path, "sentences"), "doc_bucket", "overwrite")
         # postings from the files just written, not the upstream plan: the
         # (possibly expensive) annotation pipeline ran once for the sentence
         # write; the postings pass re-reads columnar parquet instead of
-        # re-executing it. The builder itself stays the Arrow-batched
-        # mapInPandas route: the pure-JVM explode+groupBy alternative
-        # (_postings_of_sql) was A/B'd at 50k docs and LOST 4-6× — 27M
-        # per-token structs through interpreted transform + an
-        # ObjectHashAggregate collect_list cost far more than a per-sentence
-        # dict loop that emits already-grouped rows (BENCH.md 'postings
-        # builder A/B').
+        # re-executing it. Explicit schemas on the read-backs: an empty
+        # corpus writes no part files, and a schema-less read of an empty
+        # dir cannot infer one
         written_sentences = spark.read.schema(with_bucket.schema).parquet(
             os.path.join(path, "sentences")
         )
-        postings = _postings_of(written_sentences, cols, n_term_buckets)
-        (
-            postings.repartition("tbucket")
-            .sortWithinPartitions("field", "term")
-            .write.mode("overwrite")
-            .partitionBy("tbucket")
-            .parquet(os.path.join(path, "postings"))
+        postings = _postings_of(
+            written_sentences, layout["indexed_columns"], layout["n_term_buckets"]
         )
-        # per-(field, term) document frequency — Lucene's cost model input
-        # (TermStates.docFreq drives its query planning): the engine skips
-        # the candidate join for terms whose postings are a large corpus
-        # fraction, where a scan is the cheaper plan. Small table (distinct
-        # terms × fields), same tbucket pruning as the postings. Computed
-        # from the files just written, not the upstream plan, so the
-        # (possibly expensive) annotation pipeline doesn't re-run.
-        # explicit schema: an empty corpus writes no part files, and a
-        # schema-less read of an empty dir cannot infer one
-        written = spark.read.schema(postings.schema).parquet(
-            os.path.join(path, "postings")
+        _write_partitioned(
+            postings, os.path.join(path, "postings"), "tbucket", "overwrite", ("field", "term")
         )
-        stats = (
-            written.groupBy("tbucket", "field", "term")
-            .agg(F.count(F.lit(1)).alias("df"))
+        written = spark.read.schema(postings.schema).parquet(os.path.join(path, "postings"))
+        stats = _stats_of(written)
+        _write_partitioned(
+            stats, os.path.join(path, "stats"), "tbucket", "overwrite", ("field", "term")
         )
-        (
-            stats.repartition("tbucket")
-            .sortWithinPartitions("field", "term")
-            .write.mode("overwrite")
-            .partitionBy("tbucket")
-            .parquet(os.path.join(path, "stats"))
-        )
-
         meta = {
-            "n_term_buckets": n_term_buckets,
-            "n_doc_buckets": n_doc_buckets,
-            "indexed_columns": cols,
+            **layout,
             # pinned table schemas: keep the index openable when a table is
             # empty (zero-doc corpus, or compacted down to nothing)
             "schemas": {
@@ -466,18 +396,23 @@ class TermIndex:
             "n_sentences": n_rows,
         }
         # driver-side metadata file, like a table format's own manifest
-        with open(os.path.join(path, _META_FILE), "w") as f:
-            json.dump(meta, f)
-        return TermIndex(sentences.sparkSession, path, meta)
+        _write_json(os.path.join(path, _META_FILE), meta)
+        return TermIndex(spark, path, meta)
 
     @staticmethod
     def read(spark: SparkSession, path: str) -> "TermIndex":
         """Open an index written by :meth:`build`. A directory in any other
-        format (no pinned schema for a table, or postings without
-        positions) raises :class:`OdinsonException` instead of opening with
-        partial pruning."""
+        format (undecodable meta, no pinned schema for a table, or postings
+        without positions) raises :class:`OdinsonException` instead of
+        opening with partial pruning."""
         with open(os.path.join(path, _META_FILE)) as f:
-            meta = json.load(f)
+            try:
+                meta = json.load(f)
+            except ValueError as e:
+                raise OdinsonException(
+                    f"{path} is not a TermIndex: unreadable {_META_FILE} ({e}); "
+                    "rebuild it with TermIndex.build"
+                ) from e
         _check_format(path, meta)
         return TermIndex(spark, path, meta)
 
@@ -499,8 +434,7 @@ class TermIndex:
     _TOMBSTONES = "tombstones"
 
     def _write_meta(self) -> None:
-        with open(os.path.join(self.path, _META_FILE), "w") as f:
-            json.dump(self.meta, f)
+        _write_json(os.path.join(self.path, _META_FILE), self.meta)
 
     def _tombstones(self) -> Optional[DataFrame]:
         p = os.path.join(self.path, self._TOMBSTONES)
@@ -540,31 +474,17 @@ class TermIndex:
         ).withColumn("gen", F.lit(gen).cast("long")).persist()
         postings = None
         try:
-            (
-                with_bucket.repartition("doc_bucket")
-                .write.mode("append")
-                .partitionBy("doc_bucket")
-                .parquet(os.path.join(self.path, "sentences"))
+            _write_partitioned(
+                with_bucket, os.path.join(self.path, "sentences"), "doc_bucket", "append"
             )
             postings = _postings_of(with_bucket, cols, self.n_term_buckets).persist()
-            (
-                postings.repartition("tbucket")
-                .sortWithinPartitions("field", "term")
-                .write.mode("append")
-                .partitionBy("tbucket")
-                .parquet(os.path.join(self.path, "postings"))
+            _write_partitioned(
+                postings, os.path.join(self.path, "postings"), "tbucket", "append",
+                ("field", "term"),
             )
-            # stats for just the new batch; readers sum df across files
-            inc_stats = (
-                postings.groupBy("tbucket", "field", "term")
-                .agg(F.count(F.lit(1)).alias("df"))
-            )
-            (
-                inc_stats.repartition("tbucket")
-                .sortWithinPartitions("field", "term")
-                .write.mode("append")
-                .partitionBy("tbucket")
-                .parquet(os.path.join(self.path, "stats"))
+            _write_partitioned(
+                _stats_of(postings), os.path.join(self.path, "stats"), "tbucket", "append",
+                ("field", "term"),
             )
             self.meta["n_sentences"] = int(self.meta["n_sentences"]) + with_bucket.count()
             self.meta["next_gen"] = gen + 1
@@ -575,23 +495,30 @@ class TermIndex:
                 postings.unpersist()
         self.refresh()
 
-    def delete_documents(self, doc_ids: Sequence) -> None:
-        """Tombstone documents (reference deleteOdinsonDoc). O(ids) write;
-        the data files are untouched until ``compact()``. Only versions
-        written before this call are hidden (cutoff = current generation)."""
+    def _tombstone(self, doc_ids: DataFrame) -> None:
+        """Append a tombstone for every ``doc_id`` row, hiding the versions
+        written before this call (cutoff = current generation). Deletes
+        advance the generation too, so a delete-then-re-add within the same
+        index lifetime lands at gen > cutoff."""
         cutoff = int(self.meta["next_gen"])
-        df = self.spark.createDataFrame(
-            [(str(d), cutoff) for d in doc_ids], "doc_id string, cutoff long"
-        )
         # match the sentence table's doc_id type so the join stays cast-free
         # (build() preserves whatever type the caller used)
         target_type = dict(self.sentences.dtypes)["doc_id"]
-        df = df.select(F.col("doc_id").cast(target_type), "cutoff")
-        df.write.mode("append").parquet(os.path.join(self.path, self._TOMBSTONES))
-        # deletes advance the generation too, so a delete-then-re-add within
-        # the same index lifetime lands at gen > cutoff
+        (
+            doc_ids.select(F.col("doc_id").cast(target_type))
+            .withColumn("cutoff", F.lit(cutoff).cast("long"))
+            .write.mode("append")
+            .parquet(os.path.join(self.path, self._TOMBSTONES))
+        )
         self.meta["next_gen"] = cutoff + 1
         self._write_meta()
+
+    def delete_documents(self, doc_ids: Sequence) -> None:
+        """Tombstone documents (reference deleteOdinsonDoc). O(ids) write;
+        the data files are untouched until ``compact()``."""
+        self._tombstone(
+            self.spark.createDataFrame([(str(d),) for d in doc_ids], "doc_id string")
+        )
 
     def update_documents(self, sentences: DataFrame) -> None:
         """Reference updateOdinsonDoc: tombstone the old version, append the
@@ -600,22 +527,14 @@ class TermIndex:
         The tombstones are written straight from the DataFrame — no driver
         collect, so a bulk re-annotation of 10^8 docs never ships ids
         through the driver."""
-        cutoff = int(self.meta["next_gen"])
-        target_type = dict(self.sentences.dtypes)["doc_id"]
-        tomb = (
-            sentences.select(F.col("doc_id").cast(target_type))
-            .distinct()
-            .withColumn("cutoff", F.lit(cutoff).cast("long"))
-        )
-        tomb.write.mode("append").parquet(os.path.join(self.path, self._TOMBSTONES))
-        self.meta["next_gen"] = cutoff + 1
-        self._write_meta()
+        self._tombstone(sentences.select("doc_id").distinct())
         self.add_documents(sentences)
 
     def compact(self) -> None:
         """Purge tombstones by rewriting both tables (Lucene's segment
-        merge). The only full rewrite in the lifecycle — run it when the
-        tombstone fraction warrants reclaiming the space/filter cost."""
+        merge) with the index's existing layout. The only full rewrite in
+        the lifecycle — run it when the tombstone fraction warrants
+        reclaiming the space/filter cost."""
         import shutil
         import tempfile
 
@@ -626,20 +545,17 @@ class TermIndex:
         # at or above every tombstone cutoff: tombstones a crash leaves
         # behind (they are removed only after the swaps) cannot hide them
         gen = int(self.meta["next_gen"])
-        live = self.live_sentences().withColumn("gen", F.lit(gen).cast("long"))
+        live = self.live_sentences().withColumn("gen", F.lit(gen).cast("long")).drop("doc_bucket")
         tmp = tempfile.mkdtemp(dir=os.path.dirname(self.path) or ".")
-        rebuilt = TermIndex.build(
-            live.drop("doc_bucket"),
-            os.path.join(tmp, "index"),
-            n_term_buckets=self.n_term_buckets,
-            n_doc_buckets=self.n_doc_buckets,
-            indexed_columns=self.indexed_columns,
-        )
+        # the recorded layout, not a re-derived one: a crash between the
+        # swaps below must not leave tables with different bucket counts
+        layout = {k: self.meta[k] for k in _LAYOUT_KEYS}
+        rebuilt = TermIndex._write(live, os.path.join(tmp, "index"), layout, live.count())
         # advance the generation on disk before the first swap, so a delete
         # issued after a crash in the swaps still hides the rebuilt rows
         self.meta["next_gen"] = gen + 1
         self._write_meta()
-        for sub in ("sentences", "postings", "stats"):
+        for sub in _TABLES:
             old = os.path.join(self.path, sub)
             new = os.path.join(rebuilt.path, sub)
             bak = old + ".compacting"
@@ -676,9 +592,7 @@ class TermIndex:
 
     _KEYS = ["doc_bucket", "doc_id", "sent_id"]
 
-    def _expand_multi_term(
-        self, fields: Sequence[str], kind: str, value: str, max_expansions: int
-    ):
+    def _expand_multi_term(self, fields: Sequence[str], kind: str, value: str):
         """Rewrite a regex/fuzzy leaf against the term dictionary — Lucene's
         MultiTermQuery rewrite (the terms-enum ∩ automaton walk behind the
         reference's RegexpQuery/FuzzyQuery). The stats table IS the term
@@ -686,7 +600,7 @@ class TermIndex:
         smaller than the corpus.
 
         Returns (matched_terms, df_upper_bound), or None when the expansion
-        exceeds ``max_expansions`` (the caller falls back to the scan plan,
+        exceeds ``MAX_EXPANSIONS`` (the caller falls back to the scan plan,
         which is sound and — for a pattern matching that much of the
         vocabulary — usually also cheaper, the same reasoning as Lucene's
         rewrite-method clause limits).
@@ -698,7 +612,7 @@ class TermIndex:
         path. JVM-side necessary conditions (length window for fuzzy,
         literal-prefix for regex) prune the dictionary before Python sees it.
         """
-        key = (tuple(fields), kind, value, max_expansions)
+        key = (tuple(fields), kind, value)
         cached = self._mt_cache.get(key, False)
         if cached is not False:
             return cached
@@ -744,9 +658,9 @@ class TermIndex:
             .groupBy("term")
             .agg(F.sum("df").alias("df"))
         )
-        rows = matched.limit(max_expansions + 1).collect()
+        rows = matched.limit(MAX_EXPANSIONS + 1).collect()
         out = None
-        if len(rows) <= max_expansions:
+        if len(rows) <= MAX_EXPANSIONS:
             out = (
                 [r["term"] for r in rows],
                 int(sum(int(r["df"]) for r in rows)),
@@ -754,7 +668,11 @@ class TermIndex:
         self._mt_cache[key] = out
         return out
 
-    def _multi_term_fields(self, field: str) -> Optional[list]:
+    def _inverted_fields(self, field: str) -> Optional[list]:
+        """The inverted columns a token constraint on ``field`` reads, or
+        None when this index did not invert it. Synonym union: [norm=x]
+        matches via norm OR norm_alt (plans/prefilter.py to_spark_column
+        renders the same union)."""
         col = pf._FIELD_TO_COLUMN.get(field, field)
         if col not in self.indexed_columns:
             return None
@@ -763,182 +681,81 @@ class TermIndex:
             fields.append("norm_alt")
         return fields
 
-    def _term_positions(self, fields: Sequence[str], term: str) -> DataFrame:
-        """Pruned postings lookup keeping the position lists. The synonym
-        union (norm ∪ norm_alt) merges per-key position lists, since a token
-        matches the term through EITHER layer."""
-        tb = zlib.crc32(term.encode()) % self.n_term_buckets
-        df = self.postings.filter(
-            (F.col("tbucket") == tb)
-            & (F.col("term") == term)
-            & F.col("field").isin(list(fields))
-        )
-        if len(fields) == 1:
-            return df.select(*self._KEYS, "positions")
-        return self._positions_union(df)
-
-    def _positions_union(self, df: DataFrame) -> DataFrame:
-        """Per-key union of position lists across posting rows (synonym
-        fields, or the matched terms of a multi-term expansion). Positional
-        layers never post null positions (only ``*_flat`` label sets do, and
-        phrases never anchor on those)."""
-        return df.groupBy(*self._KEYS).agg(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("positions"))))
-            .alias("positions")
-        )
-
-    def _expanded_postings(self, fields: Sequence[str], terms: Sequence[str]) -> DataFrame:
-        """Pruned postings rows for a multi-term expansion's matched terms:
-        the matched terms' buckets are computable driver-side, so the lookup
-        still prunes tbucket partition directories; the isin literals
-        compile to an InSet, fully codegen."""
-        tbs = sorted({zlib.crc32(t_.encode()) % self.n_term_buckets for t_ in terms})
-        return self.postings.filter(
+    def _pruned(self, table: DataFrame, fields: Sequence[str], terms: Sequence[str]) -> DataFrame:
+        """Rows of the postings or stats ``table`` for ``terms`` in
+        ``fields``: the terms' buckets are computable driver-side, so the
+        filter prunes tbucket partition directories, and the (field, term)
+        literals push down to row-group skipping on the sorted term column."""
+        tbs = sorted({zlib.crc32(t.encode()) % self.n_term_buckets for t in terms})
+        return table.filter(
             F.col("tbucket").isin(tbs)
             & F.col("field").isin(list(fields))
             & F.col("term").isin(list(terms))
         )
 
-    def _expanded_positions(self, fields: Sequence[str], terms: Sequence[str]) -> DataFrame:
-        """Keyed position union over ALL matched terms of a multi-term
-        expansion: a token satisfies the regex/fuzzy leaf wherever ANY
-        matched term occurs."""
-        df = self._expanded_postings(fields, terms)
+    def _lookup(self, fields: Sequence[str], terms: Sequence[str], positions: bool) -> DataFrame:
+        """Key-unique candidate rows of a term list (a plain term is a
+        one-term expansion), with the per-key union of token positions when
+        ``positions``: a token satisfies the leaf wherever ANY matched term
+        occurs in ANY of the fields. Positional layers never post null
+        positions (only ``*_flat`` label sets do, and phrases never anchor
+        on those)."""
+        df = self._pruned(self.postings, fields, terms)
+        cols = [*self._KEYS, "positions"] if positions else self._KEYS
         if len(fields) == 1 and len(terms) == 1:
-            # rows are already key-unique (distinct (field, term, key) by
-            # construction) — skip the union's groupBy shuffle
-            return df.select(*self._KEYS, "positions")
-        return self._positions_union(df)
-
-    def _term_keys(self, fields: Sequence[str], term: str) -> DataFrame:
-        """Pruned postings lookup: partition filter on tbucket + equality on
-        (field, term) → row-group skipping on the sorted term column."""
-        tb = zlib.crc32(term.encode()) % self.n_term_buckets
-        cond = (F.col("tbucket") == tb) & (F.col("term") == term)
-        out = None
-        if len(fields) == 1:
-            cond = cond & (F.col("field") == fields[0])
             # postings are distinct (field, term, key) rows by construction,
-            # so a single-field lookup is already key-unique — no shuffle
-            out = self.postings.filter(cond).select(*self._KEYS)
-        else:
-            cond = cond & F.col("field").isin(list(fields))
-            # the norm/norm_alt synonym union can yield the same key from
-            # both fields; AND-intersection joins below require unique keys
-            out = self.postings.filter(cond).select(*self._KEYS).dropDuplicates(self._KEYS)
-        return out
+            # so a single (field, term) lookup is already key-unique — no
+            # shuffle
+            return df.select(*cols)
+        if positions:
+            return df.groupBy(*self._KEYS).agg(
+                F.array_sort(F.array_distinct(F.flatten(F.collect_list("positions"))))
+                .alias("positions")
+            )
+        # the same key can come from several fields or terms; AND-
+        # intersection joins above require unique keys
+        return df.select(*cols).dropDuplicates(self._KEYS)
 
     def _term_df(self, fields: Sequence[str], term: str) -> int:
         """Document frequency of (fields, term) from the stats table — a
-        pruned lookup (tbucket partition + sorted-term row-group skip) of a
-        table with one row per distinct (field, term), i.e. Lucene's
-        TermStates.docFreq. Memoized per reader generation: the estimate
-        pass and the join-ordering pass ask for the same terms."""
+        pruned lookup of a table with one row per distinct (field, term),
+        i.e. Lucene's TermStates.docFreq. Memoized per reader generation."""
         key = (tuple(fields), term)
         cached = self._df_cache.get(key)
         if cached is not None:
             return cached
-        tb = zlib.crc32(term.encode()) % self.n_term_buckets
-        rows = (
-            self.stats.filter(
-                (F.col("tbucket") == tb)
-                & (F.col("term") == term)
-                & F.col("field").isin(list(fields))
-            )
-            .agg(F.sum("df"))
-            .first()
-        )
+        rows = self._pruned(self.stats, fields, [term]).agg(F.sum("df")).first()
         out = int(rows[0] or 0)
         self._df_cache[key] = out
         return out
 
-    def estimated_candidates(self, tree, max_expansions: int = 1024) -> Optional[int]:
-        """Upper-bound candidate-key count for the prefilter tree, from
-        per-term document frequencies. None = unbounded (the tree has an
-        unconstrained arm). AND takes the tightest arm;
-        OR sums. The engine uses this as Lucene uses docFreq: to decide
-        whether the postings plan beats the scan plan."""
-        t = type(tree)
-        if t is pf.PFFalse:
-            return 0
-        if t is pf.PFTerm:
-            fields = self._multi_term_fields(tree.field)
-            if fields is None:
-                return None
-            return self._term_df(fields, tree.value)
-        if t is pf.PFMultiTerm:
-            fields = self._multi_term_fields(tree.field)
-            if fields is None:
-                return None
-            exp = self._expand_multi_term(fields, tree.kind, tree.value, max_expansions)
-            return None if exp is None else exp[1]
-        if t is pf.PFPhrase:
-            ests = []
-            for _, field, value in tree.anchors:
-                fields = self._multi_term_fields(field)
-                if fields is not None:
-                    ests.append(self._term_df(fields, value))
-            for _, node in tree.multi_anchors:
-                fields = self._multi_term_fields(node.field)
-                if fields is not None:
-                    exp = self._expand_multi_term(
-                        fields, node.kind, node.value, max_expansions
-                    )
-                    if exp is not None:
-                        ests.append(exp[1])
-            # positional intersection can only shrink the tightest anchor
-            return min(ests) if ests else None
-        if t is pf.PFEdge:
-            if "outgoing_flat" not in self.indexed_columns:
-                return None
-            return self._term_df(["outgoing_flat"], tree.label)
-        if t is pf.PFAnd:
-            ests = [self.estimated_candidates(s, max_expansions) for s in tree.subs]
-            ests = [e for e in ests if e is not None]
-            return min(ests) if ests else None
-        if t is pf.PFOr:
-            ests = [self.estimated_candidates(s, max_expansions) for s in tree.subs]
-            if not ests or any(e is None for e in ests):
-                return None
-            return sum(ests)
-        return None
-
-    def candidate_keys(self, tree, max_expansions: int = 1024) -> Optional[DataFrame]:
-        """Sentence keys possibly matching the prefilter tree.
-
-        Returns None when the tree cannot bound the result (PFTrue, an
-        over-cap multi-term expansion, an OR with an unconstrained arm, or a
-        field this index did not invert) — the caller then falls back to the
-        full scan. Soundness mirrors plans/prefilter.py: the keys are a
-        NECESSARY condition, never a filter that could drop a true match.
-        """
-        t = type(tree)
-        if t is pf.PFTrue:
+    def _leaf(self, field: str, kind: str, value: str):
+        """(fields, terms, df upper bound) of a token leaf, or None when the
+        index cannot bound it (un-inverted field, over-cap expansion)."""
+        fields = self._inverted_fields(field)
+        if fields is None:
             return None
+        if kind == "term":
+            return fields, [value], self._term_df(fields, value)
+        exp = self._expand_multi_term(fields, kind, value)
+        return None if exp is None else (fields, *exp)
+
+    def _plan(self, tree):
+        """The planner walk: (estimate, keys) of a prefilter node.
+
+        The estimate is an upper-bound candidate-key count from per-term
+        document frequencies — Lucene plans from docFreq the same way. The
+        keys are a zero-argument callable building the DataFrame of sentence
+        keys possibly matching the tree, so costing a plan builds no
+        DataFrame. Both are None together when the tree cannot bound the
+        result (PFTrue, an over-cap multi-term expansion, an OR with an
+        unconstrained arm, or a field this index did not invert) — the
+        caller then falls back to the full scan. Soundness mirrors
+        plans/prefilter.py: the keys are a NECESSARY condition, never a
+        filter that could drop a true match."""
+        t = type(tree)
         if t is pf.PFFalse:
-            return self.postings.select(*self._KEYS).limit(0)
-        if t is pf.PFTerm:
-            # synonym union: [norm=x] matches via norm OR norm_alt
-            # (plans/prefilter.py to_spark_column renders the same union)
-            fields = self._multi_term_fields(tree.field)
-            if fields is None:
-                return None
-            return self._term_keys(fields, tree.value)
-        if t is pf.PFMultiTerm:
-            fields = self._multi_term_fields(tree.field)
-            if fields is None:
-                return None
-            exp = self._expand_multi_term(fields, tree.kind, tree.value, max_expansions)
-            if exp is None:
-                return None
-            terms = exp[0]
-            if not terms:
-                return self.postings.select(*self._KEYS).limit(0)
-            return (
-                self._expanded_postings(fields, terms)
-                .select(*self._KEYS)
-                .dropDuplicates(self._KEYS)
-            )
+            return self._nothing()
         if t is pf.PFPhrase:
             # Lucene SpanNearQuery(slop=0, inOrder): intersect per-anchor
             # position lists shifted to a common base. Each anchor lookup is
@@ -946,83 +763,110 @@ class TermIndex:
             # through the dictionary expansion first); the join chain runs
             # over candidate keys only, and the (interpreted-HOF) position
             # arithmetic touches arrays of a few ints on those rows alone.
-            # (sort_key, offset, keyed-positions) per usable anchor; lead
-            # with the sparsest (Lucene's conjunction order) so the inner
-            # joins never carry more keys than its postings
-            lookups = []
-            for off, field, value in tree.anchors:
-                fields = self._multi_term_fields(field)
-                if fields is None:
-                    continue  # un-indexed layer: skip the anchor (sound)
-                lookups.append(
-                    (self._term_df(fields, value), off, self._term_positions(fields, value))
-                )
-            for off, node in tree.multi_anchors:
-                fields = self._multi_term_fields(node.field)
-                if fields is None:
+            # An un-indexed layer or an over-cap expansion skips its anchor
+            # (sound).
+            anchors = [(off, field, "term", value) for off, field, value in tree.anchors]
+            anchors += [(off, n.field, n.kind, n.value) for off, n in tree.multi_anchors]
+            leaves = []
+            for off, field, kind, value in anchors:
+                leaf = self._leaf(field, kind, value)
+                if leaf is None:
                     continue
-                exp = self._expand_multi_term(
-                    fields, node.kind, node.value, max_expansions
-                )
-                if exp is None:
-                    continue  # over-cap expansion: skip the anchor (sound)
-                terms, dfsum = exp
+                fields, terms, est = leaf
                 if not terms:
                     # the leaf matches NO stored term → nothing can match
-                    return self.postings.select(*self._KEYS).limit(0)
-                lookups.append((dfsum, off, self._expanded_positions(fields, terms)))
-            if not lookups:
-                return None
-            lookups.sort(key=lambda x: x[0])
-            out = None
-            for i, (_, off, posdf) in enumerate(lookups):
-                pcol = f"_p{i}"
-                # NB: the transform lambda must take exactly ONE arg — a
-                # second (even defaulted) arg is bound to the element INDEX
-                cur = posdf.withColumn(
-                    pcol, F.transform("positions", _shift_by(off))
-                ).drop("positions")
-                if out is None:
-                    out = cur.withColumnRenamed(pcol, "_base")
-                else:
-                    out = (
-                        out.join(cur, on=self._KEYS, how="inner")
-                        .withColumn("_base", F.array_intersect("_base", pcol))
-                        .drop(pcol)
-                    )
-            return out.filter(F.size("_base") > 0).select(*self._KEYS)
-        if t is pf.PFEdge:
-            if "outgoing_flat" not in self.indexed_columns:
-                return None
-            return self._term_keys(["outgoing_flat"], tree.label)
+                    return self._nothing()
+                leaves.append((est, off, fields, terms))
+            if not leaves:
+                return None, None
+            # lead with the sparsest (Lucene's conjunction order) so the
+            # inner joins never carry more keys than its postings;
+            # positional intersection can only shrink the tightest anchor
+            leaves.sort(key=lambda x: x[0])
+
+            def keys():
+                out = None
+                for i, (_, off, fields, terms) in enumerate(leaves):
+                    pcol = f"_p{i}"
+                    # NB: the transform lambda must take exactly ONE arg — a
+                    # second (even defaulted) arg is bound to the element INDEX
+                    cur = self._lookup(fields, terms, positions=True).withColumn(
+                        pcol, F.transform("positions", _shift_by(off))
+                    ).drop("positions")
+                    if out is None:
+                        out = cur.withColumnRenamed(pcol, "_base")
+                    else:
+                        out = (
+                            out.join(cur, on=self._KEYS, how="inner")
+                            .withColumn("_base", F.array_intersect("_base", pcol))
+                            .drop(pcol)
+                        )
+                return out.filter(F.size("_base") > 0).select(*self._KEYS)
+
+            return leaves[0][0], keys
         if t is pf.PFAnd:
             # Lucene's conjunction scorer leads with the sparsest postings:
             # order arms by docFreq estimate ascending and chain LEFTSEMI
             # joins — every intermediate stays ≤ the smallest arm, and only
             # key columns move (an inner join would carry both sides)
-            scored = []
-            for s in tree.subs:
-                k = self.candidate_keys(s, max_expansions)
-                if k is not None:
-                    est = self.estimated_candidates(s, max_expansions)
-                    scored.append((est is None, est or 0, len(scored), k))
-            if not scored:
-                return None
-            scored.sort(key=lambda x: x[:3])
-            out = scored[0][3]
-            for item in scored[1:]:
-                out = out.join(item[3], on=self._KEYS, how="leftsemi")
-            return out
+            arms = sorted(
+                (p for p in map(self._plan, tree.subs) if p[1] is not None),
+                key=lambda p: p[0],
+            )
+            if not arms:
+                return None, None
+
+            def keys():
+                out = arms[0][1]()
+                for _, arm in arms[1:]:
+                    out = out.join(arm(), on=self._KEYS, how="leftsemi")
+                return out
+
+            return arms[0][0], keys
         if t is pf.PFOr:
-            subs = [self.candidate_keys(s, max_expansions) for s in tree.subs]
-            if any(s is None for s in subs) or not subs:
-                return None
-            out = subs[0]
-            for s in subs[1:]:
-                out = out.unionByName(s)
-            # dedup so a downstream AND-intersection join stays key-unique
-            return out.dropDuplicates(self._KEYS)
-        return None
+            arms = [self._plan(s) for s in tree.subs]
+            if not arms or any(arm is None for _, arm in arms):
+                return None, None
+
+            def keys():
+                out = arms[0][1]()
+                for _, arm in arms[1:]:
+                    out = out.unionByName(arm())
+                # dedup so a downstream AND-intersection join stays key-unique
+                return out.dropDuplicates(self._KEYS)
+
+            return sum(est for est, _ in arms), keys
+        if t is pf.PFTerm:
+            leaf = self._leaf(tree.field, "term", tree.value)
+        elif t is pf.PFMultiTerm:
+            leaf = self._leaf(tree.field, tree.kind, tree.value)
+        elif t is pf.PFEdge:
+            leaf = self._leaf("outgoing", "term", tree.label)
+        else:  # PFTrue
+            return None, None
+        if leaf is None:
+            return None, None
+        fields, terms, est = leaf
+        if not terms:
+            return self._nothing()
+        return est, lambda: self._lookup(fields, terms, positions=False)
+
+    def _nothing(self):
+        """The plan of a node no sentence can match: no keys."""
+        return 0, lambda: self.postings.select(*self._KEYS).limit(0)
+
+    def estimated_candidates(self, tree) -> Optional[int]:
+        """Upper-bound candidate-key count for the prefilter tree (None =
+        unbounded). AND takes the tightest arm; OR sums. The engine uses
+        this as Lucene uses docFreq: to decide whether the postings plan
+        beats the scan plan."""
+        return self._plan(tree)[0]
+
+    def candidate_keys(self, tree) -> Optional[DataFrame]:
+        """Sentence keys possibly matching the prefilter tree, or None when
+        the tree cannot bound the result (see :meth:`_plan`)."""
+        keys = self._plan(tree)[1]
+        return None if keys is None else keys()
 
     # -- query surface -------------------------------------------------------
 
@@ -1036,36 +880,26 @@ class IndexedSearchEngine(SearchEngine):
     doc_bucket + leftsemi on the full key) before the boolean prefilter and
     the matcher run unchanged."""
 
-    def __init__(
-        self,
-        index: TermIndex,
-        broadcast_candidates: bool = True,
-        max_candidate_frac: float = 0.1,
-        max_expansions: int = 1024,
-        **kwargs,
-    ):
+    def __init__(self, index: TermIndex, max_candidate_frac: float = 0.1, **kwargs):
         # live view: appended files visible, tombstoned docs filtered. A new
         # engine (or index.refresh() + new engine) is the reference's
         # searcher-manager re-open.
         super().__init__(index.live_sentences(), **kwargs)
         self.index = index
-        self.broadcast_candidates = broadcast_candidates
         self.max_candidate_frac = max_candidate_frac
-        # Lucene caps multi-term rewrites (maxExpansions / maxClauseCount);
-        # past the cap the scan plan is both sound and usually cheaper
-        self.max_expansions = max_expansions
 
     def _route(self, tree):
         """The single plan-choice point, shared by execution
         (_prefilter_sentences) and introspection (explain) so the two can
-        never drift. Returns (route, estimate, candidate_keys, reason).
+        never drift. Returns (route, estimate, keys, reason), where keys
+        builds the candidate-key DataFrame of the index route.
 
         Cost-based choice (Lucene plans from TermStates.docFreq): when the
         estimated candidate set is a large fraction of the corpus, the
         posting lookup + key join costs more than it prunes — the boolean-
         prefiltered scan IS the cheaper plan. The estimate is a pruned read
         of the tiny stats table, paid once per query."""
-        est = self.index.estimated_candidates(tree, self.max_expansions)
+        est, keys = self.index._plan(tree)
         n = self.index.n_sentences
         if est is not None and n and est > self.max_candidate_frac * int(n):
             return (
@@ -1076,8 +910,7 @@ class IndexedSearchEngine(SearchEngine):
                 f"{self.max_candidate_frac} x {n} sentences — the boolean-"
                 "prefiltered scan is the cheaper plan",
             )
-        cand = self.index.candidate_keys(tree, self.max_expansions)
-        if cand is None:
+        if keys is None:
             return (
                 "scan",
                 est,
@@ -1089,7 +922,7 @@ class IndexedSearchEngine(SearchEngine):
         return (
             "index",
             est,
-            cand,
+            keys,
             "posting-pruned candidate keys semi-joined into the sentence "
             "scan (dynamic partition pruning on doc_bucket)",
         )
@@ -1110,7 +943,6 @@ class IndexedSearchEngine(SearchEngine):
             "estimated_candidates": est,
             "corpus_sentences": self.index.n_sentences,
             "max_candidate_frac": self.max_candidate_frac,
-            "max_expansions": self.max_expansions,
             "route": route,
             "reason": reason,
         }
@@ -1119,21 +951,13 @@ class IndexedSearchEngine(SearchEngine):
         from .pipeline.extract import combined_prefilter
 
         tree = combined_prefilter(extractors)
-        route, _, cand, _ = self._route(tree)
-        if route == "scan":
-            return apply_prefilter(sents, extractors)
-        if cand is not None:
+        route, _, keys, _ = self._route(tree)
+        if route == "index":
             on = [k for k in TermIndex._KEYS if k in sents.columns]
-            cand = cand.select(*on)
             # Interactive queries are selective by construction (that is why
             # the index path was chosen), so broadcasting the candidate keys
             # makes this a broadcast-hash SEMI join and lets dynamic partition
             # pruning drop whole doc_bucket directories from the sentence
-            # scan. For a deliberately non-selective query against a huge
-            # corpus (a stop-word term at 100 TB), pass
-            # broadcast_candidates=False: the hint is dropped and AQE picks
-            # shuffle-vs-broadcast from the candidate side's runtime size.
-            if self.broadcast_candidates:
-                cand = F.broadcast(cand)
-            sents = sents.join(cand, on=on, how="leftsemi")
+            # scan.
+            sents = sents.join(F.broadcast(keys().select(*on)), on=on, how="leftsemi")
         return apply_prefilter(sents, extractors)

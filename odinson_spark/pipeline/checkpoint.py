@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import json
 import time
-from pathlib import Path
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.table_io import _hadoop_fs
 
 
 class CheckpointedPipeline:
@@ -29,8 +30,10 @@ class CheckpointedPipeline:
         return f"{self.root}/{stage}"
 
     def exists(self, stage: str) -> bool:
-        p = Path(self._path(stage))
-        return (p / "_SUCCESS").exists()
+        # through the Hadoop FileSystem, like the stage writes themselves, so
+        # a file:// or hdfs:// root resumes too
+        fs, marker, _ = _hadoop_fs(self.spark, f"{self._path(stage)}/_SUCCESS")
+        return fs.exists(marker)
 
     def stage(
         self,
@@ -52,6 +55,9 @@ class CheckpointedPipeline:
         return self.spark.read.parquet(path)
 
     def write_metrics(self):
-        p = Path(self.root) / f"_metrics_{self.run_id}.json"
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(json.dumps(self.metrics, indent=1))
+        fs, out, _ = _hadoop_fs(self.spark, f"{self.root}/_metrics_{self.run_id}.json")
+        stream = fs.create(out, True)
+        try:
+            stream.write(bytearray(json.dumps(self.metrics, indent=1), "utf-8"))
+        finally:
+            stream.close()

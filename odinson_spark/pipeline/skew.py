@@ -1,15 +1,9 @@
 """Skew handling for giant repos/files (north-rule requirement).
 
 Source-code corpora are badly skewed: a few repos hold millions of files and
-a few files hold megabytes of text. Two mitigations, applied before the
-tokenize stage:
-
-* ``salted_repartition`` — keys like ``repo`` are hot; we shuffle on
-  (hash(repo, path), salt) so no single task owns a whole giant repo.
-* ``size_bucketed`` — cost of the tokenize/match stages is ∝ content length,
-  not row count. Range-partitioning by a log-size bucket makes per-task work
-  uniform (the analogue of the reference's max-sentence-length guard,
-  OdinsonIndexWriter.scala:116-120, applied at file granularity).
+a few files hold megabytes of text. ``salted_repartition``, applied before
+the tokenize stage, handles hot keys like ``repo``: we shuffle on
+(hash(repo, path), salt) so no single task owns a whole giant repo.
 
 Oversized files are split/truncated by the tokenizer's per-sentence cap, so
 no single row can blow an executor regardless.
@@ -38,14 +32,3 @@ def salted_repartition(
         .drop("_salt")
     )
 
-
-def size_bucketed(df: DataFrame, content_col: str = "content", num_partitions: int = 0) -> DataFrame:
-    """Co-locate similarly-sized rows so tasks have uniform cost; AQE then
-    coalesces the small buckets."""
-    bucket = F.floor(F.log2(F.greatest(F.length(F.col(content_col)), F.lit(1)) + 1))
-    out = df.withColumn("_size_bucket", bucket)
-    if num_partitions:
-        out = out.repartitionByRange(num_partitions, "_size_bucket", F.xxhash64(content_col))
-    else:
-        out = out.repartitionByRange("_size_bucket", F.xxhash64(content_col))
-    return out.drop("_size_bucket")

@@ -43,7 +43,7 @@ def corpus(spark, tmp_path_factory):
 @pytest.fixture(scope="module")
 def index(spark, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx") / "index")
-    return TermIndex.build(tokenize_documents(corpus), out, n_term_buckets=8, n_doc_buckets=4)
+    return TermIndex.build(tokenize_documents(corpus), out)
 
 
 @pytest.fixture(scope="module")
@@ -94,7 +94,8 @@ def test_pagination_on_index_path(index, scan_engine):
 
 
 def test_postings_lookup_is_pruned(index):
-    plan = index._term_keys(["norm"], "fast")._jdf.queryExecution().executedPlan().toString()
+    keys = index._lookup(["norm"], ["fast"], positions=False)
+    plan = keys._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(tbucket" in plan or "tbucket" in plan.split("PartitionFilters")[1].split("]")[0]
     assert "term" in plan.split("PushedFilters")[1].split("]")[0]
 
@@ -140,9 +141,7 @@ class TestIncremental:
     @pytest.fixture()
     def inc(self, spark, corpus, tmp_path):
         out = str(tmp_path / "inc_index")
-        return TermIndex.build(
-            tokenize_documents(corpus), out, n_term_buckets=8, n_doc_buckets=4
-        )
+        return TermIndex.build(tokenize_documents(corpus), out)
 
     def _hits(self, idx, pattern="fast"):
         return sorted(
@@ -182,6 +181,32 @@ class TestIncremental:
         assert inc.sentences.count() == live
         assert inc._tombstones() is None
         assert self._hits(inc) == after
+
+    def test_compact_keeps_layout(self, spark, corpus, tmp_path, monkeypatch):
+        """compact() rebuilds with the bucket counts recorded in meta, not
+        re-derived ones: a crash between its table swaps must never mix
+        tables of different layouts."""
+        import odinson_spark.index as index_mod
+
+        # an index built under a rule that chose 4 buckets, compacted after
+        # the rule would choose the default again
+        monkeypatch.setattr(index_mod, "_n_buckets", lambda n_rows: 4)
+        idx = TermIndex.build(tokenize_documents(corpus), str(tmp_path / "layout_index"))
+        monkeypatch.undo()
+
+        def layout():
+            dirs = {
+                sub: sorted(os.listdir(os.path.join(idx.path, sub)))
+                for sub in ("sentences", "postings", "stats")
+            }
+            meta = TermIndex.read(spark, idx.path).meta
+            return meta["n_term_buckets"], meta["n_doc_buckets"], dirs
+
+        before = layout()
+        assert before[:2] == (4, 4)
+        idx.delete_documents([5])
+        idx.compact()
+        assert layout() == before
 
     @pytest.mark.parametrize("crash", ["after_sentences_swap", "before_tombstone_purge"])
     def test_compact_crash_keeps_live_docs(self, spark, inc, monkeypatch, crash):
@@ -267,10 +292,15 @@ class TestMultiTermRewrite:
         keys = index.candidate_keys(node)
         assert keys is not None and keys.count() == 40
 
-    def test_expansion_cap_falls_back_to_scan(self, index):
+    def test_expansion_cap_falls_back_to_scan(self, spark, index, monkeypatch):
+        import odinson_spark.index as index_mod
+
+        monkeypatch.setattr(index_mod, "MAX_EXPANSIONS", 2)
+        # a fresh reader: expansions are memoized per reader
+        capped = TermIndex.read(spark, index.path)
         node = pf.PFMultiTerm("norm", "regex", ".*")
-        assert index.candidate_keys(node, max_expansions=2) is None
-        assert index.estimated_candidates(node, max_expansions=2) is None
+        assert capped.candidate_keys(node) is None
+        assert capped.estimated_candidates(node) is None
 
     def test_empty_expansion_is_empty_not_scan(self, index):
         node = pf.PFMultiTerm("norm", "regex", "zzznothing.*")
@@ -456,12 +486,7 @@ def test_streaming_ingest_into_index(spark, corpus, tmp_path):
     reference's continuous indexing loop (IncrementalOdinsonIndex.scala:104
     indexOdinsonDoc called per incoming doc + refresh). After availableNow
     drains, streamed docs are index-reachable through the postings."""
-    idx = TermIndex.build(
-        tokenize_documents(corpus),
-        str(tmp_path / "stream_index"),
-        n_term_buckets=8,
-        n_doc_buckets=4,
-    )
+    idx = TermIndex.build(tokenize_documents(corpus), str(tmp_path / "stream_index"))
     src = str(tmp_path / "incoming")
     new = spark.createDataFrame(
         [(2000 + i, "xylophone fast xylophone", "en") for i in range(3)],
@@ -498,11 +523,14 @@ def test_explain_reports_route_and_reason(index):
     assert info["estimated_candidates"] is None
 
 
-@pytest.mark.parametrize("case", ["no_schemas", "positionless_postings", "no_stats_schema"])
+@pytest.mark.parametrize(
+    "case", ["no_schemas", "positionless_postings", "no_stats_schema", "truncated_meta"]
+)
 def test_read_rejects_foreign_format(spark, index, tmp_path, case):
     """read() opens only the format build() writes: a directory whose meta
-    pins no schemas, pins position-less postings, or has no stats table is
-    refused with an error naming it, not opened with partial pruning."""
+    pins no schemas, pins position-less postings, has no stats table, or is
+    cut short mid-write is refused with an error naming it, not opened with
+    partial pruning."""
     import json
     import shutil
 
@@ -517,11 +545,12 @@ def test_read_rejects_foreign_format(spark, index, tmp_path, case):
         postings = json.loads(meta["schemas"]["postings"])
         postings["fields"] = [c for c in postings["fields"] if c["name"] != "positions"]
         meta["schemas"]["postings"] = json.dumps(postings)
-    else:
+    elif case == "no_stats_schema":
         del meta["schemas"]["stats"]
         shutil.rmtree(os.path.join(path, "stats"))
     with open(meta_path, "w") as f:
-        json.dump(meta, f)
+        text = json.dumps(meta)
+        f.write(text[: len(text) // 2] if case == "truncated_meta" else text)
     with pytest.raises(OdinsonException, match=re.escape(path)):
         TermIndex.read(spark, path)
 
@@ -618,9 +647,7 @@ def test_random_lifecycle_matches_generation_model(spark, tmp_path):
         [(i, "seed fast doc", "en") for i in range(4)],
         "doc_id long, text string, lang string",
     )
-    idx = TermIndex.build(
-        tokenize_documents(base), str(tmp_path / "life_idx"), n_term_buckets=4, n_doc_buckets=2
-    )
+    idx = TermIndex.build(tokenize_documents(base), str(tmp_path / "life_idx"))
     # model: list of live (doc_id, gen); every doc body contains one 'fast'
     gen = 1
     live = [(i, 0) for i in range(4)]
@@ -724,34 +751,41 @@ def test_cost_model_routes_by_selectivity(spark, index):
     assert index.estimated_candidates(pf.PFTrue()) is None
 
 
-def test_postings_sql_route_equals_python_route(spark):
-    """The JVM postings builder (r6) must emit exactly the mapInPandas
-    route's rows — fields, terms, buckets and position lists."""
-    from odinson_spark.index import _bucket, _postings_of, _postings_of_sql
-    from odinson_spark.pipeline.extract import tokenize_documents
-    from pyspark.sql import functions as F
+def test_postings_of_rows(spark):
+    """The postings builder emits one row per (field, term, sentence): the
+    term's bucket, its ascending token positions in positional layers, and
+    null positions for ``*_flat`` label sets. Null arrays and null tokens
+    post nothing."""
+    import zlib
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    wb = tokenize_documents(docs).withColumn(
-        "doc_bucket", _bucket(F.col("doc_id"), 4)
-    ).withColumn("gen", F.lit(0).cast("long"))
-    cols = [c for c in
-            ("raw", "word", "norm", "norm_alt", "lemma", "tag", "chunk",
-             "entity", "incoming_flat", "outgoing_flat")
-            if c in wb.columns]
-    py = _postings_of(wb, cols, 8)
-    sql = _postings_of_sql(wb, cols, 8)
-    assert py.schema == sql.schema
-    key = ["field", "term", "doc_bucket", "doc_id", "sent_id", "tbucket"]
-    a = sorted(
-        (tuple(r[k] for k in key), tuple(r["positions"]) if r["positions"] is not None else None)
-        for r in py.collect()
+    from odinson_spark.index import _postings_of
+
+    src = spark.createDataFrame(
+        [
+            (0, "d1", 0, ["a", "b", "a"], ["nsubj", "dobj", "nsubj"]),
+            (1, "d2", 3, ["b", None, "c"], None),
+        ],
+        "doc_bucket int, doc_id string, sent_id int, norm array<string>, "
+        "outgoing_flat array<string>",
     )
-    b = sorted(
-        (tuple(r[k] for k in key), tuple(r["positions"]) if r["positions"] is not None else None)
-        for r in sql.collect()
+
+    def tb(term):
+        return zlib.crc32(term.encode()) % 8
+
+    rows = sorted(
+        (r.field, r.term, r.doc_bucket, r.doc_id, r.sent_id, r.positions, r.tbucket)
+        for r in _postings_of(src, ["norm", "outgoing_flat"], 8).collect()
     )
-    assert a == b and len(a) > 0
+    assert rows == sorted(
+        [
+            ("norm", "a", 0, "d1", 0, [0, 2], tb("a")),
+            ("norm", "b", 0, "d1", 0, [1], tb("b")),
+            ("outgoing_flat", "dobj", 0, "d1", 0, None, tb("dobj")),
+            ("outgoing_flat", "nsubj", 0, "d1", 0, None, tb("nsubj")),
+            ("norm", "b", 1, "d2", 3, [0], tb("b")),
+            ("norm", "c", 1, "d2", 3, [2], tb("c")),
+        ]
+    )
 
 
 def test_idx_graph_edge_anchor_in_plan(index, scan_engine):

@@ -186,6 +186,20 @@ def test_checkpoint_resume(spark, tmp_path):
     assert df1.count() == df2.count() == 5
 
 
+def test_checkpoint_resume_file_uri_root(spark, tmp_path):
+    """A ``file://`` root resumes like a plain path: the rerun skips every
+    stage, and each run's metrics land under the root."""
+    root = f"file://{tmp_path}/warehouse"
+    for run_id in ("first", "rerun"):
+        cp = CheckpointedPipeline(spark, root, run_id)
+        cp.stage("s1", lambda: spark.range(5))
+        cp.stage("s2", lambda: spark.range(3))
+        cp.write_metrics()
+    assert [(m["stage"], m["skipped"]) for m in cp.metrics] == [("s1", True), ("s2", True)]
+    written = json.loads((tmp_path / "warehouse" / "_metrics_rerun.json").read_text())
+    assert written == cp.metrics
+
+
 def test_document_json_source(spark, tmp_path, example_docs):
     p = tmp_path / "docs.jsonl"
     with open(p, "w") as f:
