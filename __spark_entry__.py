@@ -569,7 +569,7 @@ rules:
     # edge-anchored pattern through the index path (reference traversal-
     # anchor pushdown, QueryCompiler.scala:544-615): the prefilter emits
     # PFEdge('next') alongside the PFTerm, so the candidate join includes
-    # an outgoing_flat postings lookup (plan asserted in
+    # a deps_label postings lookup (plan asserted in
     # tests/test_index.py::test_idx_graph_edge_anchor_in_plan);
     # max_candidate_frac=1.0 forces the join so the gate exercises the
     # edge lookup, not the cost-model scan fallback. Results ≡ scan path.

@@ -16,8 +16,8 @@ This module materializes that access path with Spark primitives:
   candidate-key join prunes whole directories via dynamic partition pruning
   instead of scanning the corpus.
 * **postings/** — one row per distinct (sentence, token-layer field, term)
-  with the term's token positions (null only for the sentence-level
-  ``*_flat`` label sets), written ``partitionBy(tbucket)``
+  with the term's token positions (null only for the sentence's edge-label
+  set, ``deps_label``), written ``partitionBy(tbucket)``
   (``crc32(term) % M``) and sorted by (field, term) within files: a term
   lookup touches exactly one partition directory, and parquet min/max stats
   on the sorted ``term`` column skip all but the matching row groups — the
@@ -72,9 +72,9 @@ from .plans import prefilter as pf
 from .pipeline.extract import apply_prefilter
 from .search import SearchEngine
 
-# token-layer columns worth inverting: everything the prefilter can render
-# (plans/prefilter.py _FIELD_TO_COLUMN maps incoming/outgoing to the flat
-# label-set columns)
+# columns worth inverting: everything the prefilter can render
+# (plans/prefilter.py _FIELD_TO_COLUMN maps incoming/outgoing, and PFEdge
+# reads, the edge-label column pf.EDGE_LABELS — the one non-positional field)
 DEFAULT_INDEXED_COLUMNS = (
     "raw",
     "word",
@@ -84,8 +84,7 @@ DEFAULT_INDEXED_COLUMNS = (
     "tag",
     "chunk",
     "entity",
-    "incoming_flat",
-    "outgoing_flat",
+    pf.EDGE_LABELS,
 )
 
 _META_FILE = "odinson_index_meta.json"
@@ -134,6 +133,24 @@ def _stats_of(postings: DataFrame) -> DataFrame:
     same tbucket pruning as the postings. Appends add per-batch rows that
     readers sum."""
     return postings.groupBy("tbucket", "field", "term").agg(F.count(F.lit(1)).alias("df"))
+
+
+def _local_path(path: str) -> str:
+    """The local filesystem path an index lives at. The meta file, the
+    tombstone listing and the compact swaps are local-filesystem
+    operations, so a ``file:`` URI resolves to its path and any other
+    scheme raises before anything is written."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(path)
+    if not u.scheme:
+        return path
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return unquote(u.path)
+    raise OdinsonException(
+        f"{path}: a TermIndex lives on the local filesystem; "
+        "only plain paths and file: URIs are supported"
+    )
 
 
 def _write_json(path: str, obj) -> None:
@@ -209,15 +226,14 @@ def _postings_of(with_bucket: DataFrame, cols: Sequence[str], n_term_buckets: in
     """One scan → one row per distinct (field, term) per sentence, carrying
     the term's token POSITIONS for single-valued layers (Lucene stores
     positions in its postings for exactly this purpose — SpanNearQuery).
-    Flat sentence-level label sets (incoming_flat/outgoing_flat) post with
-    null positions: they prune existence, not adjacency.
+    The edge-label column posts its label set with null positions: edge
+    labels prune existence, not adjacency.
 
     Arrow-batched mapInPandas, the repo's fan-out pattern: interpreted HOFs
     can't build position lists, and this is the build path where per-row
     work is O(tokens) — scan-dominated either way."""
     from pyspark.sql import types as T
 
-    flat = {c for c in cols if c.endswith("_flat")}
     src = with_bucket.select("doc_bucket", "doc_id", "sent_id", *cols)
     schema = T.StructType(
         [
@@ -230,6 +246,7 @@ def _postings_of(with_bucket: DataFrame, cols: Sequence[str], n_term_buckets: in
         ]
     )
     col_list = list(cols)
+    label_set = pf.EDGE_LABELS
 
     def fn(batches):
         for pdf in batches:
@@ -240,7 +257,7 @@ def _postings_of(with_bucket: DataFrame, cols: Sequence[str], n_term_buckets: in
                 for c, arr in zip(col_list, layers):
                     if arr is None:
                         continue
-                    if c in flat:
+                    if c == label_set:
                         for t_ in set(arr):
                             if t_ is None:
                                 continue
@@ -339,6 +356,7 @@ class TermIndex:
         """Write the index of ``sentences`` to ``path``. The layout is
         derived from the input: both bucket counts from its row count, the
         inverted columns from ``DEFAULT_INDEXED_COLUMNS`` present in it."""
+        path = _local_path(path)
         n_rows = sentences.count()
         n_buckets = _n_buckets(n_rows)
         layout = {
@@ -405,6 +423,7 @@ class TermIndex:
         format (undecodable meta, no pinned schema for a table, or postings
         without positions) raises :class:`OdinsonException` instead of
         opening with partial pruning."""
+        path = _local_path(path)
         with open(os.path.join(path, _META_FILE)) as f:
             try:
                 meta = json.load(f)
@@ -536,8 +555,11 @@ class TermIndex:
         the lifecycle — run it when the tombstone fraction warrants
         reclaiming the space/filter cost."""
         import shutil
-        import tempfile
 
+        # one fixed sibling work directory: what a crashed compact() left
+        # there is cleared here instead of staying beside the index for good
+        work = self.path.rstrip(os.sep) + ".compact"
+        shutil.rmtree(work, ignore_errors=True)
         tomb = self._tombstones()
         if tomb is None:
             return
@@ -546,11 +568,10 @@ class TermIndex:
         # behind (they are removed only after the swaps) cannot hide them
         gen = int(self.meta["next_gen"])
         live = self.live_sentences().withColumn("gen", F.lit(gen).cast("long")).drop("doc_bucket")
-        tmp = tempfile.mkdtemp(dir=os.path.dirname(self.path) or ".")
         # the recorded layout, not a re-derived one: a crash between the
         # swaps below must not leave tables with different bucket counts
         layout = {k: self.meta[k] for k in _LAYOUT_KEYS}
-        rebuilt = TermIndex._write(live, os.path.join(tmp, "index"), layout, live.count())
+        rebuilt = TermIndex._write(live, work, layout, live.count())
         # advance the generation on disk before the first swap, so a delete
         # issued after a crash in the swaps still hides the rebuilt rows
         self.meta["next_gen"] = gen + 1
@@ -571,7 +592,7 @@ class TermIndex:
                 shutil.move(new, old)
             shutil.rmtree(bak, ignore_errors=True)
         shutil.rmtree(os.path.join(self.path, self._TOMBSTONES), ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
         self.meta["n_sentences"] = rebuilt.meta["n_sentences"]
         self.meta["schemas"] = rebuilt.meta["schemas"]
         self._write_meta()
@@ -698,8 +719,8 @@ class TermIndex:
         one-term expansion), with the per-key union of token positions when
         ``positions``: a token satisfies the leaf wherever ANY matched term
         occurs in ANY of the fields. Positional layers never post null
-        positions (only ``*_flat`` label sets do, and phrases never anchor
-        on those)."""
+        positions (only the edge-label set does, and phrases never anchor
+        on it)."""
         df = self._pruned(self.postings, fields, terms)
         cols = [*self._KEYS, "positions"] if positions else self._KEYS
         if len(fields) == 1 and len(terms) == 1:

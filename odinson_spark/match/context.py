@@ -40,9 +40,10 @@ class _FactorizedField:
 
 
 class _FactorizedMultiField:
-    """Field with multiple values per token (incoming/outgoing edge labels)."""
+    """Field with multiple values per token (incoming/outgoing edge labels):
+    a view of the batch CSR, one label code per edge grouped by token."""
 
-    __slots__ = ("codes", "tok_offsets", "sent_offsets", "vocab", "pred_cache")
+    __slots__ = ("codes", "tok_offsets", "sent_offsets", "vocab", "pred_cache", "token_masks")
 
     def __init__(self, codes, tok_offsets, sent_offsets, vocab):
         self.codes = codes
@@ -50,6 +51,16 @@ class _FactorizedMultiField:
         self.sent_offsets = sent_offsets  # sentence -> first token index
         self.vocab = vocab
         self.pred_cache: Dict[object, np.ndarray] = {}
+        # per-token "some value matches" over the whole batch, per leaf
+        self.token_masks: Dict[object, np.ndarray] = {}
+
+
+def _pred_key(matcher, fuzzy: bool):
+    return (
+        type(matcher).__name__,
+        getattr(matcher, "string", None) or getattr(matcher, "pattern", None),
+        fuzzy,
+    )
 
 
 def _factorize(values: List[str]):
@@ -58,11 +69,16 @@ def _factorize(values: List[str]):
 
 
 class SentenceBatch:
+    """``edges``: the batch's graph as the sentence table's (``deps_src``,
+    ``deps_dst``, ``deps_label``) columns — three per-sentence columns of
+    equal-length sequences (None = no edges). The per-token ``incoming``/
+    ``outgoing`` label fields are derived from it (:meth:`multi_field`)."""
+
     def __init__(
         self,
         layers: Dict[str, List[Optional[List[str]]]],
         num_tokens: List[int],
-        edges: Optional[List[Optional[Sequence[Tuple[int, int, str]]]]] = None,
+        edges: Optional[Tuple[Sequence, Sequence, Sequence]] = None,
         roots: Optional[List[Sequence[int]]] = None,
         mentions: Optional[List[Dict[str, List[Tuple[int, int]]]]] = None,
         default_field: str = "norm",
@@ -77,6 +93,7 @@ class SentenceBatch:
         self._roots = roots
         self._mentions = mentions
         self._graphs: Optional[List[Optional[Digraph]]] = None
+        self._csr: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
         self.label_vocab: Optional[LabelVocab] = None
         self._tok_offsets = np.zeros(self.n_sentences + 1, dtype=np.int64)
         np.cumsum(num_tokens, out=self._tok_offsets[1:])
@@ -100,25 +117,17 @@ class SentenceBatch:
         return f
 
     def multi_field(self, name: str) -> _FactorizedMultiField:
+        """The ``incoming``/``outgoing`` labels of every token: a view of
+        the batch CSR (label codes of the edges grouped by token, over the
+        label vocabulary)."""
         f = self._multi_fields.get(name)
         if f is None:
-            col = self.raw_layers.get(name)
-            if col is None:
+            if name not in MULTI_VALUED_FIELDS:
                 raise KeyError(f"no such multi-valued layer: {name}")
-            flat: List[str] = []
-            tok_offsets = [0]
-            sent_offsets = np.zeros(self.n_sentences + 1, dtype=np.int64)
-            for i, toks in enumerate(col):
-                if toks is None:
-                    toks = [[] for _ in range(self.num_tokens[i])]
-                for vals in toks:
-                    flat.extend(vals or ())
-                    tok_offsets.append(len(flat))
-                sent_offsets[i + 1] = sent_offsets[i] + self.num_tokens[i]
-            codes, vocab = _factorize(flat) if flat else (np.zeros(0, np.int32), [])
-            f = _FactorizedMultiField(
-                codes, np.asarray(tok_offsets, dtype=np.int64), sent_offsets, vocab
-            )
+            if self._graphs is None:
+                self._build_graphs()
+            flat, cum = self._csr[name]
+            f = _FactorizedMultiField(flat[1::2], cum, self._tok_offsets, self.label_vocab.labels)
             self._multi_fields[name] = f
         return f
 
@@ -130,7 +139,7 @@ class SentenceBatch:
     def _vocab_pred(self, field_name: str, matcher, fuzzy: bool) -> np.ndarray:
         multi = field_name in MULTI_VALUED_FIELDS
         f = self.multi_field(field_name) if multi else self.field(field_name)
-        key = (type(matcher).__name__, getattr(matcher, "string", None) or getattr(matcher, "pattern", None), fuzzy)
+        key = _pred_key(matcher, fuzzy)
         pred = f.pred_cache.get(key)
         if pred is not None:
             return pred
@@ -173,17 +182,16 @@ class SentenceBatch:
         pred = self._vocab_pred(field_name, matcher, fuzzy)
         if field_name in MULTI_VALUED_FIELDS:
             f = self.multi_field(field_name)
+            key = _pred_key(matcher, fuzzy)
+            tokens = f.token_masks.get(key)
+            if tokens is None:
+                # any matching value per token, for the whole batch at once
+                # (per sentence this would cost O(batch edges) each time)
+                cum = np.concatenate(([0], np.cumsum(pred[f.codes])))
+                tokens = (cum[f.tok_offsets[1:]] - cum[f.tok_offsets[:-1]]) > 0
+                f.token_masks[key] = tokens
             t0 = int(f.sent_offsets[sent_idx])
-            n = self.num_tokens[sent_idx]
-            out = np.zeros(n, dtype=bool)
-            if len(pred) and pred.any():
-                hit = pred[f.codes] if len(f.codes) else np.zeros(0, bool)
-                # any matching value per token
-                cum = np.concatenate(([0], np.cumsum(hit)))
-                starts = f.tok_offsets[t0 : t0 + n]
-                ends = f.tok_offsets[t0 + 1 : t0 + n + 1]
-                out = (cum[ends] - cum[starts]) > 0
-            return out
+            return tokens[t0 : t0 + self.num_tokens[sent_idx]]
         f = self.field(field_name)
         a, b = int(f.offsets[sent_idx]), int(f.offsets[sent_idx + 1])
         if len(pred) == 0 or not pred.any():
@@ -198,38 +206,19 @@ class SentenceBatch:
         return self._graphs[sent_idx]
 
     def _build_graphs(self):
-        if self._edges is None:
-            self._graphs = [None] * self.n_sentences
-            self.label_vocab = LabelVocab([])
-            return
         # flatten all edges across the batch once (labels interned against
-        # one batch vocabulary). Edges per sentence arrive either as a
-        # (src, dst, label) array triple (the Arrow fast path, no per-edge
-        # Python) or a list of tuples (fixtures).
-        src_parts: List[np.ndarray] = []
-        dst_parts: List[np.ndarray] = []
-        lab_parts: List[np.ndarray] = []
-        counts = np.zeros(self.n_sentences, dtype=np.int64)
-        for i, e in enumerate(self._edges):
-            if e is not None and len(e) > 0:
-                if isinstance(e, tuple) and len(e) == 3 and hasattr(e[0], "dtype"):
-                    # the dtype check keeps a plain 3-tuple of (src, dst,
-                    # label) edge tuples on the generic per-edge path below
-                    s, d, l = e
-                else:
-                    s = np.fromiter((x[0] for x in e), dtype=np.int32, count=len(e))
-                    d = np.fromiter((x[1] for x in e), dtype=np.int32, count=len(e))
-                    l = np.fromiter((x[2] for x in e), dtype=object, count=len(e))
-                src_parts.append(np.asarray(s, dtype=np.int32))
-                dst_parts.append(np.asarray(d, dtype=np.int32))
-                lab_parts.append(np.asarray(l, dtype=object))
-                counts[i] = len(src_parts[-1])
-        if lab_parts:
-            all_labels = np.concatenate(lab_parts)
-            codes, vocab = _factorize(all_labels)
-            src_arr = np.concatenate(src_parts).astype(np.int64, copy=False)
-            dst_arr = np.concatenate(dst_parts).astype(np.int64, copy=False)
-            codes = np.asarray(codes, dtype=np.int32)
+        # one batch vocabulary)
+        src_col, dst_col, lab_col = self._edges or ((None,) * self.n_sentences,) * 3
+        counts = np.fromiter(
+            (0 if e is None else len(e) for e in src_col), dtype=np.int64, count=self.n_sentences
+        )
+        has = np.flatnonzero(counts)
+        if len(has):
+            src_arr = np.concatenate([src_col[i] for i in has]).astype(np.int64, copy=False)
+            dst_arr = np.concatenate([dst_col[i] for i in has]).astype(np.int64, copy=False)
+            codes, vocab = _factorize(
+                np.concatenate([np.asarray(lab_col[i], dtype=object) for i in has])
+            )
         else:
             codes, vocab = np.zeros(0, np.int32), []
             src_arr = np.zeros(0, np.int64)
@@ -252,8 +241,7 @@ class SentenceBatch:
             counts = np.bincount(sent_of_edge, minlength=self.n_sentences)
         offsets = np.zeros(self.n_sentences + 1, dtype=np.int64)
         np.cumsum(counts, out=offsets[1:])
-        bases = np.zeros(self.n_sentences + 1, dtype=np.int64)
-        np.cumsum(nt, out=bases[1:])
+        bases = self._tok_offsets
         total_pos = int(bases[-1])
         edge_base = bases[sent_of_edge]
 
@@ -271,6 +259,7 @@ class SentenceBatch:
 
         out_flat, out_cum = global_csr(src_arr, dst_arr)
         in_flat, in_cum = global_csr(dst_arr, src_arr)
+        self._csr = {"incoming": (in_flat, in_cum), "outgoing": (out_flat, out_cum)}
 
         graphs: List[Optional[Digraph]] = []
         for i in range(self.n_sentences):

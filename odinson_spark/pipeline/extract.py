@@ -34,42 +34,18 @@ from ..match import program as prog
 from ..match.context import SentenceBatch
 from ..match.extractor import BatchExtractor
 from ..plans.prefilter import pf_or, prefilter_of, to_spark_column
-from ..schema import MENTIONS_SCHEMA, SENTENCES_SCHEMA, TRIPLES_SCHEMA
+from ..schema import (
+    GRAPH_COLUMNS,
+    MENTIONS_SCHEMA,
+    SENTENCES_SCHEMA,
+    TRIPLES_SCHEMA,
+    sentences_schema,
+)
 from ..tokenizer.code_tokenizer import annotate_code, annotate_text, content_sha
 
 # ---------------------------------------------------------------------------
 # stage 1: tokenize
 # ---------------------------------------------------------------------------
-
-
-def _sentences_rows(doc_id, sha, lang, sentences, extra_token_fields=()) -> Iterator[dict]:
-    for s in sentences:
-        edges = s.get("edges") or []
-        labels = [lab for _, _, lab in edges]
-        incoming = sorted({lab for _, _, lab in edges})
-        extras = {name: s.get(name) for name in extra_token_fields}
-        yield {
-            **extras,
-            "doc_id": doc_id,
-            "sent_id": s["sent_id"],
-            "content_sha": sha,
-            "lang": lang,
-            "num_tokens": len(s["raw"]),
-            "raw": s["raw"],
-            "word": s["word"],
-            "norm": s["norm"],
-            "norm_alt": s.get("norm_alt"),
-            "lemma": s["lemma"],
-            "tag": s["tag"],
-            "chunk": s["chunk"],
-            "entity": s["entity"],
-            "deps_src": [e[0] for e in edges],
-            "deps_dst": [e[1] for e in edges],
-            "deps_label": labels,
-            "deps_roots": s.get("roots") or [],
-            "incoming_flat": incoming,
-            "outgoing_flat": incoming,
-        }
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -90,80 +66,34 @@ def _fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
-_SENTENCE_COLS = [f.name for f in SENTENCES_SCHEMA.fields]
+# columns filled from the document (and num_tokens from the raw layer);
+# every other sentence column is read off the sentence dict by its name
+_DOC_COLS = ("doc_id", "content_sha", "lang", "num_tokens")
 
 
-def _sentences_frame(annotated: Iterable[Tuple[str, str, Optional[str], list]]) -> pd.DataFrame:
-    """(doc_id, sha, lang, sentences) stream → one Arrow-ready frame, built
-    column-wise (dict-of-lists): no per-sentence dict, one DataFrame
-    construction per batch — the batch_from_pandas treatment applied to the
-    tokenize stage."""
-    c_doc, c_sent, c_sha, c_lang, c_nt = [], [], [], [], []
-    c_raw, c_word, c_norm, c_nalt, c_lem, c_tag, c_chk, c_ent = (
-        [], [], [], [], [], [], [], [],
-    )
-    c_src, c_dst, c_lab, c_roots, c_inc, c_out = [], [], [], [], [], []
+def _sentences_frame(
+    annotated: Iterable[Tuple[str, str, Optional[str], list]], extra_token_fields=()
+) -> pd.DataFrame:
+    """(doc_id, sha, lang, sentences) stream → one Arrow-ready frame with the
+    columns of ``sentences_schema(extra_token_fields)``. A sentence dict is
+    keyed by those column names (tokenizer/code_tokenizer.py), so the frame
+    is built column-wise with no per-column knowledge: one DataFrame
+    construction per batch, no per-sentence row dict."""
+    names = [f.name for f in sentences_schema(extra_token_fields).fields]
+    docs: list = []
+    sents: list = []
     for doc_id, sha, lang, sentences in annotated:
         for s in sentences:
-            edges = s.get("edges") or []
-            if isinstance(edges, tuple) and len(edges) == 3:
-                # vectorized (src, dst, label) triple from the annotator
-                src_l, dst_l, labels = (
-                    edges[0].tolist(),
-                    edges[1].tolist(),
-                    edges[2].tolist(),
-                )
-            else:
-                src_l = [e[0] for e in edges]
-                dst_l = [e[1] for e in edges]
-                labels = [lab for _, _, lab in edges]
-            incoming = sorted(set(labels))
-            c_doc.append(doc_id)
-            c_sent.append(s["sent_id"])
-            c_sha.append(sha)
-            c_lang.append(lang)
-            c_nt.append(len(s["raw"]))
-            c_raw.append(s["raw"])
-            c_word.append(s["word"])
-            c_norm.append(s["norm"])
-            c_nalt.append(s.get("norm_alt"))
-            c_lem.append(s["lemma"])
-            c_tag.append(s["tag"])
-            c_chk.append(s["chunk"])
-            c_ent.append(s["entity"])
-            c_src.append(src_l)
-            c_dst.append(dst_l)
-            c_lab.append(labels)
-            c_roots.append(s.get("roots") or [])
-            c_inc.append(incoming)
-            c_out.append(incoming)
-    if not c_doc:
+            docs.append((doc_id, sha, lang, len(s["raw"])))
+            sents.append(s)
+    if not sents:
         # empty dict-of-lists would infer float64 columns Arrow can't cast
-        return pd.DataFrame(columns=_SENTENCE_COLS)
-    return pd.DataFrame(
-        {
-            "doc_id": c_doc,
-            "sent_id": c_sent,
-            "content_sha": c_sha,
-            "lang": c_lang,
-            "num_tokens": c_nt,
-            "raw": c_raw,
-            "word": c_word,
-            "norm": c_norm,
-            "norm_alt": c_nalt,
-            "lemma": c_lem,
-            "tag": c_tag,
-            "chunk": c_chk,
-            "entity": c_ent,
-            "deps_src": c_src,
-            "deps_dst": c_dst,
-            "deps_label": c_lab,
-            "deps_roots": c_roots,
-            "incoming_flat": c_inc,
-            "outgoing_flat": c_out,
-        },
-        columns=_SENTENCE_COLS,
-    )
+        return pd.DataFrame(columns=names)
+    data = dict(zip(_DOC_COLS, map(list, zip(*docs))))
+    for c in names:
+        if c not in data:
+            data[c] = [s.get(c) for s in sents]
+    return pd.DataFrame(data, columns=names)
 
 
 def tokenize_repos(repos: DataFrame, max_tokens: int = 100) -> DataFrame:
@@ -230,8 +160,13 @@ def apply_prefilter(sentences: DataFrame, extractors: Sequence[Extractor]) -> Da
 _LAYER_NAMES = ("raw", "word", "norm", "norm_alt", "lemma", "tag", "chunk", "entity")
 
 
-def _fields_used(programs) -> set:
+def _grammar_reads(programs) -> Tuple[set, bool]:
+    """(token fields the programs read, whether they need the edge columns):
+    one walk over the compiled programs. Traversals and events read the
+    graph, and so does an ``[incoming=]``/``[outgoing=]`` constraint — those
+    labels are derived from the edges (SentenceBatch.multi_field)."""
     fields = set()
+    graph = False
 
     def walk_mask(e):
         if isinstance(e, prog.LeafMask):
@@ -256,15 +191,18 @@ def _fields_used(programs) -> set:
             walk_ft(ft.sub)
 
     def walk(p):
+        nonlocal graph
         if p is None:
             return
         if isinstance(p, prog.PToken):
             walk_mask(p.expr)
         elif isinstance(p, prog.PEvent):
+            graph = True
             walk(p.trigger)
             for a in list(p.required) + list(p.optional):
                 walk_ft(a.full_traversal)
         elif isinstance(p, prog.PGraphTraversal):
+            graph = True
             walk(p.src)
             walk_ft(p.full_traversal)
         else:
@@ -277,80 +215,24 @@ def _fields_used(programs) -> set:
 
     for p in programs:
         walk(p)
-    return fields
-
-
-def _uses_graph(programs) -> bool:
-    def walk(p) -> bool:
-        if isinstance(p, (prog.PGraphTraversal, prog.PEvent)):
-            return True
-        for attr in ("sub", "main", "filter"):
-            v = getattr(p, attr, None)
-            if isinstance(v, prog.Prog) and walk(v):
-                return True
-        for c in getattr(p, "clauses", ()) or ():
-            if walk(c):
-                return True
-        return False
-
-    return any(walk(p) for p in programs)
+    return fields, graph or bool(fields & {"incoming", "outgoing"})
 
 
 def batch_from_pandas(
-    pdf: pd.DataFrame,
-    need_graph: bool,
-    need_inout: bool,
-    extra_token_fields: Sequence[str] = (),
+    pdf: pd.DataFrame, extra_token_fields: Sequence[str] = ()
 ) -> Tuple[SentenceBatch, list, list]:
     """Arrow batch → SentenceBatch with no per-row Python conversion: token
-    layers stay as the numpy object arrays Arrow produced, edges are passed
-    as (src, dst, label) array triples that _build_graphs concatenates
-    vectorized."""
-    import numpy as np
-
-    n = len(pdf)
+    layers stay as the numpy object arrays Arrow produced, and the edge
+    columns (selected only when the grammar reads the graph) pass as they
+    are for _build_graphs to concatenate."""
     layers = {}
     for name in (*_LAYER_NAMES, *extra_token_fields):
         if name in pdf.columns and name not in layers:
             layers[name] = pdf[name].to_numpy()
-    num_tokens = pdf["num_tokens"].to_numpy()
     edges = None
-    # inout layers are derived from edges, so a bare [incoming=]/[outgoing=]
-    # token constraint needs the edge columns even without any traversal
-    if (need_graph or need_inout) and "deps_src" in pdf.columns:
-        edges = []
-        for src, dst, lab in zip(
-            pdf["deps_src"].to_numpy(),
-            pdf["deps_dst"].to_numpy(),
-            pdf["deps_label"].to_numpy(),
-        ):
-            if src is None or len(src) == 0:
-                edges.append(None)
-            else:
-                edges.append(
-                    (
-                        np.asarray(src, dtype=np.int32),
-                        np.asarray(dst, dtype=np.int32),
-                        np.asarray(lab, dtype=object),
-                    )
-                )
-    if need_inout and edges is not None:
-        inc_col, out_col = [], []
-        for i in range(n):
-            nt = int(num_tokens[i])
-            inc = [[] for _ in range(nt)]
-            out = [[] for _ in range(nt)]
-            if edges[i] is not None:
-                s_arr, d_arr, l_arr = edges[i]
-                for s, d, lab in zip(s_arr.tolist(), d_arr.tolist(), l_arr.tolist()):
-                    if 0 <= s < nt and 0 <= d < nt:
-                        out[s].append(lab)
-                        inc[d].append(lab)
-            inc_col.append(inc)
-            out_col.append(out)
-        layers["incoming"] = inc_col
-        layers["outgoing"] = out_col
-    batch = SentenceBatch(layers=layers, num_tokens=num_tokens, edges=edges)
+    if "deps_src" in pdf.columns:
+        edges = tuple(pdf[c].to_numpy() for c in ("deps_src", "deps_dst", "deps_label"))
+    batch = SentenceBatch(layers=layers, num_tokens=pdf["num_tokens"].to_numpy(), edges=edges)
     return batch, list(pdf["doc_id"]), pdf["sent_id"].to_numpy().tolist()
 
 
@@ -417,8 +299,8 @@ def _mention_frame(mentions, idx_by_key, raws, shas, EventMatch) -> pd.DataFrame
 def required_columns(
     extractors: Sequence[Extractor], extra_token_fields: Sequence[str] = ()
 ) -> List[str]:
-    programs = [e.program for e in extractors]
-    fields = _fields_used(programs) & (set(_LAYER_NAMES) | set(extra_token_fields))
+    fields, needs_edges = _grammar_reads([e.program for e in extractors])
+    fields &= set(_LAYER_NAMES) | set(extra_token_fields)
     cols = ["doc_id", "sent_id", "content_sha", "num_tokens", "raw"]
     cols += sorted(fields - {"raw"})
     if "norm" not in cols:
@@ -427,8 +309,8 @@ def required_columns(
     # (from raw, only where it differs)
     if "norm" in cols and "norm_alt" not in cols:
         cols.append("norm_alt")
-    if _uses_graph(programs) or _fields_used(programs) & {"incoming", "outgoing"}:
-        cols += ["deps_src", "deps_dst", "deps_label", "deps_roots"]
+    if needs_edges:
+        cols += GRAPH_COLUMNS
     return cols
 
 
@@ -448,9 +330,6 @@ def extract_mentions_df(
     ``extra_token_fields``: user-configured token layers beyond the built-in
     set (reference ``allTokenFields``, reference.conf:46-57) — each must be a
     position-aligned array<string> column on ``sentences``."""
-    programs = [e.program for e in extractors]
-    need_graph = _uses_graph(programs)
-    need_inout = bool(_fields_used(programs) & {"incoming", "outgoing"})
     extra_token_fields = tuple(extra_token_fields)
     cols = [
         c for c in required_columns(extractors, extra_token_fields) if c in sentences.columns
@@ -465,9 +344,7 @@ def extract_mentions_df(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            batch, doc_ids, sent_ids = batch_from_pandas(
-                pdf, need_graph, need_inout, extra_token_fields
-            )
+            batch, doc_ids, sent_ids = batch_from_pandas(pdf, extra_token_fields)
             raws = batch.raw_layers.get("raw")
             if raws is None:
                 raws = batch.raw_layers.get("word")

@@ -3,7 +3,7 @@
 This is the engine's "custom optimizer rule", implemented as query
 construction (not a JVM Catalyst extension): from a compiled pattern we
 derive a conservative necessary condition — a boolean combination of
-``array_contains`` tests over token-layer columns and edge-label set columns
+``array_contains`` tests over token-layer columns and the edge-label column
 — and apply it as a DataFrame ``filter`` *before* the matcher UDF. Catalyst
 pushes it into the scan (parquet/Iceberg row-group skipping via column
 stats), so the expensive Python stage only sees sentences that can possibly
@@ -221,8 +221,8 @@ def _anchors_of(p, default_field: str, base: int):
     """(term_anchors, multi_anchors) of a KNOWN-width fragment: literal
     (offset, field, value) triples plus (offset, PFMultiTerm) pairs for
     regex/fuzzy tokens (anchored through the dictionary expansion). Only
-    single-valued token layers anchor positions — incoming/outgoing live
-    as sentence-level flat sets in the index, positionless."""
+    single-valued token layers anchor positions — incoming/outgoing are
+    posted as the sentence's edge-label set in the index, positionless."""
     t = type(p)
     if t is prog.PToken:
         m = _mask_pf(p.expr, default_field)
@@ -342,10 +342,11 @@ def prefilter_of(p: prog.Prog, default_field: str = "norm") -> object:
 # --- rendering ---------------------------------------------------------------
 
 
-# the sentence table stores per-token incoming/outgoing label lists flattened
-# to a sentence-level label set; a [incoming=l]/[outgoing=l] token constraint
-# implies the label exists somewhere in the sentence
-_FIELD_TO_COLUMN = {"incoming": "incoming_flat", "outgoing": "outgoing_flat"}
+# a token's incoming/outgoing labels are labels of the sentence's edges, so
+# a [incoming=l]/[outgoing=l] constraint or a traversal step over l implies
+# that l is in the sentence's edge-label column
+EDGE_LABELS = "deps_label"
+_FIELD_TO_COLUMN = {"incoming": EDGE_LABELS, "outgoing": EDGE_LABELS}
 
 
 def to_spark_column(pf, columns=None):
@@ -370,7 +371,7 @@ def to_spark_column(pf, columns=None):
             )
         return col
     if isinstance(pf, PFEdge):
-        return F.array_contains(F.col("outgoing_flat"), pf.label)
+        return F.array_contains(F.col(EDGE_LABELS), pf.label)
     if isinstance(pf, PFMultiTerm):
         # sound but unconstrained on the scan path: a per-token regex/edit-
         # distance test would be an interpreted HOF in the hot path; the
@@ -390,27 +391,4 @@ def to_spark_column(pf, columns=None):
         for s in pf.subs[1:]:
             col = col | to_spark_column(s, columns)
         return col
-    raise TypeError(f"unknown prefilter {pf!r}")
-
-
-def to_sql(pf, columns=None) -> str:
-    if isinstance(pf, PFTrue):
-        return "TRUE"
-    if isinstance(pf, PFFalse):
-        return "FALSE"
-    if isinstance(pf, PFTerm):
-        v = pf.value.replace("'", "''")
-        sql = f"array_contains({_FIELD_TO_COLUMN.get(pf.field, pf.field)}, '{v}')"
-        if pf.field == "norm" and columns is not None and "norm_alt" in columns:
-            sql = f"({sql} OR coalesce(array_contains(norm_alt, '{v}'), FALSE))"
-        return sql
-    if isinstance(pf, PFEdge):
-        v = pf.label.replace("'", "''")
-        return f"array_contains(outgoing_flat, '{v}')"
-    if isinstance(pf, (PFMultiTerm, PFPhrase)):
-        return "TRUE"
-    if isinstance(pf, PFAnd):
-        return "(" + " AND ".join(to_sql(s, columns) for s in pf.subs) + ")"
-    if isinstance(pf, PFOr):
-        return "(" + " OR ".join(to_sql(s, columns) for s in pf.subs) + ")"
     raise TypeError(f"unknown prefilter {pf!r}")

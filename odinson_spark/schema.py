@@ -3,9 +3,11 @@
 The annotated-sentence table is the Spark analogue of the reference's Lucene
 index (one row per sentence, token layers as position-aligned arrays,
 dependency graph as parallel edge arrays — OdinsonIndexWriter.scala:113-205).
-Flat ``incoming``/``outgoing`` label-set columns exist purely so traversal
-prefilters can be pushed into the scan (the analogue of the reference's
-traversal anchor pushdown, QueryCompiler.scala:544-615).
+The graph columns are the one sentence-graph format from annotator to
+matcher: ``SentenceBatch`` builds the CSR from them and derives the
+per-token ``incoming``/``outgoing`` labels there, and traversal prefilters
+push into the scan as ``array_contains(deps_label, l)`` (the analogue of the
+reference's traversal anchor pushdown, QueryCompiler.scala:544-615).
 """
 
 from __future__ import annotations
@@ -59,11 +61,28 @@ SENTENCES_SCHEMA = StructType(
         StructField("deps_dst", _AI),
         StructField("deps_label", _AS),
         StructField("deps_roots", _AI),
-        # flat label sets for scan-level prefilter pushdown
-        StructField("incoming_flat", _AS),
-        StructField("outgoing_flat", _AS),
     ]
 )
+
+
+GRAPH_COLUMNS = ("deps_src", "deps_dst", "deps_label", "deps_roots")
+
+
+def graph_columns(edges, roots=()) -> dict:
+    """A reference ``GraphField`` (``edges`` as (src, dst, label) triples,
+    ``roots``) → the sentence table's graph columns."""
+    edges = edges or ()
+    return dict(
+        zip(
+            GRAPH_COLUMNS,
+            (
+                [e[0] for e in edges],
+                [e[1] for e in edges],
+                [e[2] for e in edges],
+                list(roots or ()),
+            ),
+        )
+    )
 
 def sentences_schema(extra_token_fields=()) -> StructType:
     """SENTENCES_SCHEMA plus user-configured token layers.

@@ -22,7 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline.extract import _sentences_rows
+from ..pipeline.extract import _sentences_frame
+from ..schema import graph_columns
 from ..lang.normalize import (
     normalize_unicode,
     normalize_unicode_aggressively,
@@ -42,14 +43,14 @@ def doc_to_sentences(
     sent_id = 0
     for s in doc.get("sentences", []):
         sent: Dict[str, object] = {}
+        graph = graph_columns(())
         for f in s.get("fields", []):
             ftype = f.get("$type", "")
             name = f.get("name")
             if ftype.endswith("TokensField"):
                 sent[name] = f.get("tokens")
             elif ftype.endswith("GraphField"):
-                sent["edges"] = [tuple(e) for e in f.get("edges", [])]
-                sent["roots"] = list(f.get("roots", []))
+                graph = graph_columns(f.get("edges"), f.get("roots"))
         raw = sent.get("raw") or sent.get("word")
         if raw is None or len(raw) == 0 or len(raw) > max_tokens:
             # over-long sentences are dropped at index time, like the
@@ -75,8 +76,7 @@ def doc_to_sentences(
             "tag": [normalize_unicode(t) for t in sent.get("tag") or []] or None,
             "chunk": list(sent.get("chunk") or []) or None,
             "entity": list(sent.get("entity") or []) or None,
-            "edges": sent.get("edges") or [],
-            "roots": sent.get("roots") or [],
+            **graph,
         }
         for name in extra_token_fields:
             v = sent.get(name)
@@ -241,7 +241,7 @@ def read_document_json(
         import hashlib
 
         for pdf in batches:
-            rows = []
+            docs, mjs, mks = [], [], []
             for line in pdf["value"]:
                 line = (line or "").strip()
                 if not line:
@@ -252,14 +252,12 @@ def read_document_json(
                 )
                 sha = hashlib.sha256(line.encode("utf-8")).hexdigest()
                 vals, kinds = _meta_values(doc.get("metadata"))
-                mj, mk = json.dumps(vals), json.dumps(kinds)
-                for r in _sentences_rows(
-                    str(doc.get("id")), sha, None, sentences, extra_token_fields
-                ):
-                    r["meta_json"] = mj
-                    r["meta_kinds_json"] = mk
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+                docs.append((str(doc.get("id")), sha, None, sentences))
+                mjs += [json.dumps(vals)] * len(sentences)
+                mks += [json.dumps(kinds)] * len(sentences)
+            yield _sentences_frame(docs, extra_token_fields).assign(
+                meta_json=mjs, meta_kinds_json=mks
+            )
 
     df = lines.mapInPandas(fn, out_schema)
     if not expand_metadata:

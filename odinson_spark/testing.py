@@ -12,6 +12,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 from .lang.normalize import normalize_unicode, normalize_unicode_aggressively, sanitize_token
 from .match.context import SentenceBatch
+from .schema import GRAPH_COLUMNS, graph_columns
 
 
 def sentence_batch_from_texts(texts: Sequence[str]) -> SentenceBatch:
@@ -27,11 +28,12 @@ def sentence_batch_from_docs(
     sentences: List[dict], build_inout: bool = True, pre_normalized: bool = False
 ) -> SentenceBatch:
     """Build a batch from annotated-sentence dicts with keys:
-    ``raw word lemma tag chunk entity`` (token lists), ``edges`` (list of
-    (src, dst, label)), ``roots`` (list of int), ``mentions``
-    (dict label -> [(start, end), …]). ``build_inout=False`` skips the
-    per-token incoming/outgoing label lists (only needed when a pattern
-    queries those fields).
+    ``raw word lemma tag chunk entity`` (token lists), the graph either as
+    the sentence table's ``deps_src``/``deps_dst``/``deps_label``/
+    ``deps_roots`` (this engine's annotators) or as a reference-style
+    ``edges`` list of (src, dst, label) with ``roots``, and ``mentions``
+    (dict label -> [(start, end), …]). ``build_inout`` no longer does
+    anything: the batch derives incoming/outgoing labels from its graph.
 
     ``pre_normalized=True``: trust the input to be already sanitized +
     NFKC'd with a precomputed ``norm`` layer (true for this engine's own
@@ -39,15 +41,17 @@ def sentence_batch_from_docs(
     redundant per-token re-normalization when a Spark-free run matches
     annotator output directly.
 
-    Keys beyond the built-ins and the reserved ``edges``/``roots``/
-    ``mentions`` become extra token layers verbatim — arbitrary configured
-    fields index like any other layer (reference TestFields.scala:42-94)."""
-    n = len(sentences)
+    Keys beyond the built-ins and the reserved graph/``mentions`` keys
+    become extra token layers verbatim — arbitrary configured fields index
+    like any other layer (reference TestFields.scala:42-94)."""
     layer_names = ("raw", "word", "lemma", "tag", "chunk", "entity")
-    if build_inout:
-        layer_names = layer_names + ("incoming", "outgoing")
-    reserved = set(layer_names) | {"norm", "norm_alt", "edges", "roots", "mentions",
-                                   "incoming", "outgoing"}
+    graphs = [
+        s if "deps_src" in s else graph_columns(s.get("edges"), s.get("roots"))
+        for s in sentences
+    ]
+    reserved = set(layer_names) | set(GRAPH_COLUMNS) | {
+        "norm", "norm_alt", "edges", "roots", "mentions", "incoming", "outgoing",
+    }
     extra_names = sorted({k for s in sentences for k in s.keys() if k not in reserved})
     layers: Dict[str, list] = {k: [] for k in layer_names}
     layers["norm"] = []
@@ -55,8 +59,6 @@ def sentence_batch_from_docs(
     for k in extra_names:
         layers[k] = []
     num_tokens = []
-    edges = []
-    roots = []
     mentions = []
     for s in sentences:
         if pre_normalized:
@@ -85,32 +87,12 @@ def sentence_batch_from_docs(
             if v and not pre_normalized:
                 v = [normalize_unicode(t) for t in v]
             layers[k].append(list(v) if v else None)
-        e = s.get("edges") or []
-        edges.append(e)
-        roots.append(s.get("roots") or [])
         mentions.append(s.get("mentions") or {})
-        if build_inout:
-            # derived per-token incoming/outgoing label lists
-            inc = [[] for _ in raw]
-            out = [[] for _ in raw]
-            if isinstance(e, tuple) and len(e) == 3 and hasattr(e[0], "dtype"):
-                # vectorized (src, dst, label) array triple from an annotator
-                # (the dtype check keeps a plain 3-tuple of (src, dst, label)
-                # edge tuples on the generic path below)
-                edge_iter = zip(e[0].tolist(), e[1].tolist(), e[2].tolist())
-            else:
-                edge_iter = iter(e)
-            for (src, dst, lab) in edge_iter:
-                if 0 <= src < len(raw) and 0 <= dst < len(raw):
-                    out[src].append(lab)
-                    inc[dst].append(lab)
-            layers["incoming"].append(inc)
-            layers["outgoing"].append(out)
     return SentenceBatch(
         layers=layers,
         num_tokens=num_tokens,
-        edges=edges,
-        roots=roots,
+        edges=tuple([g[c] for g in graphs] for c in ("deps_src", "deps_dst", "deps_label")),
+        roots=[g.get("deps_roots") for g in graphs],
         mentions=mentions,
     )
 

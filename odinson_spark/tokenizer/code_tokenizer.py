@@ -14,6 +14,10 @@ is agnostic to what the layers mean — reference README.md:20). Two flavors:
   enough that a SQL oracle can reproduce every derived layer exactly —
   this is what the DuckDB correctness gate runs against.
 
+Both return sentence dicts keyed by the sentence table's columns
+(schema.SENTENCES_SCHEMA): token layers plus the graph as ``deps_src``/
+``deps_dst``/``deps_label``/``deps_roots``.
+
 Both cap sentences at ``max_tokens`` (reference drops over-long sentences at
 index time, OdinsonIndexWriter.scala:116-120 — a skew guard we keep).
 """
@@ -93,13 +97,19 @@ def _sentence_from_code_tokens(pairs: List[Tuple[str, str]]) -> Dict:
             in_run = True
         else:
             in_run = False
-    # code-structure digraph
-    edges: List[Tuple[int, int, str]] = []
-    for i in range(n - 1):
-        edges.append((i, i + 1, "next"))
+    # code-structure digraph, as the table's parallel edge columns
+    src: List[int] = list(range(n - 1))
+    dst: List[int] = list(range(1, n))
+    lab: List[str] = ["next"] * (n - 1)
+
+    def edge(a: int, b: int, label: str) -> None:
+        src.append(a)
+        dst.append(b)
+        lab.append(label)
+
     for i in range(n):
         if entity[i] == "DEF" and i > 0:
-            edges.append((i - 1, i, "def"))
+            edge(i - 1, i, "def")
         if entity[i] == "CALL":
             # call -> first token of each top-level argument
             depth = 0
@@ -117,7 +127,7 @@ def _sentence_from_code_tokens(pairs: List[Tuple[str, str]]) -> Dict:
                     if raw[j] == ",":
                         expect_arg = True
                     elif expect_arg:
-                        edges.append((i, j, "arg"))
+                        edge(i, j, "arg")
                         expect_arg = False
         if tags[i] == "OP" and raw[i] == "=":
             lhs = next((j for j in range(i - 1, -1, -1) if tags[j] == "IDENT"), None)
@@ -126,7 +136,7 @@ def _sentence_from_code_tokens(pairs: List[Tuple[str, str]]) -> Dict:
                 None,
             )
             if lhs is not None and rhs is not None:
-                edges.append((lhs, rhs, "assign"))
+                edge(lhs, rhs, "assign")
     lemma = [t.lower() for t in raw]
     return {
         "raw": raw,
@@ -136,8 +146,10 @@ def _sentence_from_code_tokens(pairs: List[Tuple[str, str]]) -> Dict:
         "tag": tags,
         "chunk": chunk,
         "entity": entity,
-        "edges": edges,
-        "roots": [0] if n else [],
+        "deps_src": src,
+        "deps_dst": dst,
+        "deps_label": lab,
+        "deps_roots": [0] if n else [],
     }
 
 
@@ -165,8 +177,6 @@ _EDGE_NEXT = np.full(_EDGE_CACHE_LEN, "next", dtype=object)
 
 
 def _next_chain_edges(n: int):
-    if n <= 1:
-        return ()
     if n <= _EDGE_CACHE_LEN:
         return (_EDGE_IDX[: n - 1], _EDGE_IDX[1:n], _EDGE_NEXT[: n - 1])
     src = np.arange(n - 1, dtype=np.int32)
@@ -177,8 +187,8 @@ def annotate_text(content: str, max_tokens: int = MAX_TOKENS_PER_SENTENCE) -> Li
     """Whitespace tokenization with a next-chain graph; one sentence per doc
     (SQL-oracle-reproducible: token i is element i+1 of string_split).
 
-    Edges come back as a vectorized (src, dst, label) array triple — the
-    matcher's CSR builder consumes this form with no per-edge Python.
+    The graph columns are numpy arrays (read-only views of one cached
+    next-chain), which Arrow and the matcher's CSR builder take as they are.
 
     ASCII fast path: ``str.split`` never yields whitespace-only tokens, so
     ``sanitize_token`` is the identity here; on ASCII input NFKC is also the
@@ -200,6 +210,7 @@ def annotate_text(content: str, max_tokens: int = MAX_TOKENS_PER_SENTENCE) -> Li
         norm = [normalize_unicode_aggressively(t) for t in raw]
         lemma = [t.lower() for t in raw]
     n = len(raw)
+    src, dst, lab = _next_chain_edges(n)
     return [
         {
             "sent_id": 0,
@@ -210,7 +221,9 @@ def annotate_text(content: str, max_tokens: int = MAX_TOKENS_PER_SENTENCE) -> Li
             "tag": ["NUM" if t.isdigit() else "WORD" for t in raw],
             "chunk": ["O"] * n,
             "entity": ["O"] * n,
-            "edges": _next_chain_edges(n),
-            "roots": [0],
+            "deps_src": src,
+            "deps_dst": dst,
+            "deps_label": lab,
+            "deps_roots": [0],
         }
     ]

@@ -135,8 +135,6 @@ def test_arbitrary_field_spark_end_to_end(spark):
         "deps_dst": [],
         "deps_label": [],
         "deps_roots": [],
-        "incoming_flat": [],
-        "outgoing_flat": [],
     }
     df = spark.createDataFrame([row], schema)
     engine = SearchEngine(df, extra_token_fields=("fizzbuzz",))
@@ -145,10 +143,10 @@ def test_arbitrary_field_spark_end_to_end(spark):
     assert (res.rows[0].start, res.rows[0].end) == (4, 5)
     # and the prefilter actually constrains the custom column
     from odinson_spark.pipeline.extract import combined_prefilter
-    from odinson_spark.plans.prefilter import to_sql
+    from odinson_spark.plans.prefilter import to_spark_column
 
-    pf_sql = to_sql(combined_prefilter(engine.compile("[fizzbuzz=buzz & raw=five]")))
-    assert "fizzbuzz" in pf_sql
+    pf_col = to_spark_column(combined_prefilter(engine.compile("[fizzbuzz=buzz & raw=five]")))
+    assert "fizzbuzz" in str(pf_col)
 
 
 # ---------------------------------------------------------------------------

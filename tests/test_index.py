@@ -258,6 +258,9 @@ class TestIncremental:
         reopened.compact()
         assert reopened._tombstones() is None
         assert self._hits(reopened) == after_delete
+        # the crashed compact's work directory is gone too
+        parent = os.path.dirname(inc.path)
+        assert os.listdir(parent) == [os.path.basename(inc.path)]
 
     def test_update_replaces(self, spark, inc):
         new = spark.createDataFrame(
@@ -555,14 +558,40 @@ def test_read_rejects_foreign_format(spark, index, tmp_path, case):
         TermIndex.read(spark, path)
 
 
+def test_file_uri_resolves_to_local_path(spark, tmp_path):
+    """``file:`` URIs name the local directory at build and at read."""
+    local = str(tmp_path / "uri_idx")
+    sents = tokenize_documents(
+        spark.createDataFrame([(1, "fast key", "en")], "doc_id long, text string, lang string")
+    )
+    built = TermIndex.build(sents, "file://" + local)
+    assert built.path == local and os.path.isfile(os.path.join(local, "odinson_index_meta.json"))
+    opened = TermIndex.read(spark, "file:" + local)
+    assert opened.path == local
+    assert opened.candidate_keys(pf.PFTerm("norm", "fast")).count() == 1
+
+
+@pytest.mark.parametrize("op", ["build", "read"])
+def test_non_local_uri_rejected(spark, op):
+    """Meta, tombstone listing and the compact swaps are local-filesystem
+    operations: any other scheme raises, naming the path, before anything
+    is written."""
+    path = "s3a://bucket/odinson_idx"
+    with pytest.raises(OdinsonException, match=re.escape(path)):
+        if op == "build":
+            TermIndex.build(spark.createDataFrame([], "doc_id string"), path)
+        else:
+            TermIndex.read(spark, path)
+
+
 def test_positional_postings_never_null(spark, index, tmp_path):
-    """Every postings row of a positional layer (any field not ending in
-    ``_flat``) carries positions, at build and after an append: the phrase
-    filter and the synonym position union rely on it."""
+    """Every postings row of a positional layer (any field but the
+    edge-label set ``deps_label``) carries positions, at build and after an
+    append: the phrase filter and the synonym position union rely on it."""
     import shutil
 
     def null_positions(idx):
-        positional = idx.postings.filter(~F.col("field").endswith("_flat"))
+        positional = idx.postings.filter(F.col("field") != "deps_label")
         assert positional.count() > 0
         return positional.filter(F.col("positions").isNull()).count()
 
@@ -754,8 +783,8 @@ def test_cost_model_routes_by_selectivity(spark, index):
 def test_postings_of_rows(spark):
     """The postings builder emits one row per (field, term, sentence): the
     term's bucket, its ascending token positions in positional layers, and
-    null positions for ``*_flat`` label sets. Null arrays and null tokens
-    post nothing."""
+    null positions for the ``deps_label`` edge-label set, posted once per
+    label. Null arrays and null tokens post nothing."""
     import zlib
 
     from odinson_spark.index import _postings_of
@@ -766,7 +795,7 @@ def test_postings_of_rows(spark):
             (1, "d2", 3, ["b", None, "c"], None),
         ],
         "doc_bucket int, doc_id string, sent_id int, norm array<string>, "
-        "outgoing_flat array<string>",
+        "deps_label array<string>",
     )
 
     def tb(term):
@@ -774,14 +803,14 @@ def test_postings_of_rows(spark):
 
     rows = sorted(
         (r.field, r.term, r.doc_bucket, r.doc_id, r.sent_id, r.positions, r.tbucket)
-        for r in _postings_of(src, ["norm", "outgoing_flat"], 8).collect()
+        for r in _postings_of(src, ["norm", "deps_label"], 8).collect()
     )
     assert rows == sorted(
         [
             ("norm", "a", 0, "d1", 0, [0, 2], tb("a")),
             ("norm", "b", 0, "d1", 0, [1], tb("b")),
-            ("outgoing_flat", "dobj", 0, "d1", 0, None, tb("dobj")),
-            ("outgoing_flat", "nsubj", 0, "d1", 0, None, tb("nsubj")),
+            ("deps_label", "dobj", 0, "d1", 0, None, tb("dobj")),
+            ("deps_label", "nsubj", 0, "d1", 0, None, tb("nsubj")),
             ("norm", "b", 1, "d2", 3, [0], tb("b")),
             ("norm", "c", 1, "d2", 3, [2], tb("c")),
         ]
@@ -790,7 +819,7 @@ def test_postings_of_rows(spark):
 
 def test_idx_graph_edge_anchor_in_plan(index, scan_engine):
     """An edge-anchored pattern through the index must (a) equal the scan
-    path and (b) actually use the outgoing_flat postings lookup when the
+    path and (b) actually use the deps_label postings lookup when the
     candidate join is forced."""
     eng = index.engine(max_candidate_frac=1.0)
     pat = "quick >next []"
@@ -807,4 +836,5 @@ def test_idx_graph_edge_anchor_in_plan(index, scan_engine):
     )
     assert a == b and len(a) > 0
     plan = eng.mentions(pat)._jdf.queryExecution().executedPlan().toString()
-    assert "outgoing_flat" in plan and "LeftSemi" in plan
+    # the postings lookup of the edge label, pushed into the postings scan
+    assert "EqualTo(field,deps_label)" in plan and "LeftSemi" in plan

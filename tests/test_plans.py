@@ -16,7 +16,6 @@ from odinson_spark.plans.prefilter import (
     PFPhrase,
     PFTerm,
     prefilter_of,
-    to_sql,
     to_spark_column,
 )
 from odinson_spark.testing import sentence_batch_from_docs

@@ -16,7 +16,12 @@ Semantics under test (reference GraphTraversal.scala):
 
 import random
 
+import numpy as np
+from hypothesis import given, settings, strategies as st
+
+from odinson_spark.lang import ast
 from odinson_spark.lang.compiler import PatternCompiler
+from odinson_spark.match.context import SentenceBatch
 from odinson_spark.match.engine import find_matches
 from odinson_spark.testing import sentence_batch_from_docs
 
@@ -143,3 +148,61 @@ def test_random_traversals_match_brute_force():
         )
         checked += 1
     assert checked == 300
+
+
+# ---------------------------------------------------------------------------
+# incoming/outgoing token labels: the batch CSR view vs a per-token oracle
+# ---------------------------------------------------------------------------
+
+@st.composite
+def _sentence_graphs(draw):
+    """(num_tokens, [(src, dst, label), …], as_arrays) per sentence: edges
+    include self-loops, duplicates and endpoints outside [0, n)."""
+    out = []
+    for _ in range(draw(st.integers(1, 4))):
+        n = draw(st.integers(1, 5))
+        end = st.integers(-2, n + 1)
+        edges = draw(st.lists(st.tuples(end, end, st.sampled_from(LABELS)), max_size=10))
+        if edges and draw(st.booleans()):
+            edges.append(edges[0])  # an exact duplicate
+        out.append((n, edges, draw(st.booleans())))
+    return out
+
+
+def _per_token_labels(n, edges):
+    """The reference's per-token derivation (DependencyTokenStream): every
+    in-range edge adds its label to the source's outgoing and the
+    destination's incoming list, in edge order."""
+    inc = [[] for _ in range(n)]
+    out = [[] for _ in range(n)]
+    for s, d, lab in edges:
+        if 0 <= s < n and 0 <= d < n:
+            out[s].append(lab)
+            inc[d].append(lab)
+    return {"incoming": inc, "outgoing": out}
+
+
+@given(_sentence_graphs())
+@settings(max_examples=200, deadline=None)
+def test_inout_labels_from_batch_csr(sentences):
+    cols = ([], [], [])
+    for _, edges, as_arrays in sentences:
+        src, dst, lab = [e[0] for e in edges], [e[1] for e in edges], [e[2] for e in edges]
+        if as_arrays:  # the Arrow form; lists are the annotate_code form
+            src, dst, lab = np.array(src, np.int32), np.array(dst, np.int32), np.array(lab, object)
+        for col, v in zip(cols, (src, dst, lab)):
+            col.append(v)
+    batch = SentenceBatch(layers={}, num_tokens=[n for n, _, _ in sentences], edges=cols)
+    for i, (n, edges, _) in enumerate(sentences):
+        want = _per_token_labels(n, edges)
+        for field in ("incoming", "outgoing"):
+            f = batch.multi_field(field)
+            t0 = int(f.sent_offsets[i])
+            got = [
+                [f.vocab[c] for c in f.codes[f.tok_offsets[t0 + t] : f.tok_offsets[t0 + t + 1]]]
+                for t in range(n)
+            ]
+            assert got == want[field], (field, i, edges)
+            for label in LABELS:
+                mask = batch.leaf_mask(i, field, ast.StringMatcher(label))
+                assert mask.tolist() == [label in ls for ls in want[field]], (field, label)

@@ -54,7 +54,7 @@ def test_text_prefilter_still_prunes_ascii(spark):
     assert [r.doc_id for r in kept] == ["1"]
 
 
-# --- [incoming=]/[outgoing=] prefilter renders against *_flat ----------------
+# --- [incoming=]/[outgoing=] prefilter renders against deps_label -----------
 
 
 def test_inout_token_constraint_prefilter(spark):
