@@ -79,8 +79,6 @@ class SentenceBatch:
         layers: Dict[str, List[Optional[List[str]]]],
         num_tokens: List[int],
         edges: Optional[Tuple[Sequence, Sequence, Sequence]] = None,
-        roots: Optional[List[Sequence[int]]] = None,
-        mentions: Optional[List[Dict[str, List[Tuple[int, int]]]]] = None,
         default_field: str = "norm",
     ):
         self.raw_layers = layers
@@ -90,8 +88,9 @@ class SentenceBatch:
         self._fields: Dict[str, _FactorizedField] = {}
         self._multi_fields: Dict[str, _FactorizedMultiField] = {}
         self._edges = edges
-        self._roots = roots
-        self._mentions = mentions
+        # per-sentence {label: [(start, end), …]}, filled by the state
+        # cascade (BatchExtractor.extract_mentions)
+        self._mentions: Optional[List[Dict[str, List[Tuple[int, int]]]]] = None
         self._graphs: Optional[List[Optional[Digraph]]] = None
         self._csr: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
         self.label_vocab: Optional[LabelVocab] = None
@@ -267,7 +266,6 @@ class SentenceBatch:
             if a == b:
                 graphs.append(None)
                 continue
-            roots = (self._roots[i] if self._roots else ()) or ()
             p0, p1 = int(bases[i]), int(bases[i + 1])
             out_slices = 2 * (out_cum[p0 : p1 + 1] - a)
             in_slices = 2 * (in_cum[p0 : p1 + 1] - a)
@@ -277,7 +275,7 @@ class SentenceBatch:
                     in_slices,
                     out_flat[2 * a : 2 * b],
                     out_slices,
-                    tuple(roots),
+                    (),
                     int(nt[i]),
                 )
             )

@@ -3,8 +3,10 @@
 Reads documents in the reference's native JSON shape
 (OdinsonDocument.scala:13-126 — ``{"id", "metadata": [Field…],
 "sentences": [{"numTokens", "fields": [TokensField|GraphField…]}]}``,
-one JSON document per line or per .json[.gz] file) straight into the
-sentence table, so an existing corpus indexes here unchanged.
+as JSON lines, one Document per line) straight into the sentence table,
+so an existing corpus indexes here unchanged. Every sentence becomes a row
+through :func:`sentence_row`, the one normalizer of reference-style
+sentences (``odinson_spark.testing`` builds its batches with it too).
 
 Metadata fields (String/Date/Number/Nested — OdinsonDocument.scala:137-199)
 become typed ``meta_*`` columns; nested fields become arrays of structs and
@@ -14,7 +16,6 @@ block-joins.
 
 from __future__ import annotations
 
-import gzip
 import json
 from typing import Dict, Iterator, List, Optional
 
@@ -23,7 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline.extract import _sentences_frame
-from ..schema import graph_columns
+from ..errors import OdinsonException
+from ..schema import GRAPH_COLUMNS, graph_columns
 from ..lang.normalize import (
     normalize_unicode,
     normalize_unicode_aggressively,
@@ -31,73 +33,85 @@ from ..lang.normalize import (
 )
 
 
+def _token(t: str) -> str:
+    return sanitize_token(normalize_unicode(t))
+
+
+def sentence_row(sent: dict, extra_token_fields=()) -> dict:
+    """One reference-style sentence (``{layer: tokens}`` plus the graph
+    columns) → a sentence-table row, all but the document columns.
+
+    Every layer is aligned to ``raw`` (``word`` when ``raw`` is absent),
+    which sets ``num_tokens``: a ``word`` of another length falls back to
+    ``raw``, an absent or misaligned ``lemma``/``tag``/``chunk``/``entity``
+    becomes ``""`` tokens, and such an extra layer becomes None. ``norm`` is
+    always derived here (OdinsonIndexWriter.scala:174-182)."""
+    raw = [_token(t) for t in sent.get("raw") or sent.get("word") or ()]
+    n = len(raw)
+
+    def aligned(name, fn=None):
+        v = sent.get(name)
+        if not v or len(v) != n:
+            return None
+        return [fn(t) for t in v] if fn else list(v)
+
+    word = aligned("word", _token) or raw
+    norm = [normalize_unicode_aggressively(t) for t in word]
+    # synonym union: when the raw variant normalizes differently from word
+    # (NLP pipelines may emit corrected word forms), index BOTH at the same
+    # position
+    norm_alt = [normalize_unicode_aggressively(t) for t in raw]
+    row = {
+        "raw": raw,
+        "word": word,
+        "norm": norm,
+        "norm_alt": None if norm_alt == norm else norm_alt,
+        "lemma": aligned("lemma", normalize_unicode) or [""] * n,
+        "tag": aligned("tag", normalize_unicode) or [""] * n,
+        "chunk": aligned("chunk") or [""] * n,
+        "entity": aligned("entity") or [""] * n,
+        **{c: sent.get(c, []) for c in GRAPH_COLUMNS},
+    }
+    for name in extra_token_fields:
+        row[name] = aligned(name, normalize_unicode)
+    return row
+
+
 def doc_to_sentences(
     doc: dict, max_tokens: int = 100, extra_token_fields=()
 ) -> List[dict]:
-    """One reference-format Document dict → engine sentence dicts.
+    """One reference-format Document dict → sentence-table rows
+    (:func:`sentence_row`) numbered by ``sent_id``.
 
     ``extra_token_fields``: user-configured token layers beyond the built-in
     eight (reference ``allTokenFields``, reference.conf:46-57 /
     TestFields.scala:42-94) — kept as position-aligned token lists."""
     out = []
-    sent_id = 0
     for s in doc.get("sentences", []):
         sent: Dict[str, object] = {}
-        graph = graph_columns(())
         for f in s.get("fields", []):
             ftype = f.get("$type", "")
-            name = f.get("name")
             if ftype.endswith("TokensField"):
-                sent[name] = f.get("tokens")
+                sent[f.get("name")] = f.get("tokens")
             elif ftype.endswith("GraphField"):
-                graph = graph_columns(f.get("edges"), f.get("roots"))
+                sent.update(graph_columns(f.get("edges"), f.get("roots")))
         raw = sent.get("raw") or sent.get("word")
-        if raw is None or len(raw) == 0 or len(raw) > max_tokens:
+        if not raw or len(raw) > max_tokens:
             # over-long sentences are dropped at index time, like the
             # reference (OdinsonIndexWriter.scala:116-120)
             continue
-        raw = [sanitize_token(normalize_unicode(t)) for t in raw]
-        word = sent.get("word") or raw
-        word = [sanitize_token(normalize_unicode(t)) for t in word]
-        norm = [normalize_unicode_aggressively(t) for t in word]
-        # synonym union (OdinsonIndexWriter.scala:174-182): when the raw
-        # variant normalizes differently from word (NLP pipelines may emit
-        # corrected word forms), index BOTH at the same position
-        norm_alt = [normalize_unicode_aggressively(t) for t in raw]
-        if norm_alt == norm or len(norm_alt) != len(norm):
-            norm_alt = None
-        row = {
-            "sent_id": sent_id,
-            "raw": raw,
-            "word": word,
-            "norm": norm,
-            "norm_alt": norm_alt,
-            "lemma": [normalize_unicode(t) for t in sent.get("lemma") or []] or None,
-            "tag": [normalize_unicode(t) for t in sent.get("tag") or []] or None,
-            "chunk": list(sent.get("chunk") or []) or None,
-            "entity": list(sent.get("entity") or []) or None,
-            **graph,
-        }
-        for name in extra_token_fields:
-            v = sent.get(name)
-            row[name] = [normalize_unicode(t) for t in v] if v else None
-        # pad/None missing layers to keep positional alignment honest
-        for k in ("lemma", "tag", "chunk", "entity", *extra_token_fields):
-            v = row[k]
-            if v is not None and len(v) != len(raw):
-                row[k] = None
-        out.append(row)
-        sent_id += 1
+        out.append({"sent_id": len(out), **sentence_row(sent, extra_token_fields)})
     return out
 
 
-def _fill_layers(rows: List[dict]) -> List[dict]:
-    for r in rows:
-        n = len(r["raw"])
-        for k in ("lemma", "tag", "chunk", "entity"):
-            if r.get(k) is None:
-                r[k] = [""] * n
-    return rows
+def _parse_line(line: str) -> dict:
+    try:
+        return json.loads(line)
+    except ValueError as e:
+        raise OdinsonException(
+            "the Document JSON source expects one Document per line (JSON "
+            f"lines); cannot parse {line[:80]!r}: {e}"
+        ) from None
 
 
 def _meta_values(meta_list):
@@ -181,7 +195,7 @@ def _infer_metadata(spark: SparkSession, lines: DataFrame):
                 line = (line or "").strip()
                 if not line:
                     continue
-                vals, kinds = _meta_values(json.loads(line).get("metadata"))
+                vals, kinds = _meta_values(_parse_line(line).get("metadata"))
                 mjs.append(json.dumps(vals))
                 mks.append(json.dumps(kinds))
             yield pd.DataFrame({"meta_json": mjs, "meta_kinds_json": mks})
@@ -223,7 +237,9 @@ def read_document_json(
     meta_schema=None,
     meta_kinds: Optional[Dict[str, str]] = None,
 ) -> DataFrame:
-    """Path of JSON-lines files (one Document per line) → sentences DF.
+    """Path of JSON-lines files (one Document per line) → sentences DF. A
+    line that is not one whole JSON document (say, a pretty-printed file)
+    fails the job with an ``OdinsonException`` that quotes the line.
 
     With ``expand_metadata`` (default), document metadata fields become typed
     ``meta_*`` columns (tokens → string, number → double, date → date,
@@ -246,10 +262,8 @@ def read_document_json(
                 line = (line or "").strip()
                 if not line:
                     continue
-                doc = json.loads(line)
-                sentences = _fill_layers(
-                    doc_to_sentences(doc, max_tokens, extra_token_fields)
-                )
+                doc = _parse_line(line)
+                sentences = doc_to_sentences(doc, max_tokens, extra_token_fields)
                 sha = hashlib.sha256(line.encode("utf-8")).hexdigest()
                 vals, kinds = _meta_values(doc.get("metadata"))
                 docs.append((str(doc.get("id")), sha, None, sentences))

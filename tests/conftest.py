@@ -12,6 +12,25 @@ def example_docs():
 
 
 @pytest.fixture(scope="session")
+def misaligned_word_doc():
+    """A Document whose sentence 0 has a ``word`` layer one token longer
+    than ``raw``; that extra token must not shift sentence 1's word/norm
+    codes."""
+    tf = "ai.lum.odinson.TokensField"
+    return {
+        "id": "misaligned",
+        "metadata": [],
+        "sentences": [
+            {"numTokens": 2, "fields": [
+                {"$type": tf, "name": "raw", "tokens": ["a", "b"]},
+                {"$type": tf, "name": "word", "tokens": ["a", "b", "x"]},
+            ]},
+            {"numTokens": 2, "fields": [{"$type": tf, "name": "raw", "tokens": ["c", "d"]}]},
+        ],
+    }
+
+
+@pytest.fixture(scope="session")
 def spark():
     from odinson_spark.session import get_spark
 

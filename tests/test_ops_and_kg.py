@@ -4,12 +4,18 @@ checkpointing."""
 import json
 from collections import Counter
 
+import pytest
+
+from odinson_spark.lang.rules import RuleReader
+from odinson_spark.match.extractor import BatchExtractor
 from odinson_spark.pipeline import materialize
 from odinson_spark.pipeline.checkpoint import CheckpointedPipeline
 from odinson_spark.pipeline.components import connected_components_star
 from odinson_spark.pipeline.linking import lsh_candidate_pairs, score_pairs
 from odinson_spark.pipeline.materialize import build_graph
+from odinson_spark.pipeline.extract import extract_mentions_df
 from odinson_spark.sources.document_json import read_document_json, doc_to_sentences
+from odinson_spark.testing import batch_from_doc_json
 
 
 def test_minhash_lsh_finds_near_dups(spark):
@@ -200,17 +206,81 @@ def test_checkpoint_resume_file_uri_root(spark, tmp_path):
     assert written == cp.metrics
 
 
+# one token, one traversal and one event rule over the fixture corpus
+_FIXTURE_GRAMMAR = """
+rules:
+  - name: noun
+    label: Noun
+    type: basic
+    pattern: |
+      [tag=/NN.*/]
+  - name: subj
+    type: basic
+    pattern: |
+      [tag=/VB.*/] >nsubj []
+  - name: verb-event
+    label: Event
+    type: event
+    pattern: |
+      trigger = [tag=/VB.*/]
+      subject = >nsubj []
+      object = >dobj []
+"""
+
+
+def _write_jsonl(path, docs):
+    with open(path, "w") as f:
+        for doc in docs:
+            f.write(json.dumps(doc) + "\n")
+    return str(path)
+
+
 def test_document_json_source(spark, tmp_path, example_docs):
-    p = tmp_path / "docs.jsonl"
-    with open(p, "w") as f:
-        for key in ("becky-gummy-bears", "alien-species"):
-            f.write(json.dumps(example_docs[key]) + "\n")
-    sents = read_document_json(spark, str(p))
+    docs = [example_docs[k] for k in sorted(example_docs)]
+    sents = read_document_json(spark, _write_jsonl(tmp_path / "docs.jsonl", docs))
     rows = sents.collect()
-    assert len(rows) == 2
+    assert len(rows) == sum(len(doc_to_sentences(d)) for d in docs)
+    assert {r.doc_id for r in rows} == {str(d["id"]) for d in docs}
     becky = next(r for r in rows if r.raw[0] == "Becky")
     assert becky.tag[0] == "NNP"
     assert "nsubj" in becky.deps_label
+    # the Spark source and the test helpers build the same batches: the
+    # staged matcher over the stored rows equals the Spark-free matcher over
+    # batch_from_doc_json, document by document
+    extractors, _ = RuleReader().compile_rules(_FIXTURE_GRAMMAR)
+    key = lambda m: (m.doc_id, m.sent_id, m.start, m.end, m.found_by)
+    want = []
+    for d in docs:
+        n = len(doc_to_sentences(d))
+        want += map(key, BatchExtractor(extractors).extract_no_state(
+            batch_from_doc_json(d), [str(d["id"])] * n, list(range(n))
+        ))
+    got = [key(r) for r in extract_mentions_df(sents, extractors).collect()]
+    assert {k[4] for k in want} == {"noun", "subj", "verb-event"}
+    assert sorted(got) == sorted(want)
+
+
+def test_document_json_word_misaligned_with_raw(spark, tmp_path, misaligned_word_doc):
+    path = _write_jsonl(tmp_path / "docs.jsonl", [misaligned_word_doc])
+    sents = read_document_json(spark, path, expand_metadata=False)
+    rows = sorted(sents.collect(), key=lambda r: r.sent_id)
+    assert [r.word for r in rows] == [["a", "b"], ["c", "d"]]
+    grammar = "rules:\n" + "".join(
+        f"  - name: {t}\n    type: basic\n    pattern: |\n      {t}\n" for t in "cx"
+    )
+    extractors, _ = RuleReader().compile_rules(grammar)
+    got = [(r.found_by, r.sent_id, r.start, r.end) for r in extract_mentions_df(sents, extractors).collect()]
+    assert got == [("c", 1, 0, 1)]
+
+
+def test_document_json_rejects_pretty_printed_file(spark, tmp_path, example_docs):
+    p = tmp_path / "doc.json"
+    p.write_text(json.dumps(example_docs["becky-gummy-bears"], indent=2))
+    with pytest.raises(Exception) as e:
+        read_document_json(spark, str(p)).collect()
+    msg = str(e.value)
+    assert "OdinsonException" in msg and "one Document per line" in msg
+    assert "cannot parse '{'" in msg
 
 
 def test_doc_to_sentences_drops_overlong(example_docs):
