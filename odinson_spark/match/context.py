@@ -18,7 +18,7 @@ from __future__ import annotations
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from ..lang import ast
 from ..lang.normalize import normalize_unicode, normalize_unicode_aggressively
@@ -63,9 +63,12 @@ def _pred_key(matcher, fuzzy: bool):
     )
 
 
-def _factorize(values: List[str]):
-    codes, uniques = pd.factorize(np.asarray(values, dtype=object), use_na_sentinel=False)
-    return codes.astype(np.int32), list(uniques)
+def _factorize(values: Sequence[str]):
+    """int32 codes + vocabulary in first-seen order. Arrow compares whole
+    strings; ``pd.factorize`` over objects stops at a NUL, so ``"a\\x00b"``
+    and ``"a"`` would share one code."""
+    enc = pa.array(values, type=pa.string()).dictionary_encode(null_encoding="encode")
+    return enc.indices.to_numpy(zero_copy_only=False), enc.dictionary.to_pylist()
 
 
 class SentenceBatch:

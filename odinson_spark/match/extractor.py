@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Set, Tuple
 
 from .context import SentenceBatch
-from .engine import find_matches
+from .engine import filter_trigger_overlaps, find_matches
 from .matches import BaseMatch, EventMatch, StateMatch
 from ..lang.rules import Extractor
 
@@ -114,32 +114,6 @@ def _promote(m: Mention, using_state: bool) -> List[Mention]:
     return results
 
 
-def _filter_trigger_overlaps(mentions: List[Mention]) -> List[Mention]:
-    out = []
-    for m in mentions:
-        if isinstance(m.match, EventMatch):
-            kept = m.match.remove_trigger_overlaps()
-            if kept is None:
-                continue
-            if kept is m.match:
-                # no capture dropped — the mention (and its argument
-                # sub-mentions) are unchanged, skip the rebuild
-                out.append(m)
-                continue
-            args: Dict[str, List[Mention]] = {}
-            for cap in kept.captures:
-                args.setdefault(cap.name, []).append(
-                    Mention(m.doc_id, m.sent_id, cap.label, m.found_by,
-                            cap.match.start, cap.match.end, cap.match)
-                )
-            out.append(
-                Mention(m.doc_id, m.sent_id, m.label, m.found_by, m.start, m.end, kept, args)
-            )
-        else:
-            out.append(m)
-    return out
-
-
 class BatchExtractor:
     """Run a compiled grammar over a SentenceBatch."""
 
@@ -161,7 +135,7 @@ class BatchExtractor:
         for i in range(batch.n_sentences):
             ctx = batch.context(i)
             for e in active:
-                for m in find_matches(e.program, ctx):
+                for m in filter_trigger_overlaps(find_matches(e.program, ctx)):
                     mentions.append(_mention_from_match(m, doc_ids[i], sent_ids[i], e))
         return mentions
 
@@ -172,10 +146,8 @@ class BatchExtractor:
         sent_ids: Sequence[int],
     ) -> List[Mention]:
         """Single pass, priorities ignored (ExtractorEngine.scala:374-412)."""
-        found = self._run_epoch(batch, doc_ids, sent_ids, None)
-        filtered = _filter_trigger_overlaps(found)
         out: List[Mention] = []
-        for m in filtered:
+        for m in self._run_epoch(batch, doc_ids, sent_ids, None):
             out.extend(_promote(m, using_state=False))
         return out
 
@@ -194,10 +166,8 @@ class BatchExtractor:
         min_iterations = max((e.priority.min_epoch() for e in self.extractors), default=1)
         epoch = 1
         while epoch <= self.max_epochs:
-            found = self._run_epoch(batch, doc_ids, sent_ids, epoch)
-            filtered = _filter_trigger_overlaps(found)
             processed: List[Mention] = []
-            for m in filtered:
+            for m in self._run_epoch(batch, doc_ids, sent_ids, epoch):
                 processed.extend(_promote(m, using_state=True))
             new = []
             batch_keys = set()

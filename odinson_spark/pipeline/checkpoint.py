@@ -3,9 +3,10 @@ table once; a rerun of the driver skips stages whose output already exists.
 
 This replaces the reference's incremental-index/State persistence
 (state/State.scala:25-44, lucene/index/IncrementalOdinsonIndex.scala) with
-the batch-native equivalent: snapshot-per-stage. Locally the sink is
-parquet; on a cluster the same API targets Iceberg tables (atomic snapshot
-commits make the resume check exact instead of _SUCCESS-marker based).
+the batch-native equivalent: snapshot-per-stage. Every stage is written as
+parquet through the Hadoop FileSystem API, so a local path and a file://,
+hdfs:// or s3a:// root all resume the same way (a stage counts as done when
+its ``_SUCCESS`` marker exists).
 """
 
 from __future__ import annotations
@@ -16,7 +17,12 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.table_io import _hadoop_fs
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """Hadoop FileSystem for ``path`` — works across schemes (file://,
+    hdfs://, s3a://), unlike driver-local os/pathlib calls."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
 class CheckpointedPipeline:
@@ -32,7 +38,7 @@ class CheckpointedPipeline:
     def exists(self, stage: str) -> bool:
         # through the Hadoop FileSystem, like the stage writes themselves, so
         # a file:// or hdfs:// root resumes too
-        fs, marker, _ = _hadoop_fs(self.spark, f"{self._path(stage)}/_SUCCESS")
+        fs, marker = _hadoop_fs(self.spark, f"{self._path(stage)}/_SUCCESS")
         return fs.exists(marker)
 
     def stage(
@@ -55,7 +61,7 @@ class CheckpointedPipeline:
         return self.spark.read.parquet(path)
 
     def write_metrics(self):
-        fs, out, _ = _hadoop_fs(self.spark, f"{self.root}/_metrics_{self.run_id}.json")
+        fs, out = _hadoop_fs(self.spark, f"{self.root}/_metrics_{self.run_id}.json")
         stream = fs.create(out, True)
         try:
             stream.write(bytearray(json.dumps(self.metrics, indent=1), "utf-8"))

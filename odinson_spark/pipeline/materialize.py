@@ -100,8 +100,16 @@ def build_graph(
     nodes = surfaces.join(F.broadcast(comp), surfaces["node_id"] == comp["id"]).select(
         "node_id", "canonical_id", "surface", "label", "n_mentions"
     )
+    return nodes, graph_edges(triples, nodes)
+
+
+def graph_edges(triples: DataFrame, nodes: DataFrame) -> DataFrame:
+    """triples → edges between canonical ids, looked up in ``nodes``'
+    (node_id → canonical_id) map (broadcast joins: the map is small next to
+    the triples). ``nodes`` is :func:`build_graph`'s output, fresh or read
+    back from a stage checkpoint."""
     canon = nodes.select("node_id", "canonical_id")
-    edges = (
+    return (
         triples.withColumn("subj_node", _node_id(F.col("subj_text"), F.col("label")))
         .withColumn("obj_node", _node_id(F.col("obj_text"), F.col("label")))
         .join(
@@ -112,17 +120,8 @@ def build_graph(
             F.broadcast(canon.withColumnRenamed("node_id", "obj_node").withColumnRenamed("canonical_id", "dst_id")),
             "obj_node",
         )
-        .select(
-            "src_id",
-            "dst_id",
-            "pred",
-            F.col("rule"),
-            "doc_id",
-            "sent_id",
-            "content_sha",
-        )
+        .select("src_id", "dst_id", "pred", "rule", "doc_id", "sent_id", "content_sha")
     )
-    return nodes, edges
 
 
 def with_lineage(df: DataFrame, stage: str, run_id: str) -> DataFrame:

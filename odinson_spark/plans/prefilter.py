@@ -5,7 +5,7 @@ construction (not a JVM Catalyst extension): from a compiled pattern we
 derive a conservative necessary condition — a boolean combination of
 ``array_contains`` tests over token-layer columns and the edge-label column
 — and apply it as a DataFrame ``filter`` *before* the matcher UDF. Catalyst
-pushes it into the scan (parquet/Iceberg row-group skipping via column
+pushes it into the scan (parquet row-group skipping via column
 stats), so the expensive Python stage only sees sentences that can possibly
 match.
 

@@ -1,2 +1,3 @@
-"""Sources & sinks: reference-format document JSON, mention serialization,
-and the table-IO abstraction (parquet locally, Iceberg on a cluster)."""
+"""Sources & sinks: reference-format document JSON and mention
+serialization. Stage tables are parquet through the Hadoop FileSystem API
+(pipeline/checkpoint.py)."""

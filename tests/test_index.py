@@ -169,9 +169,10 @@ class TestIncremental:
     def test_delete_is_tombstone_until_compact(self, spark, inc):
         before = self._hits(inc)
         victims = sorted({d for d, *_ in before})[:2]
-        inc.delete_documents(victims)
+        # an id the index never held is a no-op (TestIncrementalIndex.scala:189-197)
+        inc.delete_documents(victims + ["no-such-doc"])
         after = self._hits(inc)
-        assert {d for d, *_ in after}.isdisjoint(victims)
+        assert after == [h for h in before if h[0] not in victims]
         assert len(after) < len(before)
         # physical files untouched before compact
         raw = inc.sentences.count()
@@ -263,13 +264,16 @@ class TestIncremental:
         assert os.listdir(parent) == [os.path.basename(inc.path)]
 
     def test_update_replaces(self, spark, inc):
+        # doc 1000 is not in the index: updating it inserts it
+        # (TestIncrementalIndex.scala:241-247)
         new = spark.createDataFrame(
-            [(0, "replaced fast body", "en")],
+            [(0, "replaced fast body", "en"), (1000, "inserted fast body", "en")],
             "doc_id long, text string, lang string",
         )
         inc.update_documents(tokenize_documents(new))
         hits = [t for t in self._hits(inc) if str(t[0]) == "0"]
         assert len(hits) == 1  # exactly the new version's single 'fast'
+        assert [t for t in self._hits(inc) if str(t[0]) == "1000"] == [("1000", 0, 1, 2)]
         # old tokens of doc 0 are gone
         assert all(str(t[0]) != "0" for t in self._hits(inc, "alpha"))
 

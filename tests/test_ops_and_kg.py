@@ -273,6 +273,24 @@ def test_document_json_word_misaligned_with_raw(spark, tmp_path, misaligned_word
     assert got == [("c", 1, 0, 1)]
 
 
+def test_token_with_nul_matches_after_parquet_round_trip(spark, tmp_path):
+    tf = "ai.lum.odinson.TokensField"
+    doc = {"id": "nul", "metadata": [], "sentences": [
+        {"numTokens": 2, "fields": [{"$type": tf, "name": "raw", "tokens": ["a\x00b", "a"]}]},
+    ]}
+    sents_path = str(tmp_path / "sents")
+    read_document_json(
+        spark, _write_jsonl(tmp_path / "docs.jsonl", [doc]), expand_metadata=False
+    ).write.parquet(sents_path)
+    sents = spark.read.parquet(sents_path)
+    assert sents.first().raw == ["a\x00b", "a"]
+    extractors, _ = RuleReader().compile_rules(
+        "rules:\n  - name: a\n    type: basic\n    pattern: |\n      [raw=a]\n"
+    )
+    got = [(r.sent_id, r.start, r.end) for r in extract_mentions_df(sents, extractors).collect()]
+    assert got == [(0, 1, 2)]
+
+
 def test_document_json_rejects_pretty_printed_file(spark, tmp_path, example_docs):
     p = tmp_path / "doc.json"
     p.write_text(json.dumps(example_docs["becky-gummy-bears"], indent=2))

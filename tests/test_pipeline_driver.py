@@ -3,8 +3,10 @@ mentions → triples → nodes/edges → metrics, checkpointed, resumable."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -24,8 +26,24 @@ rules:
 """
 
 
-@pytest.mark.slow
-def test_run_pipeline_end_to_end(tmp_path, spark):
+# runs tools/run_pipeline.py with materialize.build_graph replaced by a
+# function that raises: any stage that still calls it fails the run
+NO_BUILD_GRAPH = (
+    "import runpy, sys\n"
+    "import odinson_spark.pipeline.materialize as m\n"
+    "def build_graph(*a, **k):\n"
+    "    raise RuntimeError('build_graph called')\n"
+    "m.build_graph = build_graph\n"
+    "sys.argv = sys.argv[1:]\n"
+    "runpy.run_path(sys.argv[0], run_name='__main__')\n"
+)
+EDGE_COLS = "src_id, dst_id, pred, rule, doc_id, sent_id, content_sha"
+
+
+@pytest.fixture(scope="module")
+def pipeline(tmp_path_factory, spark):
+    """One full run over 20 files; returns (command, warehouse dir, env)."""
+    tmp_path = tmp_path_factory.mktemp("pipeline")
     rows = []
     for i in range(20):
         content = (
@@ -41,7 +59,6 @@ def test_run_pipeline_end_to_end(tmp_path, spark):
     rules.write_text(RULES)
     out_dir = tmp_path / "warehouse"
     cmd = [
-        sys.executable,
         str(REPO / "tools" / "run_pipeline.py"),
         "--input", str(tmp_path / "repos"),
         "--rules", str(rules),
@@ -51,8 +68,20 @@ def test_run_pipeline_end_to_end(tmp_path, spark):
         "--salt-partitions", "4",
     ]
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, env=env, timeout=500)
+    r = subprocess.run(
+        [sys.executable, *cmd], capture_output=True, text=True, cwd=REPO, env=env, timeout=500
+    )
     assert r.returncode == 0, r.stderr[-2000:]
+    return cmd, out_dir, env
+
+
+def _metrics(out_dir):
+    return {m["stage"]: m["skipped"] for m in json.loads((out_dir / "_metrics_t1.json").read_text())}
+
+
+@pytest.mark.slow
+def test_run_pipeline_end_to_end(pipeline):
+    cmd, out_dir, env = pipeline
     import duckdb
 
     counts = {
@@ -63,7 +92,30 @@ def test_run_pipeline_end_to_end(tmp_path, spark):
     assert counts["triples"] == 40            # 2 (subj,obj) args per call site
     assert counts["nodes"] > 0 and counts["edges"] == 40
     # second run resumes: every stage skipped
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, env=env, timeout=500)
+    r2 = subprocess.run(
+        [sys.executable, *cmd], capture_output=True, text=True, cwd=REPO, env=env, timeout=500
+    )
     assert r2.returncode == 0
-    metrics = json.loads((out_dir / "_metrics_t1.json").read_text())
-    assert all(m["skipped"] for m in metrics)
+    assert all(_metrics(out_dir).values())
+
+
+@pytest.mark.slow
+def test_edges_stage_resumes_from_checkpoint(pipeline):
+    """A rerun that finds nodes done but edges missing builds the edges from
+    the checkpointed triples and nodes, without re-running build_graph."""
+    cmd, out_dir, env = pipeline
+    import duckdb
+
+    def edges():
+        return Counter(duckdb.sql(f"SELECT {EDGE_COLS} FROM '{out_dir}/edges/*.parquet'").fetchall())
+
+    before = edges()
+    shutil.rmtree(out_dir / "edges")
+    r = subprocess.run(
+        [sys.executable, "-c", NO_BUILD_GRAPH, *cmd],
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=500,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert edges() == before and sum(before.values()) == 40
+    skipped = _metrics(out_dir)
+    assert not skipped.pop("edges") and all(skipped.values())

@@ -28,12 +28,19 @@ def test_misaligned_word_falls_back_to_raw(misaligned_word_doc):
     assert _spans(batch, "x") == []
 
 
-# whitespace-only, empty and non-ASCII tokens (NFKC, ligature, casefold and
-# diacritic cases) next to arbitrary short text. NUL is left out: the batch
-# factorizes tokens with pandas, which compares strings only up to a NUL.
+def test_token_with_nul_keeps_its_own_code():
+    # a code token may hold a NUL ("a\x00b" from a string literal); it must
+    # not share a code with its prefix "a"
+    batch = sentence_batch_from_docs([{"raw": ["a\x00b", "a"]}])
+    assert batch.field("raw").vocab == ["a\x00b", "a"]
+    assert _spans(batch, "[raw=a]") == [(0, 1, 2)]
+
+
+# whitespace-only, empty, NUL-holding and non-ASCII tokens (NFKC, ligature,
+# casefold and diacritic cases) next to arbitrary short text
 _TOKENS = st.one_of(
-    st.sampled_from(["a", "B", " ", "\t", "\u00a0", "", "é", "É", "ﬁ", "½", "™", "ß", "İ", "x y"]),
-    st.text(st.characters(blacklist_characters="\x00"), max_size=3),
+    st.sampled_from(["a", "B", " ", "\t", "\u00a0", "", "\x00", "a\x00", "é", "É", "ﬁ", "½", "™", "ß", "İ", "x y"]),
+    st.text(max_size=3),
 )
 _LAYERS = ("lemma", "tag", "chunk", "entity", "fizz")
 

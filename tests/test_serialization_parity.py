@@ -14,8 +14,12 @@ import pytest
 
 from odinson_spark.lang.rules import RuleReader
 from odinson_spark.match.extractor import BatchExtractor
-from odinson_spark.pipeline.extract import extract_mentions_df
-from odinson_spark.sources.document_json import read_document_json, write_mentions_json
+from odinson_spark.pipeline.extract import apply_prefilter, extract_mentions_df, tokenize_documents
+from odinson_spark.sources.document_json import (
+    VERBOSITY_COLUMNS,
+    read_document_json,
+    write_mentions_json,
+)
 from odinson_spark.testing import batch_from_doc_json
 
 GRAMMAR = """
@@ -183,3 +187,52 @@ def test_roundtrip_covers_all_match_types(roundtrip):
     events = [m for m in plus if m.is_event]
     assert events and all(len(m.captures) >= 2 for m in events)
     assert len(plus) > len(events)  # promoted args present too
+
+
+# --- the sink at each verbosity level (JsonSerializer.scala:8-55) -------------
+
+
+def _mentions(spark):
+    docs = spark.createDataFrame(
+        [(1, "alpha join beta", "en")], "doc_id long, text string, lang string"
+    )
+    grammar = """
+rules:
+  - name: pair
+    label: Pair
+    type: basic
+    pattern: |
+      (?<left> alpha) join
+"""
+    extractors, _ = RuleReader().compile_rules(grammar)
+    sents = tokenize_documents(docs)
+    return extract_mentions_df(apply_prefilter(sents, extractors), extractors)
+
+
+@pytest.mark.parametrize("verbosity", ["minimal", "display", "all"])
+def test_write_mentions_json_roundtrip(spark, tmp_path, verbosity):
+    m = _mentions(spark)
+    p = str(tmp_path / verbosity)
+    write_mentions_json(m, p, verbosity=verbosity)
+    files = [f for f in os.listdir(p) if f.endswith(".json")]
+    assert files
+    lines = []
+    for f in files:
+        with open(os.path.join(p, f)) as fh:
+            lines += [json.loads(l) for l in fh if l.strip()]
+    assert len(lines) == m.count() == 1
+    row = lines[0]
+    # spark.read.json drops null-valued keys per row; require the non-null
+    # required fields and forbid anything beyond the verbosity contract
+    assert set(row) <= set(VERBOSITY_COLUMNS[verbosity])
+    for required in ("doc_id", "sent_id", "found_by", "start", "end"):
+        assert required in row
+    if verbosity in ("display", "all"):
+        assert row["label"] == "Pair" and row["text"] == "alpha join"
+    if verbosity == "all":
+        assert row["content_sha"] and len(row["content_sha"]) == 64
+        assert row["captures"][0]["name"] == "left"
+        assert row["captures"][0]["text"] == "alpha"
+    # and it reads back through spark
+    back = spark.read.json(p)
+    assert back.count() == 1

@@ -10,8 +10,9 @@ Stages (each checkpointed; rerun resumes after the last completed stage):
   1. sentences    — tokenize/annotate (skew-salted input)
   2. mentions     — rule extraction (prefilter pushed to scan)
   3. triples      — (subj, pred, obj) emission
-  4. nodes/edges  — LSH linking + connected components + materialization
-  5. metrics      — per-stage wall time + per-partition row counts
+  4. nodes        — LSH linking + connected components
+  5. edges        — triples joined to the checkpointed nodes' canonical ids
+  6. metrics      — per-stage wall time + per-partition row counts
 """
 
 from __future__ import annotations
@@ -45,7 +46,12 @@ def main():
         tokenize_repos,
         triples_from_mentions,
     )
-    from odinson_spark.pipeline.materialize import build_graph, partition_metrics, with_lineage
+    from odinson_spark.pipeline.materialize import (
+        build_graph,
+        graph_edges,
+        partition_metrics,
+        with_lineage,
+    )
     from odinson_spark.pipeline.skew import salted_repartition
 
     spark = get_spark(app_name=f"odinson-kg-{args.run_id}")
@@ -81,22 +87,12 @@ def main():
 
     triples = cp.stage("triples", stage_triples)
 
-    _nodes_edges = {}
-
-    def stage_nodes():
-        nodes, edges = build_graph(triples)
-        _nodes_edges["edges"] = edges
-        return with_lineage(nodes, "nodes", args.run_id)
-
-    cp.stage("nodes", stage_nodes)
-
-    def stage_edges():
-        if "edges" not in _nodes_edges:
-            _, edges = build_graph(triples)
-            _nodes_edges["edges"] = edges
-        return with_lineage(_nodes_edges["edges"], "edges", args.run_id)
-
-    cp.stage("edges", stage_edges)
+    nodes = cp.stage(
+        "nodes", lambda: with_lineage(build_graph(triples)[0], "nodes", args.run_id)
+    )
+    # from the checkpointed nodes, so a resume after the nodes stage does
+    # not re-run linking and components
+    cp.stage("edges", lambda: with_lineage(graph_edges(triples, nodes), "edges", args.run_id))
 
     def stage_metrics():
         return partition_metrics(triples, "triples")
