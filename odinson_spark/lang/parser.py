@@ -219,13 +219,8 @@ class _P:
 
 
 class QueryParser:
-    def __init__(
-        self,
-        all_token_fields: Tuple[str, ...] = ALL_TOKEN_FIELDS,
-        default_token_field: str = DEFAULT_TOKEN_FIELD,
-    ):
+    def __init__(self, all_token_fields: Tuple[str, ...] = ALL_TOKEN_FIELDS):
         self.all_token_fields = tuple(all_token_fields)
-        self.default_token_field = default_token_field
 
     # ------------------------------------------------------------------
     # entry points
@@ -631,7 +626,7 @@ class QueryParser:
     def default_field_constraint(self, p: _P):
         r = p.regex()
         if r is not None:
-            return ast.FieldConstraint(self.default_token_field, ast.RegexMatcher(r))
+            return ast.FieldConstraint(DEFAULT_TOKEN_FIELD, ast.RegexMatcher(r))
         s = p.string()
         if s is None:
             p.err("expected token constraint")
@@ -647,8 +642,8 @@ class QueryParser:
             p.err("looks like an argument name, not a constraint")
         p.pos = save
         if p.take("~"):
-            return ast.FuzzyConstraint(self.default_token_field, ast.StringMatcher(s))
-        return ast.FieldConstraint(self.default_token_field, ast.StringMatcher(s))
+            return ast.FuzzyConstraint(DEFAULT_TOKEN_FIELD, ast.StringMatcher(s))
+        return ast.FieldConstraint(DEFAULT_TOKEN_FIELD, ast.StringMatcher(s))
 
     def disjunctive_constraint(self, p: _P):
         clauses = [self.conjunctive_constraint(p)]

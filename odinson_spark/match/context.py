@@ -11,31 +11,36 @@ The reference gets an equivalent effect from Lucene's term dictionary
 (terms are matched against the dictionary once, then matching is
 postings-id based); here the Arrow batch plays the role of the index
 segment.
+
+The batch's edges likewise become one CSR per direction for the whole batch
+(:meth:`SentenceBatch.csr`): traversals walk it (match/graph.py) and the
+``incoming``/``outgoing`` token labels are views of it.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
 
 from ..lang import ast
+from ..lang.parser import DEFAULT_TOKEN_FIELD
 from ..lang.normalize import normalize_unicode, normalize_unicode_aggressively
-from .graph import Digraph, LabelVocab
+from .graph import LabelVocab
 from .matches import StateMatch
 
 MULTI_VALUED_FIELDS = ("incoming", "outgoing")
 
 
 class _FactorizedField:
-    __slots__ = ("codes", "offsets", "vocab", "index", "pred_cache")
+    __slots__ = ("codes", "offsets", "vocab", "pred_cache")
 
     def __init__(self, codes, offsets, vocab):
         self.codes = codes          # int32 flat codes (one per token / per value)
         self.offsets = offsets      # int64, len = n_sentences + 1 (token offsets)
         self.vocab = vocab          # list[str]
-        self.index = None           # built lazily for exact lookups
         self.pred_cache: Dict[object, np.ndarray] = {}
 
 
@@ -71,31 +76,53 @@ def _factorize(values: Sequence[str]):
     return enc.indices.to_numpy(zero_copy_only=False), enc.dictionary.to_pylist()
 
 
+def query_value(field_name: str, matcher) -> str:
+    """The string or regex a leaf on ``field_name`` compares with the stored
+    values — the one normalization the matcher, the scan prefilter and the
+    index postings share. Edge labels (``incoming``/``outgoing``) compare
+    exactly as stored; a term on the default field or its ``norm_alt``
+    synonym is aggressively normalized; anything else is NFKC-normalized."""
+    if isinstance(matcher, ast.StringMatcher):
+        s = matcher.string
+        if field_name in MULTI_VALUED_FIELDS:
+            return s
+        if field_name in (DEFAULT_TOKEN_FIELD, "norm_alt"):
+            return normalize_unicode_aggressively(s)
+        return normalize_unicode(s)
+    if isinstance(matcher, ast.RegexMatcher):
+        p = matcher.pattern
+        return p if field_name in MULTI_VALUED_FIELDS else normalize_unicode(p)
+    raise TypeError(f"unknown matcher {matcher!r}")
+
+
 class SentenceBatch:
-    """``edges``: the batch's graph as the sentence table's (``deps_src``,
-    ``deps_dst``, ``deps_label``) columns — three per-sentence columns of
-    equal-length sequences (None = no edges). The per-token ``incoming``/
-    ``outgoing`` label fields are derived from it (:meth:`multi_field`)."""
+    """One Arrow batch of sentences: token layers factorized per batch, and
+    the batch's graph as one CSR per direction over global token positions
+    (a sentence's token base plus the token's index in it).
+
+    ``edges``: the sentence table's (``deps_src``, ``deps_dst``,
+    ``deps_label``) columns — three per-sentence columns of equal-length
+    sequences (None = no edges). Traversals walk the CSR
+    (:meth:`adjacency`); the per-token ``incoming``/``outgoing`` label
+    fields are views of it (:meth:`multi_field`)."""
 
     def __init__(
         self,
         layers: Dict[str, List[Optional[List[str]]]],
         num_tokens: List[int],
         edges: Optional[Tuple[Sequence, Sequence, Sequence]] = None,
-        default_field: str = "norm",
     ):
         self.raw_layers = layers
         self.num_tokens = num_tokens
         self.n_sentences = len(num_tokens)
-        self.default_field = default_field
         self._fields: Dict[str, _FactorizedField] = {}
         self._multi_fields: Dict[str, _FactorizedMultiField] = {}
         self._edges = edges
         # per-sentence {label: [(start, end), …]}, filled by the state
         # cascade (BatchExtractor.extract_mentions)
         self._mentions: Optional[List[Dict[str, List[Tuple[int, int]]]]] = None
-        self._graphs: Optional[List[Optional[Digraph]]] = None
         self._csr: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
+        self._adjacency: Dict[str, Tuple[list, list]] = {}
         self.label_vocab: Optional[LabelVocab] = None
         self._tok_offsets = np.zeros(self.n_sentences + 1, dtype=np.int64)
         np.cumsum(num_tokens, out=self._tok_offsets[1:])
@@ -126,9 +153,7 @@ class SentenceBatch:
         if f is None:
             if name not in MULTI_VALUED_FIELDS:
                 raise KeyError(f"no such multi-valued layer: {name}")
-            if self._graphs is None:
-                self._build_graphs()
-            flat, cum = self._csr[name]
+            flat, cum = self.csr(name)
             f = _FactorizedMultiField(flat[1::2], cum, self._tok_offsets, self.label_vocab.labels)
             self._multi_fields[name] = f
         return f
@@ -146,32 +171,25 @@ class SentenceBatch:
         if pred is not None:
             return pred
         vocab = f.vocab
+        value = query_value(field_name, matcher)
         if isinstance(matcher, ast.StringMatcher):
-            if field_name == self.default_field or field_name == "norm_alt":
-                term = normalize_unicode_aggressively(matcher.string)
-            else:
-                term = normalize_unicode(matcher.string)
             if fuzzy:
                 pred = np.fromiter(
-                    (_edit_distance_le2(term, v) for v in vocab), dtype=bool, count=len(vocab)
+                    (_edit_distance_le2(value, v) for v in vocab), dtype=bool, count=len(vocab)
                 )
             else:
-                pred = np.fromiter((v == term for v in vocab), dtype=bool, count=len(vocab))
-        elif isinstance(matcher, ast.RegexMatcher):
-            import re
-
-            rx = re.compile(normalize_unicode(matcher.pattern))
+                pred = np.fromiter((v == value for v in vocab), dtype=bool, count=len(vocab))
+        else:
+            rx = re.compile(value)
             pred = np.fromiter(
                 (rx.fullmatch(v) is not None for v in vocab), dtype=bool, count=len(vocab)
             )
-        else:
-            raise TypeError(f"unknown matcher {matcher!r}")
         f.pred_cache[key] = pred
         return pred
 
     def leaf_mask(self, sent_idx: int, field_name: str, matcher, fuzzy: bool = False) -> np.ndarray:
         out = self._leaf_mask_one(sent_idx, field_name, matcher, fuzzy)
-        if field_name == self.default_field:
+        if field_name == DEFAULT_TOKEN_FIELD:
             # synonym union (reference OdinsonIndexWriter.scala:174-182): the
             # default field matches the normalized WORD variant (norm) OR the
             # normalized RAW variant (norm_alt, stored only where different)
@@ -200,14 +218,29 @@ class SentenceBatch:
             return np.zeros(b - a, dtype=bool)
         return pred[f.codes[a:b]]
 
-    # -- graphs ----------------------------------------------------------
+    # -- graph -----------------------------------------------------------
 
-    def graph(self, sent_idx: int) -> Optional[Digraph]:
-        if self._graphs is None:
-            self._build_graphs()
-        return self._graphs[sent_idx]
+    def csr(self, direction: str) -> Tuple[np.ndarray, np.ndarray]:
+        """``(flat, cum)`` of the batch CSR for ``"incoming"`` or
+        ``"outgoing"``: ``flat`` interleaves (neighbor, label id) pairs,
+        and global token position ``p``'s edges are pairs
+        ``cum[p]:cum[p + 1]`` of it."""
+        if self.label_vocab is None:
+            self._build_graph()
+        return self._csr[direction]
 
-    def _build_graphs(self):
+    def adjacency(self, direction: str) -> Tuple[list, list]:
+        """:meth:`csr` as Python lists, built once per batch: ``flat`` and
+        ``slices`` with ``slices[p] = 2 * cum[p]``. Adjacency segments are
+        1-3 edges, where list indexing beats numpy slicing ~5× (the
+        traversal inner loop is step-at-a-time, not vectorizable)."""
+        lists = self._adjacency.get(direction)
+        if lists is None:
+            flat, cum = self.csr(direction)
+            lists = self._adjacency[direction] = (flat.tolist(), (2 * cum).tolist())
+        return lists
+
+    def _build_graph(self):
         # flatten all edges across the batch once (labels interned against
         # one batch vocabulary)
         src_col, dst_col, lab_col = self._edges or ((None,) * self.n_sentences,) * 3
@@ -230,22 +263,17 @@ class SentenceBatch:
         # one fully-vectorized CSR pass over the WHOLE batch (no per-sentence
         # argsort/bincount/cumsum — those small-array numpy calls were the
         # matcher's top profile cost at 3 ops × 2 directions × sentence):
-        # sorting by (global token position of the CSR key) groups edges by
-        # sentence AND sorts within each sentence, so every per-sentence CSR
-        # is a zero-copy view into the two global sorted arrays.
-        nt = np.asarray(self.num_tokens, dtype=np.int64)
+        # sorting by the global token position of the CSR key groups edges
+        # by sentence AND sorts them within each sentence. Edges with an
+        # endpoint outside their sentence are dropped.
         sent_of_edge = np.repeat(np.arange(self.n_sentences), counts)
-        edge_nt = nt[sent_of_edge]
+        edge_nt = np.asarray(self.num_tokens, dtype=np.int64)[sent_of_edge]
         valid = (src_arr >= 0) & (src_arr < edge_nt) & (dst_arr >= 0) & (dst_arr < edge_nt)
         if not valid.all():
             src_arr, dst_arr, codes = src_arr[valid], dst_arr[valid], codes[valid]
             sent_of_edge = sent_of_edge[valid]
-            counts = np.bincount(sent_of_edge, minlength=self.n_sentences)
-        offsets = np.zeros(self.n_sentences + 1, dtype=np.int64)
-        np.cumsum(counts, out=offsets[1:])
-        bases = self._tok_offsets
-        total_pos = int(bases[-1])
-        edge_base = bases[sent_of_edge]
+        edge_base = self._tok_offsets[sent_of_edge]
+        total_pos = int(self._tok_offsets[-1])
 
         def global_csr(key_local, other_local):
             key = edge_base + key_local
@@ -253,36 +281,15 @@ class SentenceBatch:
             flat = np.empty(2 * len(key), dtype=np.int32)
             flat[0::2] = other_local[order]
             flat[1::2] = codes[order]
-            # cum[p] = #edges with global key position < p; per-sentence
-            # slices are cum over that sentence's position range, rebased
+            # cum[p] = #edges with global key position < p
             cum = np.zeros(total_pos + 1, dtype=np.int64)
             np.cumsum(np.bincount(key, minlength=total_pos), out=cum[1:])
             return flat, cum
 
-        out_flat, out_cum = global_csr(src_arr, dst_arr)
-        in_flat, in_cum = global_csr(dst_arr, src_arr)
-        self._csr = {"incoming": (in_flat, in_cum), "outgoing": (out_flat, out_cum)}
-
-        graphs: List[Optional[Digraph]] = []
-        for i in range(self.n_sentences):
-            a, b = int(offsets[i]), int(offsets[i + 1])
-            if a == b:
-                graphs.append(None)
-                continue
-            p0, p1 = int(bases[i]), int(bases[i + 1])
-            out_slices = 2 * (out_cum[p0 : p1 + 1] - a)
-            in_slices = 2 * (in_cum[p0 : p1 + 1] - a)
-            graphs.append(
-                Digraph(
-                    in_flat[2 * a : 2 * b],
-                    in_slices,
-                    out_flat[2 * a : 2 * b],
-                    out_slices,
-                    (),
-                    int(nt[i]),
-                )
-            )
-        self._graphs = graphs
+        self._csr = {
+            "incoming": global_csr(dst_arr, src_arr),
+            "outgoing": global_csr(src_arr, dst_arr),
+        }
 
     # -- per-sentence contexts --------------------------------------------
 
@@ -315,29 +322,20 @@ def _edit_distance_le2(a: str, b: str) -> bool:
 
 
 class SentenceContext:
-    __slots__ = ("batch", "idx", "n", "mask_cache", "node_cache", "_graph_loaded", "_graph")
+    __slots__ = ("batch", "idx", "n", "base", "mask_cache", "node_cache")
 
     def __init__(self, batch: SentenceBatch, idx: int):
         self.batch = batch
         self.idx = idx
         self.n = batch.num_tokens[idx]
+        self.base = int(batch._tok_offsets[idx])  # global position of token 0
         self.mask_cache: Dict[int, np.ndarray] = {}
-        self.node_cache: Dict[int, list] = {}
-        self._graph_loaded = False
-        self._graph = None
+        self.node_cache: Dict[int, object] = {}
 
-    @property
-    def graph(self) -> Optional[Digraph]:
-        if not self._graph_loaded:
-            self._graph = self.batch.graph(self.idx)
-            self._graph_loaded = True
-        return self._graph
-
-    @property
-    def label_vocab(self) -> LabelVocab:
-        if self.batch.label_vocab is None:
-            self.batch._build_graphs()
-        return self.batch.label_vocab
+    def has_edges(self) -> bool:
+        """Whether the sentence's CSR range holds an edge."""
+        cum = self.batch.csr("outgoing")[1]
+        return bool(cum[self.base + self.n] > cum[self.base])
 
     def mentions(self, label: str) -> List[StateMatch]:
         ms = self.batch._mentions

@@ -7,8 +7,9 @@ A program node exposes two evaluation modes:
   quantifiers, leftmost OR clause first, …). Backtracking happens for free
   through generator nesting.
 * ``all_matches(ctx)`` — all candidate matches of the whole sentence in
-  start-position order. Sentence-global nodes (graph traversals, expansion,
-  state mentions, events) override this and memoize per sentence.
+  start-position order. Sentence-level nodes (state mentions, graph
+  traversals, expansion, events) compute every match of the sentence at
+  once; :class:`PSentenceLevel` memoizes and indexes those per sentence.
 
 Together with :mod:`odinson_spark.match.selector` this reproduces the
 reference's spans-enumeration + MatchSelector semantics
@@ -27,7 +28,6 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from ..lang import ast
 from .context import SentenceContext
 from .graph import traverse
 from .matches import (
@@ -40,7 +40,6 @@ from .matches import (
     OptionalMatch,
     OrMatch,
     RepetitionMatch,
-    StateMatch,
 )
 
 _node_counter = itertools.count()
@@ -400,7 +399,39 @@ class PLookbehind(Prog):
             yield NGramMatch(start, start)
 
 
-class PMention(Prog):
+class PSentenceLevel(Prog):
+    """A node whose matches are computed for the whole sentence at once
+    (``_compute``). The results are cached per sentence, sorted by
+    (start, end) — a stable sort, so ties keep ``_compute``'s preference
+    order — and indexed by start: ``gen`` looks its start up, and
+    ``start_positions`` is exact."""
+
+    __slots__ = ()
+
+    def _compute(self, ctx: SentenceContext) -> List[BaseMatch]:
+        raise NotImplementedError
+
+    def _results(self, ctx) -> Tuple[List[BaseMatch], Dict[int, List[BaseMatch]]]:
+        cached = ctx.node_cache.get(self.uid)
+        if cached is None:
+            ms = sorted(self._compute(ctx), key=lambda m: (m.start, m.end))
+            by_start: Dict[int, List[BaseMatch]] = {}
+            for m in ms:
+                by_start.setdefault(m.start, []).append(m)
+            cached = ctx.node_cache[self.uid] = (ms, by_start)
+        return cached
+
+    def all_matches(self, ctx):
+        return list(self._results(ctx)[0])
+
+    def gen(self, ctx, start):
+        return iter(self._results(ctx)[1].get(start, ()))
+
+    def start_positions(self, ctx):
+        return list(self._results(ctx)[1])
+
+
+class PMention(PSentenceLevel):
     """``@Label`` — replay spans of previously-found mentions (the State)."""
 
     __slots__ = ("uid", "label")
@@ -409,17 +440,8 @@ class PMention(Prog):
         super().__init__()
         self.label = label
 
-    def all_matches(self, ctx):
-        cached = ctx.node_cache.get(self.uid)
-        if cached is None:
-            cached = sorted(ctx.mentions(self.label), key=lambda m: (m.start, m.end))
-            ctx.node_cache[self.uid] = cached
-        return list(cached)
-
-    def gen(self, ctx, start):
-        for m in self.all_matches(ctx):
-            if m.start == start:
-                yield m
+    def _compute(self, ctx):
+        return ctx.mentions(self.label)
 
 
 class PFilter(Prog):
@@ -491,21 +513,20 @@ class SingleStepFT(FullTraversalProg):
         self.surface = surface
 
     def run(self, ctx, src_matches):
-        if not src_matches:
+        # a sentence without edges matches no traversal, not even a 0-hop
+        # optional one (reference: no graph field, no traversal match)
+        if not src_matches or not ctx.has_edges():
             return []
-        graph = ctx.graph
-        if graph is None:
-            return []
+        batch, base, n = ctx.batch, ctx.base, ctx.n
         # fast path: width-1 wildcard destination (the shape every
         # `arg = >edge` promoted argument desugars to) — reached tokens ARE
         # the destinations, no inverted index needed
         if isinstance(self.surface, PAllNGrams) and self.surface.n == 1:
-            vocab = ctx.label_vocab
             out = []
             for src in src_matches:
                 tokens = list(range(src.start, src.end))
-                for t in traverse(self.traversal, graph, vocab, tokens):
-                    if 0 <= t < ctx.n:
+                for t in traverse(self.traversal, batch, base, n, tokens):
+                    if 0 <= t < n:
                         out.append(GraphTraversalMatch(src, NGramMatch(t, t + 1)))
             return out
         dst_matches = ctx.node_cache.get(self.uid)
@@ -515,20 +536,19 @@ class SingleStepFT(FullTraversalProg):
         if not dst_matches:
             return []
         # inverted index: token -> destination matches covering it
-        inv: List[Optional[List[BaseMatch]]] = [None] * ctx.n
+        inv: List[Optional[List[BaseMatch]]] = [None] * n
         for d in dst_matches:
             for j in range(d.start, d.end):
                 if inv[j] is None:
                     inv[j] = []
                 inv[j].append(d)
-        vocab = ctx.label_vocab
         out: List[BaseMatch] = []
         for src in src_matches:
             tokens = list(range(src.start, src.end))
-            dsts = traverse(self.traversal, graph, vocab, tokens)
+            dsts = traverse(self.traversal, batch, base, n, tokens)
             hit: List[BaseMatch] = []
             for t in dsts:
-                if 0 <= t < ctx.n and inv[t]:
+                if 0 <= t < n and inv[t]:
                     hit.extend(inv[t])
             for d in _dedup_matches(hit):
                 out.append(GraphTraversalMatch(src, d))
@@ -577,7 +597,7 @@ class RepeatFT(FullTraversalProg):
         return _dedup_matches(results)
 
 
-class PGraphTraversal(Prog):
+class PGraphTraversal(PSentenceLevel):
     """Top-level ``src >edge dst …`` pattern. Enumerates *all* candidate src
     matches, runs the full traversal, and exposes the resulting
     GraphTraversalMatches positionally (span = destination span)."""
@@ -589,25 +609,11 @@ class PGraphTraversal(Prog):
         self.src = src
         self.full_traversal = full_traversal
 
-    def _results(self, ctx) -> List[BaseMatch]:
-        cached = ctx.node_cache.get(self.uid)
-        if cached is None:
-            src_matches = self.src.all_matches(ctx)
-            results = self.full_traversal.run(ctx, src_matches)
-            cached = sorted(results, key=lambda m: (m.start, m.end))
-            ctx.node_cache[self.uid] = cached
-        return cached
-
-    def all_matches(self, ctx):
-        return list(self._results(ctx))
-
-    def gen(self, ctx, start):
-        for m in self._results(ctx):
-            if m.start == start:
-                yield m
+    def _compute(self, ctx):
+        return self.full_traversal.run(ctx, self.src.all_matches(ctx))
 
 
-class PExpand(Prog):
+class PExpand(PSentenceLevel):
     """``(?^ …)`` — group graph matches by their source and widen each group
     to [min(starts), max(ends)] (lucene/search/ExpandQuery.scala:125-145)."""
 
@@ -617,40 +623,20 @@ class PExpand(Prog):
         super().__init__()
         self.sub = sub
 
-    def _results(self, ctx) -> List[BaseMatch]:
-        cached = ctx.node_cache.get(self.uid)
-        if cached is not None:
-            return cached
-        all_matches = self.sub.all_matches(ctx)
-        graph_matches = [m for m in all_matches if isinstance(m, GraphTraversalMatch)]
-        other = [m for m in all_matches if not isinstance(m, GraphTraversalMatch)]
-        if graph_matches:
-            groups: Dict[int, List[GraphTraversalMatch]] = {}
-            srcs: Dict[int, BaseMatch] = {}
-            for m in graph_matches:
-                k = id(m.src)
-                srcs[k] = m.src
-                groups.setdefault(k, []).append(m)
-            expanded = []
-            for k, ms in groups.items():
-                group = [srcs[k]] + ms
-                s = min(g.start for g in group)
-                e = max(g.end for g in group)
-                expanded.append(NGramMatch(s, e))
-            result = expanded + other
-        else:
-            result = other
-        result.sort(key=lambda m: (m.start, m.end))
-        ctx.node_cache[self.uid] = result
-        return result
-
-    def all_matches(self, ctx):
-        return list(self._results(ctx))
-
-    def gen(self, ctx, start):
-        for m in self._results(ctx):
-            if m.start == start:
-                yield m
+    def _compute(self, ctx):
+        # source id -> [source, its graph matches…], in first-seen order
+        groups: Dict[int, List[BaseMatch]] = {}
+        other = []
+        for m in self.sub.all_matches(ctx):
+            if isinstance(m, GraphTraversalMatch):
+                groups.setdefault(id(m.src), [m.src]).append(m)
+            else:
+                other.append(m)
+        expanded = [
+            NGramMatch(min(g.start for g in group), max(g.end for g in group))
+            for group in groups.values()
+        ]
+        return expanded + other
 
 
 # ---------------------------------------------------------------------------
@@ -676,7 +662,7 @@ def _start_of_path(m: BaseMatch) -> BaseMatch:
     return m
 
 
-class PEvent(Prog):
+class PEvent(PSentenceLevel):
     """Trigger + argument traversals → EventSketch candidates
     (lucene/search/OdinsonEventQuery.scala:289-345)."""
 
@@ -697,10 +683,7 @@ class PEvent(Prog):
             out.setdefault(k, []).append((arg, m))
         return out
 
-    def _results(self, ctx) -> List[BaseMatch]:
-        cached = ctx.node_cache.get(self.uid)
-        if cached is not None:
-            return cached
+    def _compute(self, ctx):
         trigger_matches = self.trigger.all_matches(ctx)
         by_id = {id(t): t for t in trigger_matches}
         sketches: Dict[int, list] = {}
@@ -713,7 +696,6 @@ class PEvent(Prog):
                     k: sketches[k] + v for k, v in arg_matches.items() if k in sketches
                 }
             if not sketches:
-                ctx.node_cache[self.uid] = []
                 return []
         else:
             sketches = {id(t): [] for t in trigger_matches}
@@ -721,17 +703,4 @@ class PEvent(Prog):
             candidates = [by_id[k] for k in sketches]
             arg_matches = self._match_argument(ctx, candidates, arg)
             sketches = {k: v + arg_matches.get(k, []) for k, v in sketches.items()}
-        result = [
-            EventSketch(by_id[k], tuple(v)) for k, v in sketches.items()
-        ]
-        result.sort(key=lambda m: (m.start, m.end))
-        ctx.node_cache[self.uid] = result
-        return result
-
-    def all_matches(self, ctx):
-        return list(self._results(ctx))
-
-    def gen(self, ctx, start):
-        for m in self._results(ctx):
-            if m.start == start:
-                yield m
+        return [EventSketch(by_id[k], tuple(v)) for k, v in sketches.items()]

@@ -35,7 +35,7 @@ from ..match.context import SentenceBatch
 from ..match.extractor import BatchExtractor
 from ..plans.prefilter import pf_or, prefilter_of, to_spark_column
 from ..schema import (
-    GRAPH_COLUMNS,
+    EDGE_COLUMNS,
     MENTIONS_SCHEMA,
     SENTENCES_SCHEMA,
     TRIPLES_SCHEMA,
@@ -224,14 +224,14 @@ def batch_from_pandas(
     """Arrow batch → SentenceBatch with no per-row Python conversion: token
     layers stay as the numpy object arrays Arrow produced, and the edge
     columns (selected only when the grammar reads the graph) pass as they
-    are for _build_graphs to concatenate."""
+    are for SentenceBatch to build its graph from."""
     layers = {}
     for name in (*_LAYER_NAMES, *extra_token_fields):
         if name in pdf.columns and name not in layers:
             layers[name] = pdf[name].to_numpy()
     edges = None
     if "deps_src" in pdf.columns:
-        edges = tuple(pdf[c].to_numpy() for c in ("deps_src", "deps_dst", "deps_label"))
+        edges = tuple(pdf[c].to_numpy() for c in EDGE_COLUMNS)
     batch = SentenceBatch(layers=layers, num_tokens=pdf["num_tokens"].to_numpy(), edges=edges)
     return batch, list(pdf["doc_id"]), pdf["sent_id"].to_numpy().tolist()
 
@@ -310,7 +310,7 @@ def required_columns(
     if "norm" in cols and "norm_alt" not in cols:
         cols.append("norm_alt")
     if needs_edges:
-        cols += GRAPH_COLUMNS
+        cols += EDGE_COLUMNS
     return cols
 
 

@@ -26,8 +26,8 @@ from dataclasses import dataclass
 from typing import List, Tuple
 
 from ..lang import ast
-from ..lang.normalize import normalize_unicode, normalize_unicode_aggressively
 from ..match import program as prog
+from ..match.context import query_value
 
 
 # --- predicate tree --------------------------------------------------------
@@ -64,9 +64,8 @@ class PFMultiTerm:
     (lucene/search/MultiTermQuery rewrite; reference queries compile to
     RegexpQuery/FuzzyQuery in compiler/QueryCompiler.scala).
 
-    ``value`` is already normalized exactly as the matcher normalizes it
-    (match/context.py _vocab_pred): fuzzy terms aggressively on the default
-    field, plain elsewhere; regex patterns with normalize_unicode.
+    ``value`` is the leaf's ``query_value`` (match/context.py), the string
+    the matcher itself compares with the stored values.
     """
 
     field: str
@@ -151,27 +150,20 @@ def pf_or(subs) -> object:
 # --- analysis ---------------------------------------------------------------
 
 
-def _mask_pf(expr, default_field: str) -> object:
+def _mask_pf(expr) -> object:
     if isinstance(expr, prog.LeafMask):
+        value = query_value(expr.field, expr.matcher)
         if isinstance(expr.matcher, ast.RegexMatcher):
             # the matcher ignores the fuzzy flag on regex leaves
             # (match/context.py _vocab_pred), so a single node suffices
-            return PFMultiTerm(
-                expr.field, "regex", normalize_unicode(expr.matcher.pattern)
-            )
-        if not isinstance(expr.matcher, ast.StringMatcher):
-            return PFTrue()
-        if expr.field == default_field:
-            term = normalize_unicode_aggressively(expr.matcher.string)
-        else:
-            term = normalize_unicode(expr.matcher.string)
+            return PFMultiTerm(expr.field, "regex", value)
         if expr.fuzzy:
-            return PFMultiTerm(expr.field, "fuzzy", term)
-        return PFTerm(expr.field, term)
+            return PFMultiTerm(expr.field, "fuzzy", value)
+        return PFTerm(expr.field, value)
     if isinstance(expr, prog.AndMask):
-        return pf_and([_mask_pf(s, default_field) for s in expr.subs])
+        return pf_and([_mask_pf(s) for s in expr.subs])
     if isinstance(expr, prog.OrMask):
-        return pf_or([_mask_pf(s, default_field) for s in expr.subs])
+        return pf_or([_mask_pf(s) for s in expr.subs])
     if isinstance(expr, prog.FalseMask):
         return PFFalse()
     # NotMask / TrueMask — unconstrained
@@ -182,7 +174,7 @@ def _traversal_pf(tr) -> object:
     t = type(tr)
     if t is ast.OutgoingTraversal or t is ast.IncomingTraversal:
         if isinstance(tr.matcher, ast.StringMatcher):
-            return PFEdge(normalize_unicode(tr.matcher.string))
+            return PFEdge(tr.matcher.string)  # labels compare as stored
         return PFTrue()
     if t is ast.ConcatenatedTraversal:
         return pf_and([_traversal_pf(s) for s in tr.traversals])
@@ -217,7 +209,7 @@ def _prog_width(p) -> object:
     return None  # POptional, PExpand, PGraphTraversal, PAllNGrams, PEvent, …
 
 
-def _anchors_of(p, default_field: str, base: int):
+def _anchors_of(p, base: int):
     """(term_anchors, multi_anchors) of a KNOWN-width fragment: literal
     (offset, field, value) triples plus (offset, PFMultiTerm) pairs for
     regex/fuzzy tokens (anchored through the dictionary expansion). Only
@@ -225,7 +217,7 @@ def _anchors_of(p, default_field: str, base: int):
     posted as the sentence's edge-label set in the index, positionless."""
     t = type(p)
     if t is prog.PToken:
-        m = _mask_pf(p.expr, default_field)
+        m = _mask_pf(p.expr)
         subs = m.subs if isinstance(m, PFAnd) else (m,)
         terms = [
             (base, s.field, s.value)
@@ -240,13 +232,13 @@ def _anchors_of(p, default_field: str, base: int):
         ]
         return terms, multis
     if t is prog.PNamedCapture:
-        return _anchors_of(p.sub, default_field, base)
+        return _anchors_of(p.sub, base)
     if t is prog.PConcat:
         terms: List[Tuple[int, str, str]] = []
         multis: list = []
         off = base
         for c in p.clauses:
-            ts, ms = _anchors_of(c, default_field, off)
+            ts, ms = _anchors_of(c, off)
             terms.extend(ts)
             multis.extend(ms)
             off += _prog_width(c)  # parent guaranteed width is known
@@ -254,7 +246,7 @@ def _anchors_of(p, default_field: str, base: int):
     return [], []
 
 
-def _phrases_of(clauses, default_field: str) -> List[PFPhrase]:
+def _phrases_of(clauses) -> List[PFPhrase]:
     """Maximal fixed-width runs of a concatenation → PFPhrase nodes.
     A variable-width clause (quantifier, optional, expansion…) breaks the
     run; anchors on either side of a KNOWN-width gap (wildcards, exact
@@ -277,7 +269,7 @@ def _phrases_of(clauses, default_field: str) -> List[PFPhrase]:
             _flush()
             off = 0
             continue
-        ts, ms = _anchors_of(c, default_field, off)
+        ts, ms = _anchors_of(c, off)
         run.extend(ts)
         run_multi.extend(ms)
         off += w
@@ -285,55 +277,46 @@ def _phrases_of(clauses, default_field: str) -> List[PFPhrase]:
     return phrases
 
 
-def _ft_pf(ft, default_field: str) -> object:
+def _ft_pf(ft) -> object:
     if isinstance(ft, prog.SingleStepFT):
-        return pf_and(
-            [_traversal_pf(ft.traversal), prefilter_of(ft.surface, default_field)]
-        )
+        return pf_and([_traversal_pf(ft.traversal), prefilter_of(ft.surface)])
     if isinstance(ft, prog.ConcatFT):
-        return pf_and([_ft_pf(c, default_field) for c in ft.clauses])
+        return pf_and([_ft_pf(c) for c in ft.clauses])
     if isinstance(ft, prog.RepeatFT):
         if ft.min > 0:
-            return _ft_pf(ft.sub, default_field)
+            return _ft_pf(ft.sub)
         return PFTrue()
     return PFTrue()
 
 
-def prefilter_of(p: prog.Prog, default_field: str = "norm") -> object:
+def prefilter_of(p: prog.Prog) -> object:
     t = type(p)
     if t is prog.PToken:
-        return _mask_pf(p.expr, default_field)
+        return _mask_pf(p.expr)
     if t is prog.PFail:
         return PFFalse()
     if t is prog.PConcat:
-        return pf_and(
-            [prefilter_of(c, default_field) for c in p.clauses]
-            + _phrases_of(p.clauses, default_field)
-        )
+        return pf_and([prefilter_of(c) for c in p.clauses] + _phrases_of(p.clauses))
     if t is prog.POr:
-        return pf_or([prefilter_of(c, default_field) for c in p.clauses])
+        return pf_or([prefilter_of(c) for c in p.clauses])
     if t is prog.PRepeat:
-        return prefilter_of(p.sub, default_field)  # min >= 1 by construction
+        return prefilter_of(p.sub)  # min >= 1 by construction
     if t is prog.POptional:
         return PFTrue()
     if t is prog.PNamedCapture:
-        return prefilter_of(p.sub, default_field)
+        return prefilter_of(p.sub)
     if t is prog.PLookahead or t is prog.PLookbehind:
-        return prefilter_of(p.sub, default_field) if p.positive else PFTrue()
+        return prefilter_of(p.sub) if p.positive else PFTrue()
     if t is prog.PFilter:
-        return pf_and(
-            [prefilter_of(p.main, default_field), prefilter_of(p.filter, default_field)]
-        )
+        return pf_and([prefilter_of(p.main), prefilter_of(p.filter)])
     if t is prog.PExpand:
-        return prefilter_of(p.sub, default_field)
+        return prefilter_of(p.sub)
     if t is prog.PGraphTraversal:
-        return pf_and(
-            [prefilter_of(p.src, default_field), _ft_pf(p.full_traversal, default_field)]
-        )
+        return pf_and([prefilter_of(p.src), _ft_pf(p.full_traversal)])
     if t is prog.PEvent:
-        parts = [prefilter_of(p.trigger, default_field)]
+        parts = [prefilter_of(p.trigger)]
         for arg in p.required:
-            parts.append(_ft_pf(arg.full_traversal, default_field))
+            parts.append(_ft_pf(arg.full_traversal))
         return pf_and(parts)
     # PAllNGrams, PMention, PSentenceStart/End — unconstrained
     return PFTrue()

@@ -3,11 +3,14 @@
 The annotated-sentence table is the Spark analogue of the reference's Lucene
 index (one row per sentence, token layers as position-aligned arrays,
 dependency graph as parallel edge arrays — OdinsonIndexWriter.scala:113-205).
-The graph columns are the one sentence-graph format from annotator to
-matcher: ``SentenceBatch`` builds the CSR from them and derives the
-per-token ``incoming``/``outgoing`` labels there, and traversal prefilters
-push into the scan as ``array_contains(deps_label, l)`` (the analogue of the
-reference's traversal anchor pushdown, QueryCompiler.scala:544-615).
+The edge columns (``EDGE_COLUMNS``) are the one sentence-graph format from
+annotator to matcher: ``SentenceBatch`` builds one CSR per direction for the
+whole Arrow batch from them; traversals walk it, and the per-token
+``incoming``/``outgoing`` labels are views of it. Labels are compared
+exactly as stored. Traversal prefilters push into the scan as
+``array_contains(deps_label, l)`` (the analogue of the reference's traversal
+anchor pushdown, QueryCompiler.scala:544-615). ``deps_roots`` is stored for
+parity with the reference's ``GraphField``; no matcher reads it.
 """
 
 from __future__ import annotations
@@ -56,7 +59,7 @@ SENTENCES_SCHEMA = StructType(
         StructField("tag", _AS),
         StructField("chunk", _AS),
         StructField("entity", _AS),
-        # dependency graph: parallel edge arrays (CSR built batch-side)
+        # dependency graph: parallel edge arrays (the CSR is built per batch)
         StructField("deps_src", _AI),
         StructField("deps_dst", _AI),
         StructField("deps_label", _AS),
@@ -65,7 +68,8 @@ SENTENCES_SCHEMA = StructType(
 )
 
 
-GRAPH_COLUMNS = ("deps_src", "deps_dst", "deps_label", "deps_roots")
+EDGE_COLUMNS = ("deps_src", "deps_dst", "deps_label")
+GRAPH_COLUMNS = (*EDGE_COLUMNS, "deps_roots")
 
 
 def graph_columns(edges, roots=()) -> dict:

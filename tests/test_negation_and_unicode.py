@@ -96,3 +96,41 @@ def test_aggressive_replaces_characters():
     s2 = '"Herr Voss: - 1/2 cup of OEtker(TM) caffe latte - bowl of acai."'
     assert normalize_unicode(s1) != normalize_unicode(s2)
     assert normalize_unicode_aggressively(s1) == normalize_unicode_aggressively(s2)
+
+
+# --- edge labels compare exactly as stored -------------------------------------
+
+FULLWIDTH_NSUBJ = "ｎｓｕｂｊ"  # NFKC folds it to "nsubj"
+
+
+@pytest.mark.parametrize(
+    "pattern,expected",
+    [
+        # a traversal, [incoming=]/[outgoing=] and label regexes all find
+        # the fullwidth label only where it is stored in that form
+        (f"[raw=b] >{FULLWIDTH_NSUBJ} [raw=a]", [[(0, 1)], [], []]),
+        (f"[incoming={FULLWIDTH_NSUBJ}]", [[(0, 1)], [], []]),
+        (f"[outgoing={FULLWIDTH_NSUBJ}]", [[(1, 2)], [], []]),
+        (f"[incoming=/{FULLWIDTH_NSUBJ}/]", [[(0, 1)], [], []]),
+        # and the ASCII label only where that is stored
+        ("[raw=b] >nsubj [raw=a]", [[], [], [(0, 1)]]),
+        ("[incoming=nsubj]", [[], [], [(0, 1)]]),
+        ("[outgoing=/nsubj/]", [[], [], [(1, 2)]]),
+    ],
+)
+def test_edge_labels_compare_as_stored(pattern, expected):
+    from odinson_spark.testing import sentence_batch_from_docs
+
+    batch = sentence_batch_from_docs(
+        [
+            {"raw": ["a", "b"], "edges": [(1, 0, FULLWIDTH_NSUBJ)]},
+            {"raw": ["c"]},
+            {"raw": ["a", "b"], "edges": [(1, 0, "nsubj")]},
+        ]
+    )
+    program = PatternCompiler().compile(pattern)
+    got = [
+        [(m.start, m.end) for m in find_matches(program, batch.context(i))]
+        for i in range(batch.n_sentences)
+    ]
+    assert got == expected

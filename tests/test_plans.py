@@ -78,6 +78,9 @@ def test_column_pruning_for_matcher():
     assert "chunk" not in cols and "entity" not in cols and "lemma" not in cols
     # no graph operators -> no deps columns
     assert not any(c.startswith("deps_") for c in cols)
+    # a traversal ships the edge arrays the matcher reads, and not the roots
+    cols = required_columns(_grammar("[word=cats] >nsubj [tag=NN]"))
+    assert [c for c in cols if c.startswith("deps_")] == ["deps_src", "deps_dst", "deps_label"]
 
 
 def test_text_prefilter_column_sql(spark):

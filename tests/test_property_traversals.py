@@ -110,44 +110,64 @@ def gen_traversal(rng, depth=0):
     return ("star", gen_traversal(rng, depth + 1))
 
 
-def gen_graph(rng):
-    # ≥1 edge: a sentence with NO graph yields no traversal matches at all
-    # (reference: missing dependencies field → no binary graph → the
-    # traversal query matches nothing, even 0-hop optionals); the property
-    # under test is traversal semantics over a present graph
-    n_edges = rng.randint(1, 10)
+def gen_graph(rng, n=N_TOKENS):
+    """1-10 distinct labeled edges between distinct tokens of [0, n)."""
+    n_edges = min(rng.randint(1, 10), n * (n - 1) * len(LABELS))
     edges = set()
     while len(edges) < n_edges:
-        s = rng.randrange(N_TOKENS)
-        d = rng.randrange(N_TOKENS)
+        s = rng.randrange(n)
+        d = rng.randrange(n)
         if s != d:
             edges.add((s, d, rng.choice(LABELS)))
     return sorted(edges)
 
 
+def gen_batch(rng):
+    """2-4 sentences of random lengths: random graphs, now and then an
+    edgeless sentence, and edges with an endpoint outside their sentence
+    (which the batch CSR drops)."""
+    out = []
+    for _ in range(rng.randint(2, 4)):
+        n = rng.randint(2, N_TOKENS)
+        edges = [] if rng.random() < 0.2 else gen_graph(rng, n)
+        if rng.random() < 0.3:
+            ends = [rng.choice([-1, n]), rng.randrange(n)]
+            rng.shuffle(ends)
+            edges.append((*ends, rng.choice(LABELS)))
+        out.append((n, edges))
+    return out
+
+
 def test_random_traversals_match_brute_force():
+    """Each case is one batch of several sentences, so every sentence's
+    traversal runs at its own token base in the batch CSR."""
     rng = random.Random(20260816)
     compiler = PatternCompiler()
-    tokens = [f"t{i}" for i in range(N_TOKENS)]
     checked = 0
     for case in range(300):
-        edges = gen_graph(rng)
+        sentences = gen_batch(rng)
         trav = gen_traversal(rng)
         src_tok = rng.randrange(N_TOKENS)
         pattern = f"[raw=t{src_tok}] {render(trav)} []"
         batch = sentence_batch_from_docs(
-            [{"raw": tokens, "edges": list(edges)}], build_inout=False
+            [{"raw": [f"t{i}" for i in range(n)], "edges": edges} for n, edges in sentences]
         )
         program = compiler.compile(pattern)
-        # engine matches land ON the destination token (span length 1)
-        got_dsts = {m.start for m in find_matches(program, batch.context(0))}
-        want = interp(trav, {src_tok}, edges)
-        assert got_dsts == want, (
-            f"case {case}: pattern={pattern!r} edges={edges} "
-            f"got={sorted(got_dsts)} want={sorted(want)}"
-        )
-        checked += 1
-    assert checked == 300
+        for i, (n, edges) in enumerate(sentences):
+            # ≥1 in-range edge: a sentence with NO graph yields no traversal
+            # matches at all (reference: missing dependencies field → no
+            # binary graph → the traversal query matches nothing, even 0-hop
+            # optionals)
+            graph = [(s, d, lab) for s, d, lab in edges if 0 <= s < n and 0 <= d < n]
+            want = interp(trav, {src_tok}, graph) if graph and src_tok < n else set()
+            # engine matches land ON the destination token (span length 1)
+            got_dsts = {m.start for m in find_matches(program, batch.context(i))}
+            assert got_dsts == want, (
+                f"case {case} sentence {i}: pattern={pattern!r} edges={edges} "
+                f"got={sorted(got_dsts)} want={sorted(want)}"
+            )
+            checked += 1
+    assert checked >= 600
 
 
 # ---------------------------------------------------------------------------

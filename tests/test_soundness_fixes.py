@@ -77,6 +77,69 @@ def test_inout_token_constraint_prefilter(spark):
     assert sorted((r.doc_id, r.start) for r in m) == [("1", 1), ("1", 2)]
 
 
+# --- edge labels compare exactly as stored, on every route -------------------
+
+
+FULLWIDTH_NSUBJ = "ｎｓｕｂｊ"  # NFKC folds it to "nsubj"
+
+
+@pytest.fixture(scope="module")
+def fullwidth_label_sentences(spark, tmp_path_factory):
+    """One sentence ``a b`` whose graph stores the edge 1→0 with a
+    fullwidth label."""
+    import json
+
+    from odinson_spark.sources.document_json import read_document_json
+
+    doc = {
+        "id": "d1",
+        "sentences": [
+            {
+                "numTokens": 2,
+                "fields": [
+                    {"$type": "ai.lum.odinson.TokensField", "name": "raw", "tokens": ["a", "b"]},
+                    {
+                        "$type": "ai.lum.odinson.GraphField",
+                        "name": "dependencies",
+                        "edges": [[1, 0, FULLWIDTH_NSUBJ]],
+                        "roots": [1],
+                    },
+                ],
+            }
+        ],
+    }
+    d = tmp_path_factory.mktemp("fullwidth")
+    (d / "docs.jsonl").write_text(json.dumps(doc) + "\n")
+    return read_document_json(spark, str(d / "docs.jsonl")), str(d / "index")
+
+
+@pytest.mark.parametrize("route", ["scan", "index"])
+def test_edge_labels_compare_as_stored(fullwidth_label_sentences, route):
+    """The scan prefilter and the index postings compare a stored label
+    exactly as the matcher does; normalizing the query side drops the
+    sentence on either route."""
+    from odinson_spark.index import TermIndex
+    from odinson_spark.search import SearchEngine
+
+    sents, index_path = fullwidth_label_sentences
+    if route == "scan":
+        engine = SearchEngine(sents)
+    else:
+        engine = TermIndex.build(sents, index_path).engine(max_candidate_frac=1.0)
+    cases = {
+        f"[raw=b] >{FULLWIDTH_NSUBJ} [raw=a]": [0],
+        f"[incoming={FULLWIDTH_NSUBJ}]": [0],
+        f"[outgoing={FULLWIDTH_NSUBJ}]": [1],
+        "[raw=b] >nsubj [raw=a]": [],
+        "[incoming=nsubj]": [],
+    }
+    for pattern, starts in cases.items():
+        if route == "index":
+            assert engine.explain(pattern)["route"] == "index", pattern
+        got = sorted(r.start for r in engine.mentions(pattern).select("start").collect())
+        assert got == starts, pattern
+
+
 # --- norm synonym union (raw + word variants at the same position) -----------
 
 
